@@ -233,7 +233,6 @@ def query_mix(run: Run) -> Result:
                 "queries.build_jobs": build.counts["jobs"],
                 "queries.collect_s": collect.duration,
                 **{f"queries.{k}": build.counts[k] + collect.counts[k] for k in ("jobs", "stages", "tasks")},
-                "failed_tasks": build.counts["failed_tasks"] + collect.counts["failed_tasks"],
             }
             pinned_max = max(pinned_max, jsc.getPersistentRDDs().size())
         return Op(latency, 1, True, traced, kind=name, layers=layers)
