@@ -3,8 +3,10 @@ outputs are right.
 
 Ingestion: the published table holds exactly the seed rows plus the
 distinct new keys, every re-sent key kept its existing row, no
-plaintext secret column exists, and a sample of rows verifies against
-the input (password hash, Fernet round trip, blind index).
+plaintext secret column exists, and every row the run inserted or
+re-sent, plus a few of the rows the table started with, verifies
+against its original payload (password hash, Fernet round trip, blind
+index).
 
 Queries: every result equals its DuckDB oracle on the same parquet
 files, compared order-insensitively after rendering values as strings.
@@ -29,18 +31,25 @@ from data_ingestion_project_spark.schemas import SECURE_COLUMNS
 
 # payload fields that must never reach the table in plaintext
 PLAINTEXT = ("login.password", "password", "email", "phone", "location.street.name", "street")
-SAMPLE = 24
+# rows the run wrote or re-sent are all checked up to this many (a cron
+# run touches about 250); rows the table started with are sampled
+TOUCHED_MAX = 500
+UNTOUCHED_SAMPLE = 8
 
 
 def table_problems(
     table: pd.DataFrame,
     expected: dict[str, dict[str, Any]],
     resent_keys: set[str],
+    inserted_keys: set[str],
     keys: CryptoKeys,
     rng: random.Random,
 ) -> list[str]:
     """Problems with a published users table, given ``expected``: the
-    original payload of every key the table must hold, by key."""
+    original payload of every key the table must hold, by key.
+    ``inserted_keys`` and ``resent_keys`` are the keys this run inserted
+    and re-sent; each of their rows must match the original payload in
+    every checked column, secrets included."""
     problems = []
     leaked = [c for c in table.columns if c in PLAINTEXT]
     if leaked:
@@ -60,8 +69,12 @@ def table_problems(
     overwritten = resent[resent["name.first"] != resent["login.uuid"].map(lambda k: expected[k]["name"]["first"])]
     if len(overwritten):
         problems.append(f"{len(overwritten)} re-sent keys overwrote their existing row")
-    present = sorted(expected.keys() & set(keyed.index))
-    for key in rng.sample(present, min(SAMPLE, len(present))):
+    present = expected.keys() & set(keyed.index)
+    touched = sorted((inserted_keys | resent_keys) & present)
+    untouched = sorted(present - set(touched))
+    sample = rng.sample(touched, min(TOUCHED_MAX, len(touched)))
+    sample += rng.sample(untouched, min(UNTOUCHED_SAMPLE, len(untouched)))
+    for key in sample:
         problems += row_problems(keyed.loc[key], expected[key], keys)
     return problems
 

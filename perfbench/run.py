@@ -108,6 +108,10 @@ def main(argv: list[str] | None = None) -> int:
     if args.trace:
         metrics = workloads.summarize(res)
         metrics["process.peak_rss_mb"] = peak_rss
+        extra = metrics["trace.extra_jobs"]
+        if metrics["job.jobs"] and extra != workloads.TRACED_EXTRA_JOBS:
+            print(f"# TRACE MISMATCH: the traced layers launch {extra:+g} jobs beyond run_ingestion_job's, "
+                  f"not {workloads.TRACED_EXTRA_JOBS:+d}; the per-layer ingestion figures no longer follow the program")
         traces = os.path.join(env.WORK, "traces")
         os.makedirs(traces, exist_ok=True)
         res.tracer.write(os.path.join(traces, f"{run_id}.json"))

@@ -50,6 +50,46 @@ def job_counts(sc, group: str) -> dict[str, int]:
     return {"jobs": len(jobs), "stages": ran, "tasks": tasks, "failed_tasks": failed}
 
 
+def _items(seq):
+    """Iterate a Scala ``Seq`` or ``Iterable`` reached through py4j."""
+    it = seq.iterator()
+    while it.hasNext():
+        yield it.next()
+
+
+def next_sql_execution(spark) -> int:
+    """The id the next SQL execution of this session's JVM will get, at
+    most: one past the highest id in the SQL status store."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    return 1 + max((e.executionId() for e in _items(store.executionsList())), default=-1)
+
+
+def python_udf_rows(spark, first: int) -> int:
+    """Rows that came out of Python UDF nodes (``ArrowEvalPython``,
+    ``BatchEvalPython``) in the SQL executions from id ``first`` on: per
+    execution the most any such node emitted, summed over executions, so
+    a recomputed UDF counts again and a cached one does not. Read from
+    the SQL status store once the listener bus has drained."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    total = 0
+    for execution in _items(store.executionsList()):
+        eid = execution.executionId()
+        if eid < first:
+            continue
+        values = store.executionMetrics(eid)
+        rows = [0]
+        for node in _items(store.planGraph(eid).allNodes()):
+            if not node.name().endswith("EvalPython"):
+                continue
+            for metric in _items(node.metrics()):
+                value = values.get(metric.accumulatorId())
+                if metric.name() == "number of output rows" and value.isDefined():
+                    rows.append(int(value.get().replace(",", "")))
+        total += max(rows)
+    return total
+
+
 class Tracer:
     """Collects spans for one run. ``sc`` is the SparkContext whose jobs
     are attributed; pass ``None`` to record timings only."""

@@ -2,10 +2,11 @@
 end-to-end metric, the median and the interquartile distance as a share
 of the median, plus each run's wall time.
 
-    python3 perfbench/spread.py [--runs 10] [--seconds 10] [--first-seed 1] [workload ...]
+    python3 perfbench/spread.py [--runs 10] [--first-seed 1]
 
-Seeds ``first-seed .. first-seed + runs - 1`` are used in turn. This is
-the steadiness check the bounds in BENCHMARK.json are set against.
+The workloads and the run length are the ones ``BENCHMARK.json`` lists,
+so the spread is checked at the length the bounds were set for. Seeds
+``first-seed .. first-seed + runs - 1`` are used in turn.
 """
 
 from __future__ import annotations
@@ -24,21 +25,20 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 
 def main() -> int:
     p = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    p.add_argument("workloads", nargs="*", default=["ingest_cron", "ingest_backfill", "query_mix"])
     p.add_argument("--runs", type=int, default=10)
-    p.add_argument("--seconds", type=int, default=10)
     p.add_argument("--first-seed", type=int, default=1)
     args = p.parse_args()
     with open(os.path.join(os.path.dirname(HERE), "BENCHMARK.json")) as f:
-        bounds = {m["name"]: m["bound"] for m in json.load(f)["end_to_end"]}
-    for workload in args.workloads:
+        bench = json.load(f)
+    bounds = {m["name"]: m["bound"] for m in bench["end_to_end"]}
+    for workload in (w["name"] for w in bench["workloads"]):
         values: dict[str, list[float]] = {}
         walls = []
         for seed in range(args.first_seed, args.first_seed + args.runs):
             t0 = time.perf_counter()
             proc = subprocess.run(
                 [sys.executable, os.path.join(HERE, "run.py"), "--workload", workload, "--seed", str(seed),
-                 "--seconds", str(args.seconds), "--trace", "0"],
+                 "--seconds", str(bench["run_seconds"]), "--trace", "0"],
                 capture_output=True, text=True, check=True,
             )
             walls.append(time.perf_counter() - t0)

@@ -113,17 +113,22 @@ def _secure_table(people, keys):
     return pd.DataFrame(rows, columns=list(SECURE_COLUMNS))
 
 
+# the first 40 users are the table's seed rows, the last 4 this run's inserts
+SEEDED, INSERTED = 40, 4
+
+
 @pytest.fixture()
 def ingested():
     keys = users.crypto_keys(0)
-    people = [users.make_user("check", i) for i in range(12)]
+    people = [users.make_user("check", i) for i in range(SEEDED + INSERTED)]
     expected = {u["login"]["uuid"]: u for u in people}
     resent = {people[0]["login"]["uuid"], people[1]["login"]["uuid"]}
     return _secure_table(people, keys), expected, resent, keys
 
 
 def _problems(table, expected, resent, keys):
-    return checks.table_problems(table, expected, resent, keys, random.Random(0))
+    inserted = set(list(expected)[SEEDED:])
+    return checks.table_problems(table, expected, resent, inserted, keys, random.Random(0))
 
 
 def test_table_check_passes_a_correct_table(ingested):
@@ -150,6 +155,22 @@ def test_table_check_catches_bad_crypto(ingested):
     table, expected, resent, keys = ingested
     table["email_bidx"] = table["email_bidx"].str[::-1]
     assert any("email_bidx" in p for p in _problems(table, expected, resent, keys))
+
+
+def test_table_check_catches_bad_ciphertext_on_one_inserted_row(ingested):
+    table, expected, resent, keys = ingested
+    assert SEEDED > checks.UNTOUCHED_SAMPLE  # the seed rows alone are only sampled
+    last = list(expected)[-1]
+    wrong = encrypt_str("someone-else@example.com", keys)
+    table.loc[table["login.uuid"] == last, "email_enc"] = wrong
+    assert _problems(table, expected, resent, keys) == [f"{last}: email_enc does not decrypt to the input"]
+
+
+def test_table_check_catches_a_resent_row_with_a_replaced_secret(ingested):
+    table, expected, resent, keys = ingested
+    key = sorted(resent)[0]
+    table.loc[table["login.uuid"] == key, "password_hash"] = hash_password("resent-password", keys)
+    assert any(p == f"{key}: password hash does not verify" for p in _problems(table, expected, resent, keys))
 
 
 def test_query_check_catches_one_wrong_value():
@@ -186,3 +207,21 @@ def test_smoke_run_prints_every_metric(workload):
     want = {m["name"]: m["unit"] for m in BENCHMARK["end_to_end"]}
     assert {k: v["unit"] for k, v in out["metrics"].items()} == want
     assert all(v["value"] > 0 for v in out["metrics"].values())
+
+
+def test_traced_cron_run_holds_the_layers_against_the_program():
+    proc = subprocess.run(
+        [sys.executable, os.path.join(HERE, "run.py"), "--workload", "ingest_cron", "--seed", "3", "--seconds", "4", "--trace", "1"],
+        cwd=env.ROOT, capture_output=True, text=True, timeout=900,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert "TRACE MISMATCH" not in proc.stdout
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert out["correct"] and out["attempted"] >= 2
+    want = {m["name"]: m["unit"] for m in BENCHMARK["per_layer"]}
+    assert {k: v["unit"] for k, v in out["metrics"].items()} == want
+    metrics = {k: v["value"] for k, v in out["metrics"].items()}
+    # half of every batch re-sends existing keys, and the program's crypto
+    # UDFs see every row of the batch
+    assert metrics["transforms.hashed_per_inserted"] == 2.0
+    assert metrics["trace.extra_jobs"] == 2 and metrics["job.jobs"] > 0
