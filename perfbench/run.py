@@ -35,27 +35,20 @@ import env  # noqa: E402
 
 def end_to_end(res, setup_s: float) -> dict[str, float]:
     """``op_latency_s`` is the median latency of each kind of operation,
-    combined over kinds by geometric mean: the median batch for the
-    ingestion workloads, and for the query mix a typical query in which
-    each query weighs the same (a median over seven different queries
-    would jump from one query to another as their ranks swap)."""
-    import math
-
+    averaged over kinds: the median batch for the ingestion workloads,
+    and for the query mix the sweep (the sum of per-query medians) over
+    the number of queries. A median over seven different queries would
+    jump from one query to another as their ranks swap, and a geometric
+    mean weighs the shortest queries, whose latency jumps most from run
+    to run, as much as the longest."""
     import stats
 
     ok = [op for op in res.ops if op.ok] or res.ops
     by_kind: dict[str, list] = {}
     for op in ok:
         by_kind.setdefault(op.kind, []).append(op)
-    latency = {k: stats.median([op.latency for op in ops]) for k, ops in by_kind.items()}
-    items = {k: stats.median([op.items for op in ops]) for k, ops in by_kind.items()}
-    return {
-        "setup_s": setup_s,
-        "op_latency_s": math.exp(sum(math.log(v) for v in latency.values()) / len(latency)),
-        # one typical operation of each kind back to back: for the query
-        # mix, the mix size over the sweep (sum of per-query medians)
-        "items_per_s": sum(items.values()) / sum(latency.values()),
-    }
+    latency = [stats.median([op.latency for op in ops]) for ops in by_kind.values()]
+    return {"setup_s": setup_s, "op_latency_s": sum(latency) / len(latency)}
 
 
 def cpu_times() -> list[int]:
@@ -118,7 +111,7 @@ def main(argv: list[str] | None = None) -> int:
         units = workloads.PER_LAYER_UNITS
     else:
         metrics = end_to_end(res, setup_s)
-        units = {"setup_s": "s", "op_latency_s": "s", "items_per_s": "1/s"}
+        units = {"setup_s": "s", "op_latency_s": "s"}
     out = {
         "correct": not res.problems,
         "attempted": len(res.ops),

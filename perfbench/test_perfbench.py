@@ -86,6 +86,16 @@ def test_tail_is_highest_percentile_with_ten_samples_beyond():
     assert sum(v > value for v in range(1, 101)) == 10
 
 
+def test_op_latency_is_the_mean_of_per_query_medians():
+    import run
+    from workloads import Op, Result
+
+    ops = [Op(t, True, kind="a") for t in (1.0, 9.0, 2.0)] + [Op(t, True, kind="b") for t in (4.0, 6.0, 5.0)]
+    ops.append(Op(50.0, False, kind="b"))  # a failed operation carries no latency
+    metrics = run.end_to_end(Result(0.0, 0.0, ops, []), setup_s=3.0)
+    assert metrics == {"setup_s": 3.0, "op_latency_s": (2.0 + 5.0) / 2}
+
+
 def test_span_self_time_subtracts_children():
     tr = Tracer("t")
     with tr.span("outer") as outer:

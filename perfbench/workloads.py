@@ -61,7 +61,6 @@ MODULES = ("tpch", "tpch2", "events", "documents", "embeddings", "advanced", "st
 @dataclass
 class Op:
     latency: float
-    items: int
     ok: bool
     traced: bool = False
     kind: str = ""
@@ -146,7 +145,7 @@ def _ingest(run: Run, batch: int, resend: float, seeded: bool, warmups: list[int
                 rows = run_ingestion_job(run.spark, keys, table, users=payload)["rows_after_dedup"]
         except Exception as e:  # a failed batch is counted, the loop goes on
             problems.append(f"batch raised {type(e).__name__}: {e}")
-            return Op(time.perf_counter() - t0, 0, False, traced)
+            return Op(time.perf_counter() - t0, False, traced)
         latency = time.perf_counter() - t0
         ok = rows == len(expected)
         if not ok:
@@ -154,7 +153,7 @@ def _ingest(run: Run, batch: int, resend: float, seeded: bool, warmups: list[int
         if whole:
             layers = {"job.jobs": call.counts["jobs"], "udf_rows": spans.python_udf_rows(run.spark, first)}
         layers["inserted"] = len(fresh)
-        return Op(latency, len(fresh), ok, traced, layers=layers)
+        return Op(latency, ok, traced, layers=layers)
 
     src = users.BatchSource(run.seed, resend, existing)
     for size in warmups:
@@ -245,7 +244,7 @@ def query_mix(run: Run) -> Result:
                 rows = df.collect()
         except Exception as e:  # a failed query is counted, the loop goes on
             results.append((name, None, f"raised {type(e).__name__}: {e}"))
-            return Op(time.perf_counter() - t0, 1, False, traced, kind=name)
+            return Op(time.perf_counter() - t0, False, traced, kind=name)
         latency = time.perf_counter() - t0
         results.append((name, df.columns, rows))
         if traced:
@@ -256,7 +255,7 @@ def query_mix(run: Run) -> Result:
                 **{f"queries.{k}": build.counts[k] + collect.counts[k] for k in ("jobs", "stages", "tasks")},
             }
             pinned_max = max(pinned_max, jsc.getPersistentRDDs().size())
-        return Op(latency, 1, True, traced, kind=name, layers=layers)
+        return Op(latency, True, traced, kind=name, layers=layers)
 
     names = [q for _, q in QUERY_MIX]
     for name in names:  # untimed warm-up pass
