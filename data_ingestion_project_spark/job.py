@@ -46,9 +46,8 @@ def run_ingestion_job(
         retries = getattr(getattr(resp, "raw", None), "retries", None)
         retries_used = getattr(retries, "total", None)
 
-    df_raw = users_from_json(spark, users)
-    rows_fetched = df_raw.count()
-    df_secure = transform_users(df_raw, keys)
+    rows_fetched = len(users)  # users_from_json builds one row per payload dict
+    df_secure = transform_users(users_from_json(spark, users), keys)
     if table_format == "txn":
         from data_ingestion_project_spark.operators.upsert import upsert_txn_table
 

@@ -1,7 +1,7 @@
 """Transaction-log parquet table: the minimal Delta/Iceberg-style
 commit protocol, answering the durability gap of plain-directory
-swaps (upsert.atomic_overwrite_parquet documents its two-rename
-window; this module has none).
+swaps (upsert.atomic_dir_swap documents its two-rename window; this
+module has none).
 
 Layout:
 

@@ -1,45 +1,66 @@
 """Keep-first upsert: the reference's persistence operator (U2/D1).
 
-Reference semantics (io_utils.py:16-39 in /root/reference): read the
-full table, append the new batch, drop duplicate keys keeping the
-FIRST occurrence — because existing rows precede new rows in the
-concat, **existing rows win** and re-ingested keys are discarded.
+Reference semantics (reference io_utils.py:16-39): read the full
+table, append the new batch, drop duplicate keys keeping the FIRST
+occurrence — because existing rows precede new rows in the concat,
+**existing rows win** and re-ingested keys are discarded.
 
-Spark mapping (SURVEY.md §2 D1 decision): NOT ``dropDuplicates``
-(keeps an arbitrary row per key — silently diverges). The faithful,
-scale-correct form is *insert-if-absent*:
+Spark mapping (SURVEY.md §2 D1 decision): NOT ``dropDuplicates`` over
+table + batch (keeps an arbitrary row per key — silently diverges).
+The faithful, scale-correct form is *insert-if-absent*:
 
-    new_only = new.join(existing, key, "left_anti")
-    result   = existing.unionByName(new_only)
+    new_only = new.dropDuplicates(key).join(existing_keys, key, "left_anti")
 
-which is exactly Delta's ``MERGE WHEN NOT MATCHED THEN INSERT``. The
-anti-join broadcasts the small side (a 10-row batch against a huge
-table → broadcast the batch; AQE decides from runtime sizes).
+which is exactly Delta's ``MERGE WHEN NOT MATCHED THEN INSERT``
+(:func:`keep_first_new_rows`, the one place the rule lives).
 
-At 100 TB the full-table-rewrite pattern of the reference is replaced
-by: parquet table + atomic temp-dir swap here; a real deployment
-would use a transactional table format (Delta/Iceberg) where this
-operator becomes a metadata-only MERGE — the operator API is already
-shaped for that swap.
+Keep-first never changes an existing row, so a batch never rewrites
+the table. The publish contract of :func:`upsert_parquet_table`:
+
+- the batch's new rows are written as ONE parquet file into a sibling
+  temp directory, then moved into the table directory with one
+  ``os.rename``: a reader sees the table without the batch or with all
+  of it, and the table path never goes missing. The first batch
+  creates the table by renaming the whole temp directory into place;
+- a batch with no new rows publishes nothing; a failed write removes
+  its temp directory and publishes nothing;
+- a batch whose column names or types differ from the table's footer
+  schema raises before anything is written;
+- one file per batch makes every scan of the table open one more
+  file, so once a publish takes the table past ``MAX_TABLE_FILES``
+  files, ``layout.compact_parquet`` rewrites it into ~256 MB files
+  through :func:`atomic_dir_swap` — the only step left that rewrites
+  the table, and the only one with the swap's two-rename window.
+
+The table is single-writer (the ingestion job is single-flight by the
+run_ingestion.sh lock). Multiple producers need a transactional table
+format, where this step is a metadata commit: ``upsert_txn_table``.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
 import uuid as _uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+# A publish past this many data files compacts the table: every scan
+# pays a file open, a footer read and a task-packing share per file,
+# and one file per cron batch would otherwise grow that without bound.
+# At 64 a 10-row cron batch compacts once per ~64 runs, so the full
+# rewrite the reference paid on every batch is paid 1/64 as often.
+MAX_TABLE_FILES = 64
 
 
-def upsert_keep_first(existing: DataFrame | None, new_rows: DataFrame, key: str) -> DataFrame:
-    """Insert-if-absent: existing rows win; new rows deduped on key
-    (first occurrence by input order is not defined in a distributed
-    setting, so within-batch dedup uses the minimum of a deterministic
-    ordering — here any single row per key via dropDuplicates is safe
-    ONLY because within one fetched batch keys are unique; cross-batch
-    precedence is what matters and is enforced by the anti-join)."""
+def keep_first_new_rows(new_rows: DataFrame, existing: DataFrame | None, key: str) -> DataFrame:
+    """The keep-first rule: ``new_rows`` deduplicated on ``key``, minus
+    every key ``existing`` already holds. In-batch dedup keeps any one
+    row per key — within one fetched batch keys are unique; cross-batch
+    precedence is what matters and the anti-join enforces it."""
     kcol = F.col(f"`{key}`")  # backticks: key may be a dotted flat name
     new_rows = new_rows.dropDuplicates([key])
     if existing is None:
@@ -48,87 +69,125 @@ def upsert_keep_first(existing: DataFrame | None, new_rows: DataFrame, key: str)
     # No broadcast hint: the anti-join's build side is the EXISTING key
     # set, which grows without bound — forcing it to broadcast would OOM
     # the driver exactly at scale. AQE broadcasts it while it is small
-    # and switches to a shuffled anti-join once it isn't; at real scale
-    # this whole operator becomes a transactional MERGE (module doc).
+    # and switches to a shuffled anti-join once it isn't.
     # eqNullSafe: with a plain ==, a null key on both sides compares to
     # NULL -> "not matched" -> the null-key row re-inserts on EVERY run,
     # breaking idempotence. The transform null-gates the key, this is
     # defense in depth for tables written by other producers.
-    new_only = new_rows.join(
-        existing_keys, kcol.eqNullSafe(F.col("__existing_key")), "left_anti"
-    )
-    return existing.unionByName(new_only)
+    return new_rows.join(existing_keys, kcol.eqNullSafe(F.col("__existing_key")), "left_anti")
 
 
-def atomic_overwrite_parquet(df: DataFrame, path: str) -> None:
-    """Write to a temp dir then swap — readers never observe a PARTIAL
-    table (the reference's full-file rewrite has the same all-or-
-    nothing contract via to_csv, io_utils.py:37).
+def upsert_keep_first(existing: DataFrame | None, new_rows: DataFrame, key: str) -> DataFrame:
+    """Insert-if-absent as a whole table: existing rows win, new keys
+    are appended (the reference's concat + keep-first dedup)."""
+    new_only = keep_first_new_rows(new_rows, existing, key)
+    return new_only if existing is None else existing.unionByName(new_only)
 
-    Honesty note on atomicity: with plain directories the swap is two
-    renames, and between them the path briefly does not exist — a
-    concurrent reader in that microsecond window errors (it never sees
-    half a table), and a crash there is recovered below by restoring
-    the old directory. True multi-writer/reader atomicity is what
-    transactional table formats (Delta/Iceberg) provide; this helper is
-    the single-writer stand-in (the ingestion job is single-flight by
-    the run_ingestion.sh lock).
-    """
-    atomic_dir_swap(path, lambda tmp: df.write.mode("overwrite").parquet(tmp))
+
+@contextlib.contextmanager
+def _sibling_tmp(path: str):
+    """A fresh ``<path>__tmp_<hex>`` name on the table's filesystem (so
+    renames out of it are atomic), removed on exit whether the write in
+    it succeeded, was published or failed."""
+    tmp = f"{path}__tmp_{_uuid.uuid4().hex[:8]}"
+    try:
+        yield tmp
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def atomic_dir_swap(path: str, write_to_tmp) -> None:
-    """The uuid-suffixed tmp-write / double-rename / restore-on-failure
-    swap shared by every plain-directory overwrite (this module and
-    layout.compact_parquet — ONE implementation, so crash-recovery
-    fixes cannot drift between call sites). ``write_to_tmp(tmp_path)``
-    produces the new directory contents."""
-    tmp = f"{path}__tmp_{_uuid.uuid4().hex[:8]}"
-    write_to_tmp(tmp)
-    old = f"{path}__old_{_uuid.uuid4().hex[:8]}"
-    if os.path.exists(path):
-        os.rename(path, old)
-    try:
-        os.rename(tmp, path)
-    except BaseException:
-        if os.path.exists(old) and not os.path.exists(path):
-            os.rename(old, path)  # restore the previous table
-        raise
+    """Replace the directory at ``path`` with what ``write_to_tmp(tmp)``
+    writes: a sibling temp write, then two renames, restoring the old
+    directory if the second fails. Readers never observe a PARTIAL
+    table, but between the renames the path briefly does not exist.
+    The one implementation of a plain-directory overwrite
+    (layout.compact_parquet uses it), so crash-recovery fixes cannot
+    drift between call sites."""
+    with _sibling_tmp(path) as tmp:
+        write_to_tmp(tmp)
+        old = f"{path}__old_{_uuid.uuid4().hex[:8]}"
+        if os.path.exists(path):
+            os.rename(path, old)
+        try:
+            os.rename(tmp, path)
+        except BaseException:
+            if os.path.exists(old) and not os.path.exists(path):
+                os.rename(old, path)  # restore the previous table
+            raise
     if os.path.exists(old):
         shutil.rmtree(old)
 
 
-def read_table_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
+def _data_files(path: str) -> list[str]:
+    """The table's parquet files, as Spark lists them (names starting
+    with ``_`` or ``.`` are metadata and checksums)."""
+    return sorted(
+        os.path.join(path, name)
+        for name in os.listdir(path)
+        if name.endswith(".parquet") and not name.startswith(("_", "."))
+    )
+
+
+def _check_schema(schema: StructType, footer_schema, path: str) -> None:
+    """Refuse a batch whose column names or types differ from the
+    table's: an append must never leave mixed-schema files. Names and
+    types only — nullability differs freely between DataFrames and
+    parquet round-trips (the rule of txn_table's appends)."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    table = from_arrow_schema(footer_schema)
+    if [(f.name, f.dataType) for f in schema.fields] != [(f.name, f.dataType) for f in table.fields]:
+        raise ValueError(
+            f"batch schema {schema.simpleString()} differs from the schema "
+            f"{table.simpleString()} of the table at {path}"
+        )
+
+
+def read_table_if_exists(spark: SparkSession, path: str, schema: StructType | None = None) -> DataFrame | None:
+    """The table at ``path``, or ``None`` if there is none. A given
+    ``schema`` skips the schema-inference job of a plain read."""
     if not os.path.exists(path):
         return None
-    return spark.read.parquet(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 def upsert_parquet_table(
     spark: SparkSession, new_rows: DataFrame, path: str, key: str
 ) -> tuple[DataFrame, int]:
-    """Full upsert cycle against a parquet table path.
+    """Keep-first upsert of ``new_rows`` into the parquet table at
+    ``path``, published as one appended file (module doc: the contract).
 
-    Returns (resulting table as a fresh read, row count after dedup).
-    The new batch is materialized (cached) before the rewrite so its
-    nondeterministic crypto columns are computed exactly once.
+    Returns (the table as a lazy read, row count after the upsert). The
+    count is the existing rows from parquet footers plus the rows the
+    write observed — no count job and no scan of the table beyond its
+    key column. The batch is not cached: its nondeterministic crypto
+    columns run once, inside the write's job, and the deduplication
+    shuffle keeps them parallel ahead of the one-file stage.
     """
+    import pyarrow.parquet as pq
     from pyspark.sql import Observation
 
-    new_rows = new_rows.cache()
-    new_rows.count()  # materialize through the nondeterministic UDFs
-    existing = read_table_if_exists(spark, path)
-    merged = upsert_keep_first(existing, new_rows, key)
-    # Row count piggybacks on the write via observe (SURVEY.md §2 A1
-    # mapping) — no second scan of the table just to count it.
+    existing = read_table_if_exists(spark, path, new_rows.schema)
+    footers = [pq.read_metadata(f) for f in ([] if existing is None else _data_files(path))]
+    if footers:
+        _check_schema(new_rows.schema, footers[0].schema.to_arrow_schema(), path)
     obs = Observation("upsert_metrics")
-    merged = merged.observe(obs, F.count(F.lit(1)).alias("rows"))
-    # The merged plan scans the current table; the temp-dir write in
-    # atomic_overwrite_parquet executes that scan BEFORE the swap, so
-    # no self-overwrite and the data never funnels through the driver.
-    atomic_overwrite_parquet(merged, path)
-    new_rows.unpersist()
-    return spark.read.parquet(path), int(obs.get["rows"])
+    new_only = keep_first_new_rows(new_rows, existing, key).observe(obs, F.count(F.lit(1)).alias("rows"))
+    with _sibling_tmp(path) as tmp:
+        new_only.coalesce(1).write.parquet(tmp)
+        inserted = int(obs.get["rows"])
+        if existing is None:
+            os.rename(tmp, path)
+        elif inserted:
+            (written,) = _data_files(tmp)
+            os.rename(written, os.path.join(path, os.path.basename(written)))
+    if len(_data_files(path)) > MAX_TABLE_FILES:
+        from data_ingestion_project_spark.operators.layout import compact_parquet
+
+        compact_parquet(spark, path)
+    return spark.read.schema(new_rows.schema).parquet(path), sum(m.num_rows for m in footers) + inserted
 
 
 def upsert_txn_table(

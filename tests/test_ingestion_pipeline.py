@@ -86,6 +86,109 @@ def test_upsert_idempotent_and_existing_wins(spark, keys, tmp_path, batch1, batc
     assert "CHANGED" not in lasts  # batch1 versions retained
 
 
+def _table_files(path) -> dict[str, tuple[int, bytes]]:
+    """Every file in a table directory: name -> (inode, bytes)."""
+    import os
+
+    out = {}
+    for name in os.listdir(path):
+        full = os.path.join(path, name)
+        with open(full, "rb") as f:
+            out[name] = (os.stat(full).st_ino, f.read())
+    return out
+
+
+def _tmp_siblings(path) -> list[str]:
+    import os
+
+    parent, base = os.path.split(path)
+    return [n for n in os.listdir(parent) if n.startswith(f"{base}__")]
+
+
+def test_half_resent_batch_appends_one_file(spark, keys, tmp_path, batch1, batch3_half_new):
+    """Keep-first never changes an existing row, so a batch publishes
+    only its new rows: one new parquet file, and every file already in
+    the table keeps its inode and its bytes."""
+    path = str(tmp_path / "users.parquet")
+    run_ingestion_job(spark, keys, path, users=batch1)
+    before = _table_files(path)
+
+    m = run_ingestion_job(spark, keys, path, users=batch3_half_new)
+    after = _table_files(path)
+
+    assert m["rows_after_dedup"] == 15
+    assert {n: after[n] for n in before} == before
+    added = set(after) - set(before)
+    assert len(added) == 1 and added.pop().endswith(".parquet")
+    assert spark.read.parquet(path).count() == 15
+    assert _tmp_siblings(path) == []
+
+
+def test_all_resent_batch_publishes_nothing(spark, keys, tmp_path, batch1, batch2_mutated):
+    path = str(tmp_path / "users.parquet")
+    run_ingestion_job(spark, keys, path, users=batch1)
+    before = _table_files(path)
+
+    m = run_ingestion_job(spark, keys, path, users=batch2_mutated)
+
+    assert m["rows_after_dedup"] == 10
+    assert _table_files(path) == before
+    assert _tmp_siblings(path) == []
+
+
+def test_resent_row_missing_required_field_still_fails(spark, keys, tmp_path, batch1, batch3_half_new):
+    """The required-field gate runs on the whole batch, before the
+    anti-join drops re-sent keys: a malformed re-sent row fails the run,
+    nothing is published and no temp directory is left behind."""
+    path = str(tmp_path / "users.parquet")
+    run_ingestion_job(spark, keys, path, users=batch1)
+    before = _table_files(path)
+    batch3_half_new[0]["email"] = None  # batch3_half_new[0] re-sends uuid-0000
+
+    with pytest.raises(Exception, match="missing required field: email"):
+        run_ingestion_job(spark, keys, path, users=batch3_half_new)
+
+    assert _table_files(path) == before
+    assert _tmp_siblings(path) == []
+
+
+def test_batch_with_other_schema_is_refused(spark, keys, tmp_path, batch1, batch3_half_new):
+    from pyspark.sql import functions as F
+
+    from data_ingestion_project_spark.operators.upsert import upsert_parquet_table
+
+    path = str(tmp_path / "users.parquet")
+    run_ingestion_job(spark, keys, path, users=batch1)
+    before = _table_files(path)
+    secure = transform_users(users_from_json(spark, batch3_half_new), keys)
+
+    with pytest.raises(ValueError, match="differs from the schema"):
+        upsert_parquet_table(spark, secure.withColumn("dob.age", F.col("`dob.age`").cast("long")), path, "login.uuid")
+    with pytest.raises(ValueError, match="differs from the schema"):
+        upsert_parquet_table(spark, secure.drop("email_bidx"), path, "login.uuid")
+
+    assert _table_files(path) == before
+    assert _tmp_siblings(path) == []
+
+
+def test_failed_swap_write_leaves_no_temp_dir(spark, tmp_path):
+    """A write that fails inside atomic_dir_swap (here: raise_error in
+    the written frame) keeps the old table and removes its temp dir."""
+    from pyspark.sql import functions as F
+
+    from data_ingestion_project_spark.operators.upsert import atomic_dir_swap
+
+    path = str(tmp_path / "t.parquet")
+    spark.range(5).write.parquet(path)
+    bad = spark.range(5).select(F.when(F.col("id") == 3, F.raise_error(F.lit("boom"))).otherwise(F.col("id")).alias("id"))
+
+    with pytest.raises(Exception, match="boom"):
+        atomic_dir_swap(path, bad.write.parquet)
+
+    assert spark.read.parquet(path).count() == 5
+    assert _tmp_siblings(path) == []
+
+
 def test_metrics_dict_contract(spark, keys, tmp_path, batch1):
     """Exact metrics keys of job.py:73-79 (reference)."""
     m = run_ingestion_job(spark, keys, str(tmp_path / "t.parquet"), users=batch1)

@@ -74,6 +74,24 @@ def test_upsert_antijoin_broadcasts_existing_keys(spark, keys, tmp_path, batch1)
     assert c["n_sortmerge_joins"] == 0  # anti-join must not sort-merge
 
 
+def test_upsert_append_reads_only_the_key_column(spark, keys, tmp_path, batch1):
+    """The append path (upsert_parquet_table) reads the table with the
+    batch's pinned schema and prunes it to the key: the existing-table
+    scan must read login.uuid and nothing else."""
+    from data_ingestion_project_spark.job import run_ingestion_job
+    from data_ingestion_project_spark.operators.transforms import transform_users
+    from data_ingestion_project_spark.operators.upsert import keep_first_new_rows, read_table_if_exists
+    from data_ingestion_project_spark.sources.users_json import users_from_json
+
+    path = str(tmp_path / "u.parquet")
+    run_ingestion_job(spark, keys, path, users=batch1)
+    new = transform_users(users_from_json(spark, batch1), keys)
+    new_only = keep_first_new_rows(new, read_table_if_exists(spark, path, new.schema), "login.uuid")
+    scans = scan_info(new_only)
+    assert [s["read_schema"] for s in scans] == ["struct<login.uuid:string>"]
+    assert plan_census(new_only)["n_sortmerge_joins"] == 0
+
+
 def test_asof_join_single_window_shuffle(spark):
     """The union+window as-of must cost exactly one key shuffle plus the
     output sort — a range-join formulation would add a join exchange
