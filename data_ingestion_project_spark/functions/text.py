@@ -138,11 +138,6 @@ def winnow_fingerprints(
     )
 
 
-def char_count(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.length(c)
-
-
 def punct_ratio(col: Column | str) -> Column:
     """Fraction of characters that are sentence punctuation."""
     c = F.col(col) if isinstance(col, str) else col
@@ -155,24 +150,6 @@ def stopword_count(col: Column | str, stopwords: tuple[str, ...] = STOPWORDS_EN)
     c = F.col(col) if isinstance(col, str) else col
     pattern = r"\b(" + "|".join(stopwords) + r")\b"
     return F.size(F.regexp_extract_all(F.lower(c), F.lit(pattern), F.lit(0)))
-
-
-def stopword_ratio(col: Column | str, stopwords: tuple[str, ...] = STOPWORDS_EN) -> Column:
-    return stopword_count(col, stopwords) / token_count(col)
-
-
-def quality_score(col: Column | str) -> Column:
-    """Deterministic linear quality heuristic in [0, ~1].
-
-    Rewards reasonable length and stopword presence, penalizes extreme
-    punctuation density — the classic cheap pre-filter before expensive
-    model-based scoring in a training-data pipeline.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    length_term = F.least(F.length(c) / F.lit(500.0), F.lit(1.0))
-    stop_term = F.least(stopword_ratio(c) * 4.0, F.lit(1.0))
-    punct_term = F.greatest(F.lit(1.0) - punct_ratio(c) * 10.0, F.lit(0.0))
-    return 0.4 * length_term + 0.3 * stop_term + 0.3 * punct_term
 
 
 def fingerprint(col: Column | str) -> Column:

@@ -20,8 +20,8 @@ MERGEABLE by cellwise addition — per-day sketches roll up to any date
 range with zero fact rescan, the same standing-aggregate posture as the
 KMV/quantile sketches. NOTE the merge is ADDITIVE, not idempotent
 (unlike the SET-semantics bottom-k folds), so incremental maintenance
-MUST ride the fenced-batch machinery (streaming/ingest._fenced_append
-posture) — a replayed batch would double-count.
+MUST ride the fenced-batch machinery (operators/txn_table.fold_merge)
+— a replayed batch would double-count.
 
 Hashing is the repo's engine-portable md5-prefix bucket idiom
 (functions/portable_hash.py), salted per depth row: the whole build /
@@ -159,7 +159,6 @@ def update_cms_asset(
     depth: int = 4,
     width: int = 64,
     fence: tuple[str, int] | None = None,
-    max_retries: int = 20,
 ) -> None:
     """Per-batch incremental maintenance of a standing CMS txn table:
     collapse the batch to its own ≤ depth×width cell sketch, then
@@ -168,47 +167,13 @@ def update_cms_asset(
 
     The additive merge is NOT idempotent (module docstring), so the
     ``(fence_id, batch_id)`` fence is mandatory under any at-least-once
-    delivery (foreachBatch): it rides the manifest atomically with the
-    cell commit, and a batch at or below the recorded fence is a no-op.
-    The merge is pinned to the snapshot the fence was read from
-    (``base_version``), so a concurrent writer raises TxnConflict and
-    the fold retries against the new head — fence re-checked — instead
-    of double-applying. Shared by the streaming sink
-    (streaming/ingest.start_cms_stream) and any batch backfill."""
+    delivery (foreachBatch); txn_table.fold_merge records it atomically
+    with the cell commit and makes a replayed batch a no-op. Shared by
+    the streaming sink (streaming/ingest.start_cms_stream) and any
+    batch backfill."""
     from data_ingestion_project_spark.operators import txn_table as T
 
     batch_sk = cms_build(batch_df, item_col, depth=depth, width=width).select(
         (F.col("j") * width + F.col("bucket")).alias("cell"), "j", "bucket", "cnt"
     )
-    extra = None
-    if fence is not None:
-        fence_id, batch_id = fence
-        extra = {"stream_fences": {fence_id: batch_id}}
-    for _ in range(max_retries):
-        base = T.current_version(table_path)
-        if base is None:
-            try:
-                T.create_table(spark, table_path, batch_sk, extra=extra)
-                return
-            except (FileExistsError, T.TxnConflict):
-                continue  # lost the create race: rebase onto the winner
-        if fence is not None:
-            fences = T._read_manifest(table_path, base).get("stream_fences", {})
-            if fence[1] <= fences.get(fence[0], -1):
-                return  # replayed micro-batch: cells already added
-        try:
-            T.merge(
-                spark,
-                table_path,
-                batch_sk,
-                key="cell",
-                update_expr={"cnt": "t.cnt + s.cnt"},
-                extra=extra,
-                base_version=base,
-            )
-            return
-        except T.TxnConflict:
-            continue  # concurrent writer: re-read fence + head
-    raise T.TxnConflict(
-        f"cms fold gave up after {max_retries} contended commits at {table_path}"
-    )
+    T.fold_merge(spark, table_path, batch_sk, "cell", {"cnt": "t.cnt + s.cnt"}, fence)

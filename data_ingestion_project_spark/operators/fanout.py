@@ -15,8 +15,13 @@ hazard: it repartitions ONLY when the input's planned partition count
 is below the session's core count, so a well-split input passes
 through with NO Exchange in the plan.  The probe
 (``df.rdd.getNumPartitions()``) runs at plan-build time on the
-already-analyzed plan — no job, no data movement; milliseconds of
+already-analyzed plan — no job for scan-shaped inputs; milliseconds of
 driver work against a full shuffle avoided.
+
+Precondition: the input must be scan-shaped (scans, projections,
+filters — no exchange).  With AQE on, ``.rdd`` on a plan that holds an
+exchange (a join or aggregation) materializes its query stages — real
+jobs — and the returned frame is a fresh plan that runs them again.
 """
 
 from __future__ import annotations
@@ -27,9 +32,11 @@ from pyspark.sql import DataFrame
 def fanout_to_cores(df: DataFrame) -> DataFrame:
     """Round-robin ``repartition(defaultParallelism)`` iff the input
     plans fewer partitions than the session has cores; identity (no
-    Exchange) otherwise.  Callers fan out ONLY frames whose per-row
-    work dominates an exchange of the selected columns — select the
-    narrow columns first (guide §2.3: project before the exchange)."""
+    Exchange) otherwise.  ``df`` must be scan-shaped (module
+    docstring): a joined or aggregated input would run its stages
+    twice.  Callers fan out ONLY frames whose per-row work dominates an
+    exchange of the selected columns — select the narrow columns first
+    (guide §2.3: project before the exchange)."""
     parallelism = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= parallelism:
         return df

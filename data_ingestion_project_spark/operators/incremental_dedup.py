@@ -67,18 +67,11 @@ def _fenced_append(
     correctness mechanism. Shared by the pair-increment log and the
     signature-asset maintenance — any append-maintained asset whose
     rows must not double-apply under foreachBatch re-execution."""
-    extra = None
-    if fence is not None:
-        fence_id, batch_id = fence
-        head = T.current_version(path)
-        if head is not None:
-            fences = T._read_manifest(path, head).get("stream_fences", {})
-            if batch_id <= fences.get(fence_id, -1):
-                return  # replayed micro-batch: already applied
-        extra = {"stream_fences": {fence_id: batch_id}}
+    if T.fence_applied(path, fence):
+        return  # replayed micro-batch: already applied
     if T.current_version(path) is None:
         try:
-            T.create_table(spark, path, rows, extra=extra)
+            T.create_table(spark, path, rows, extra=T.fence_extra(fence))
             return
         except (FileExistsError, T.TxnConflict):
             # Concurrent creator won — possibly another execution of
@@ -371,9 +364,10 @@ def dedup_batch_against_index(
 # groupBy-sum over the increments (filter sum > 0); periodic compaction
 # can replace the log with its aggregate without changing readers.
 # Exactly-once: pass ``fence=(fence_id, batch_id)`` — recorded in the
-# pair table's own manifest (stream_fences, Delta txnAppId shape), so a
-# replayed batch is skipped instead of double-appending increments;
-# unfenced use is an explicit opt-in for non-replaying callers.
+# pair table's own manifest (txn_table's replay fence, Delta txnAppId
+# shape), so a replayed batch is skipped instead of double-appending
+# increments; unfenced use is an explicit opt-in for non-replaying
+# callers.
 # ------------------------------------------------------------------
 
 PAIR_SCHEMA = "id_a bigint, id_b bigint, delta bigint"
@@ -408,13 +402,8 @@ def update_pair_index(
     non-replaying (one-shot batch) callers only."""
     from pyspark.sql import Window
 
-    if fence is not None:
-        fence_id, batch_id = fence
-        head = T.current_version(pair_path)
-        if head is not None:
-            fences = T._read_manifest(pair_path, head).get("stream_fences", {})
-            if batch_id <= fences.get(fence_id, -1):
-                return  # replayed micro-batch: increments already applied
+    if T.fence_applied(pair_path, fence):
+        return  # replayed micro-batch: increments already applied
 
     new_fps = new_fps.select(
         F.col("fp").cast("long"), F.col("doc_id").cast("long")

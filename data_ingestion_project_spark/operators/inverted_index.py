@@ -98,53 +98,21 @@ def update_inverted_index(
     text_col: str = "text",
     id_col: str = "doc_id",
     fence: tuple[str, int] | None = None,
-    max_retries: int = 20,
 ) -> None:
     """Per-batch incremental maintenance into txn tables: postings and
     lens rows are per-doc facts (fenced APPEND — a doc lives in one
     batch, so appends never overlap); dfs is ADDITIVE (a replay would
     double-count word dfs), so it rides the fenced keyed MERGE
-    (``df = t.df + s.df``) exactly like the CMS cell fold. The three
-    tables carry their own fences: a crash between commits replays
-    exactly the missing ones."""
+    (``df = t.df + s.df``, txn_table.fold_merge) exactly like the CMS
+    cell fold. The three tables carry their own fences: a crash between
+    commits replays exactly the missing ones."""
     from data_ingestion_project_spark.operators import txn_table as T
     from data_ingestion_project_spark.operators.incremental_dedup import _fenced_append
 
     postings, lens, dfs = index_rows(batch_docs, text_col, id_col)
     _fenced_append(spark, postings_path, postings, fence)
     _fenced_append(spark, lens_path, lens, fence)
-
-    extra = None
-    if fence is not None:
-        extra = {"stream_fences": {fence[0]: fence[1]}}
-    for _ in range(max_retries):
-        base = T.current_version(dfs_path)
-        if base is None:
-            try:
-                T.create_table(spark, dfs_path, dfs, extra=extra)
-                return
-            except (FileExistsError, T.TxnConflict):
-                continue
-        if fence is not None:
-            fences = T._read_manifest(dfs_path, base).get("stream_fences", {})
-            if fence[1] <= fences.get(fence[0], -1):
-                return  # replayed micro-batch: dfs already added
-        try:
-            T.merge(
-                spark,
-                dfs_path,
-                dfs,
-                key="word",
-                update_expr={"df": "t.df + s.df"},
-                extra=extra,
-                base_version=base,
-            )
-            return
-        except T.TxnConflict:
-            continue
-    raise T.TxnConflict(
-        f"df fold gave up after {max_retries} contended commits at {dfs_path}"
-    )
+    T.fold_merge(spark, dfs_path, dfs, "word", {"df": "t.df + s.df"}, fence)
 
 
 def bm25_from_index(

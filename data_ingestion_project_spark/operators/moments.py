@@ -72,47 +72,19 @@ def update_moments_asset(
     x_col: str,
     y_col: str | None = None,
     fence: tuple[str, int] | None = None,
-    max_retries: int = 20,
 ) -> None:
     """Fenced additive fold of a batch's moment rows into the standing
-    asset — the update_covariance_asset posture (operators/pca.py:211):
-    snapshot-pinned MERGE with ``t.col + s.col`` update expressions,
-    manifest fence against at-least-once replay, conflict-and-retry
-    under concurrent writers.  The merge source is ≤|keys| rows
-    regardless of batch size."""
+    asset — the update_covariance_asset posture
+    (operators/pca.update_covariance_asset, through
+    txn_table.fold_merge): snapshot-pinned MERGE with ``t.col + s.col``
+    update expressions, manifest fence against at-least-once replay,
+    conflict-and-retry under concurrent writers.  The merge source is
+    ≤|keys| rows regardless of batch size."""
     from data_ingestion_project_spark.operators import txn_table as T
 
     cells = moment_rows(batch, key_col, x_col, y_col)
-    extra = None
-    if fence is not None:
-        extra = {"stream_fences": {fence[0]: fence[1]}}
-    for _ in range(max_retries):
-        base = T.current_version(table_path)
-        if base is None:
-            try:
-                T.create_table(spark, table_path, cells, extra=extra)
-                return
-            except (FileExistsError, T.TxnConflict):
-                continue
-        if fence is not None:
-            fences = T._read_manifest(table_path, base).get("stream_fences", {})
-            if fence[1] <= fences.get(fence[0], -1):
-                return  # replayed batch: moments already folded
-        try:
-            T.merge(
-                spark,
-                table_path,
-                cells,
-                key="key",
-                update_expr={c: f"t.{c} + s.{c}" for c in MOMENT_COLS},
-                extra=extra,
-                base_version=base,
-            )
-            return
-        except T.TxnConflict:
-            continue
-    raise T.TxnConflict(
-        f"moment fold gave up after {max_retries} contended commits at {table_path}"
+    T.fold_merge(
+        spark, table_path, cells, "key", {c: f"t.{c} + s.{c}" for c in MOMENT_COLS}, fence
     )
 
 

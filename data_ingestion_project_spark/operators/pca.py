@@ -229,52 +229,18 @@ def update_covariance_asset(
     col: str = "embedding",
     dim: int = 64,
     fence: tuple[str, int] | None = None,
-    max_retries: int = 20,
 ) -> None:
     """Fenced additive fold of a batch's moment cells into the standing
     covariance asset — identical posture to the CMS fold
-    (operators/cms.update_cms_asset): the merge is ADDITIVE, hence the
-    (fence_id, batch_id) manifest fence under at-least-once delivery,
-    pinned to the read snapshot so concurrent writers conflict-and-
-    retry. ≤ d(d+1)/2 + d + 1 cells regardless of batch size; PCA can
-    be refit from the folded cells at any time with zero data rescan
-    (:func:`pca_model_from_asset`)."""
+    (operators/cms.update_cms_asset, through txn_table.fold_merge): the
+    merge is ADDITIVE, hence the (fence_id, batch_id) manifest fence
+    under at-least-once delivery. ≤ d(d+1)/2 + d + 1 cells regardless
+    of batch size; PCA can be refit from the folded cells at any time
+    with zero data rescan (:func:`pca_model_from_asset`)."""
     from data_ingestion_project_spark.operators import txn_table as T
 
     cells = moment_rows(batch_emb, col, dim)
-    extra = None
-    if fence is not None:
-        extra = {"stream_fences": {fence[0]: fence[1]}}
-    for _ in range(max_retries):
-        base = T.current_version(table_path)
-        if base is None:
-            try:
-                T.create_table(spark, table_path, cells, extra=extra)
-                return
-            except (FileExistsError, T.TxnConflict):
-                continue
-        if fence is not None:
-            fences = T._read_manifest(table_path, base).get("stream_fences", {})
-            if fence[1] <= fences.get(fence[0], -1):
-                return  # replayed batch: moments already added
-        try:
-            T.merge(
-                spark,
-                table_path,
-                cells,
-                key="cell",
-                update_expr={"v": "t.v + s.v"},
-                extra=extra,
-                base_version=base,
-            )
-            return
-        except T.TxnConflict:
-            continue
-    from data_ingestion_project_spark.operators.txn_table import TxnConflict
-
-    raise TxnConflict(
-        f"covariance fold gave up after {max_retries} contended commits at {table_path}"
-    )
+    T.fold_merge(spark, table_path, cells, "cell", {"v": "t.v + s.v"}, fence)
 
 
 def pca_model_from_asset(spark, table_path: str, dim: int = 64, k: int = 8):

@@ -133,9 +133,11 @@ def equal_frequency_buckets_multi(
     rank-and-split tail per column.
 
     ``specs``: (value_col, k, tiebreak_cols, out_col) tuples.  Every
-    value column must be non-NULL (the chained form's per-call NULL
-    filtering is order-dependent; callers like rfm_segments construct
-    non-NULL dimensions).
+    value column must be non-NULL: the chained form's per-call NULL
+    filtering is order-dependent, so a NULL value raises ValueError
+    naming the column (counted in the count pass below — no extra job)
+    instead of silently landing in bucket 1.  Callers like rfm_segments
+    construct non-NULL dimensions.
 
     Exactness: identical assignment to the chained calls — range
     boundaries only shape load balance (equal values always land in
@@ -155,13 +157,17 @@ def equal_frequency_buckets_multi(
         rid_cols.append(rid_col)
 
     # ONE count pass for every column: explode (dim, rid) pairs — the
-    # shuffle is dims × range_partitions cells after map-side combine
+    # shuffle is dims × range_partitions cells after map-side combine;
+    # a NULL value counts in its dim's NULL rid cell
     pairs = ranged.select(
         F.explode(
             F.array(
                 *[
-                    F.struct(F.lit(i).alias("d"), F.col(rc).alias("rid"))
-                    for i, rc in enumerate(rid_cols)
+                    F.struct(
+                        F.lit(i).alias("d"),
+                        F.when(F.col(vc).isNotNull(), F.col(rc)).alias("rid"),
+                    )
+                    for i, (rc, (vc, *_)) in enumerate(zip(rid_cols, specs))
                 ]
             )
         ).alias("e")
@@ -173,6 +179,11 @@ def equal_frequency_buckets_multi(
     )
     per_dim_counts: list[dict[int, int]] = [dict() for _ in specs]
     for row in cell_rows:
+        if row["rid"] is None:
+            raise ValueError(
+                f"equal_frequency_buckets_multi: value column {specs[row['d']][0]!r} "
+                f"has {row['n']} NULL rows; filter or fill them first"
+            )
         per_dim_counts[row["d"]][row["rid"]] = row["n"]
 
     out = ranged

@@ -17,7 +17,7 @@ sf0.1 meets 100 TB:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -115,10 +115,3 @@ def write_bucketed(
     if sort_key:
         writer = writer.sortBy(sort_key)
     writer.saveAsTable(table_name)
-
-
-def co_bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, key: str
-) -> DataFrame:
-    """Join two co-bucketed tables — shuffle-free by construction."""
-    return spark.table(left_table).join(spark.table(right_table), key)

@@ -133,6 +133,57 @@ def _try_commit(path: str, version: int, manifest: dict) -> bool:
     return True
 
 
+# ------------------------------------------------------ replay fences
+#
+# A streaming sink's exactly-once guarantee: every fenced commit stamps
+# ``(fence_id, batch_id)`` into the same atomic manifest write as its
+# data, so a replayed micro-batch can see that it already landed. The
+# manifest holds per-stream fences as the ``stream_fences`` map (Delta's
+# txnAppId shape) and the older table-global fence as the scalar
+# ``stream_batch_id``. Only this module reads or writes either field.
+
+
+def _fence_recorded(manifest: dict, fence: tuple[str | None, int]) -> bool:
+    """The fence rule. ``fence_id=None`` names the table-global scalar
+    fence. A named fence is looked up in the per-stream map; a manifest
+    without that map predates per-stream fences, and its scalar fence
+    (stamped by the one stream that could write it) answers instead."""
+    fence_id, batch_id = fence
+    fences = manifest.get("stream_fences")
+    if fence_id is None or not isinstance(fences, dict) or not fences:
+        return batch_id <= manifest.get("stream_batch_id", -1)
+    return batch_id <= fences.get(fence_id, -1)
+
+
+def fence_extra(fence: tuple[str | None, int] | None, extra: dict | None = None) -> dict:
+    """Manifest fields for a commit's ``extra``: ``extra`` plus the
+    field that records ``fence`` (a named fence joins any per-stream
+    map ``extra`` already carries)."""
+    extra = dict(extra or {})
+    if fence is not None:
+        fence_id, batch_id = fence
+        if fence_id is None:
+            extra["stream_batch_id"] = batch_id
+        else:
+            extra["stream_fences"] = {**extra.get("stream_fences", {}), fence_id: batch_id}
+    return extra
+
+
+def fence_applied(
+    path: str, fence: tuple[str | None, int] | None, version: int | None = None
+) -> bool:
+    """Is ``fence=(fence_id, batch_id)`` (that batch or a later one)
+    already recorded in the manifest at ``version`` (default: head)?
+    False for no fence or no table. A read-only answer: the commit loop
+    re-checks it atomically with publication (:func:`_commit_retry`),
+    so callers use it to skip work, and pass ``version`` when they will
+    commit against that snapshot."""
+    if fence is None:
+        return False
+    v = current_version(path) if version is None else version
+    return v is not None and _fence_recorded(_read_manifest(path, v), fence)
+
+
 def create_table(
     spark: SparkSession, path: str, df: DataFrame, extra: dict | None = None
 ) -> int:
@@ -172,12 +223,12 @@ def _commit_retry(
 
     ``fence=(fence_id, batch_id)`` makes replay protection ATOMIC with
     the manifest write for rebasing (base_version=None) commits: every
-    attempt re-reads the head manifest, and if ``stream_fences`` there
-    already records ``batch_id`` (or later) for ``fence_id``, the loop
-    raises :class:`FenceApplied` instead of rebasing the append on top
-    — closing the append/append TOCTOU where two zombie executions of
-    the same micro-batch both pass a caller-side pre-check and both
-    commit additive rows. (Snapshot-pinned commits get the same
+    attempt re-reads the head manifest, and if it already records
+    ``batch_id`` (or later) for ``fence_id`` (:func:`fence_applied`'s
+    rule), the loop raises :class:`FenceApplied` instead of rebasing
+    the append on top — closing the append/append TOCTOU where two
+    zombie executions of the same micro-batch both pass a caller-side
+    pre-check and both commit additive rows. (Snapshot-pinned commits get the same
     guarantee from base_version + caller retry; the fence param is for
     blind appends, which otherwise NEVER conflict.)
 
@@ -196,14 +247,10 @@ def _commit_retry(
                 f"snapshot at v{base_version} is stale (head is v{head}); re-run the operation"
             )
         prev = _read_manifest(path, head)
-        if fence is not None:
-            fence_id, batch_id = fence
-            recorded = prev.get("stream_fences", {})
-            if isinstance(recorded, dict) and batch_id <= recorded.get(fence_id, -1):
-                raise FenceApplied(
-                    f"batch {batch_id} for fence {fence_id!r} already committed "
-                    f"at {path} (head fence {recorded.get(fence_id)})"
-                )
+        if fence is not None and _fence_recorded(prev, fence):
+            raise FenceApplied(
+                f"batch {fence[1]} for fence {fence[0]!r} already committed at {path}"
+            )
         dirs, schema = new_dirs_fn(prev)
         carried: dict = {}
         if isinstance(prev.get("stats"), dict):
@@ -288,13 +335,9 @@ def append(
     rel = _write_data(df, path)
     # the evolved flag makes snapshot reads pay footer schema-merging
     # only on tables where an evolution actually happened
-    merged_extra = {**({"evolved": True} if merge_schema else {}), **(extra or {})}
-    if fence is not None:
-        fence_id, batch_id = fence
-        merged_extra["stream_fences"] = {
-            **merged_extra.get("stream_fences", {}),
-            fence_id: batch_id,
-        }
+    merged_extra = fence_extra(
+        fence, {**({"evolved": True} if merge_schema else {}), **(extra or {})}
+    )
     return _commit_retry(
         path,
         "append",
@@ -366,15 +409,9 @@ def publish_staged(
     concurrent execution of the same batch published first."""
     if schema is None:
         schema = spark.read.parquet(os.path.join(path, rel)).schema
-    merged_extra = dict(extra or {})
+    merged_extra = fence_extra(fence, extra)
     if merge_schema:
         merged_extra["evolved"] = True
-    if fence is not None:
-        fence_id, batch_id = fence
-        merged_extra["stream_fences"] = {
-            **merged_extra.get("stream_fences", {}),
-            fence_id: batch_id,
-        }
     return _commit_retry(
         path,
         "publish",
@@ -887,3 +924,60 @@ def merge(
         }
     finally:
         source.unpersist()
+
+
+# ------------------------------------------------------ additive folds
+
+FOLD_ATTEMPTS = 20  # contended commits a fold absorbs before giving up
+
+
+def fold_merge(
+    spark: SparkSession,
+    path: str,
+    rows: DataFrame,
+    key: str,
+    update_expr: dict[str, str],
+    fence: tuple[str | None, int] | None = None,
+) -> None:
+    """Fold ``rows`` into the standing table at ``path`` with one keyed
+    additive MERGE (``update_expr`` such as ``{"n": "t.n + s.n"}``),
+    creating the table from ``rows`` when it does not exist yet. The
+    shared maintenance step of every mergeable summary asset (CMS
+    cells, covariance and keyed moments, document frequencies, running
+    counts).
+
+    An additive merge is not idempotent, so a replayed batch would
+    double-count: ``fence=(fence_id, batch_id)`` rides the same
+    manifest commit as the cells, and a batch the snapshot already
+    records is a no-op. The fence is checked on the snapshot the merge
+    is pinned to (``base_version``), so a concurrent commit raises
+    TxnConflict and the fold re-reads head and fence instead of
+    double-applying. Losing the create race rebases onto the winner the
+    same way: a winner that recorded this batch makes the fold a no-op.
+    Gives up with TxnConflict after ``FOLD_ATTEMPTS`` contended
+    attempts."""
+    extra = fence_extra(fence)
+    for _ in range(FOLD_ATTEMPTS):
+        base = current_version(path)
+        if base is None:
+            try:
+                create_table(spark, path, rows, extra=extra)
+                return
+            except (FileExistsError, TxnConflict):
+                continue  # lost the create race: rebase onto the winner
+        if fence_applied(path, fence, base):
+            return  # replayed batch: already folded
+        try:
+            merge(
+                spark,
+                path,
+                rows,
+                key=key,
+                update_expr=update_expr,
+                extra=extra,
+                base_version=base,
+            )
+            return
+        except TxnConflict:
+            continue  # concurrent writer: re-read head and fence
+    raise TxnConflict(f"fold gave up after {FOLD_ATTEMPTS} contended commits at {path}")

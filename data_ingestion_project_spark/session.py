@@ -61,13 +61,3 @@ def build_session(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def get_or_create(spark: SparkSession | None = None) -> SparkSession:
-    """Return the given session, the active one, or a freshly built one."""
-    if spark is not None:
-        return spark
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        return active
-    return build_session()

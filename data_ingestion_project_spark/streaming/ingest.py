@@ -11,13 +11,46 @@ reference's cron loop, with checkpointing replacing the shell lock.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from data_ingestion_project_spark.functions.crypto import CryptoKeys
+from data_ingestion_project_spark.operators import txn_table as T
 from data_ingestion_project_spark.operators.transforms import transform_users
 from data_ingestion_project_spark.operators.upsert import upsert_parquet_table
 from data_ingestion_project_spark.schemas import RAW_USER_SCHEMA
+
+
+def _fence_id(app_id: str | None, checkpoint_dir: str) -> str:
+    """A fenced sink's stream identity: the explicit ``app_id``, else
+    the checkpoint directory, normalized so that different spellings of
+    the SAME checkpoint (relative vs absolute, trailing slash) map to
+    one fence key — a restart that spells the path differently would
+    otherwise silently drop the exactly-once replay fence."""
+    return app_id or os.path.abspath(checkpoint_dir)
+
+
+def _start_sink(
+    stream: DataFrame, checkpoint_dir: str, fold, output_mode: str = "append"
+) -> StreamingQuery:
+    """Start ``stream`` with ``fold(batch_df, batch_id)`` run on every
+    non-empty micro-batch. foreachBatch delivery is at-least-once, so a
+    fold that is not idempotent must carry a replay fence
+    (operators/txn_table.fold_merge, fence_applied)."""
+
+    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        fold(batch_df, batch_id)
+
+    return (
+        stream.writeStream.foreachBatch(_sink)
+        .outputMode(output_mode)
+        .option("checkpointLocation", checkpoint_dir)
+        .start()
+    )
 
 
 def stream_users_from_json_dir(spark: SparkSession, input_dir: str) -> DataFrame:
@@ -56,19 +89,12 @@ def start_ingestion_stream(
 ) -> StreamingQuery:
     """Start the continuous ingestion query (availableNow-compatible:
     callers stop it once idle; tests use processAllAvailable)."""
-    raw = stream_users_from_json_dir(spark, input_dir)
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def _fold(batch_df: DataFrame, batch_id: int) -> None:
         secure = transform_users(batch_df, keys)
         upsert_parquet_table(spark, secure, table_path, key=key_column)
 
-    return (
-        raw.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _start_sink(stream_users_from_json_dir(spark, input_dir), checkpoint_dir, _fold)
 
 
 def start_running_count_stream(
@@ -91,7 +117,9 @@ def start_running_count_stream(
     every commit stamps ``stream_batch_id``; a replayed batch sees
     ``batch_id <= fence`` in the current manifest and becomes a no-op.
     Fence and data are one manifest write (O_EXCL-atomic), so there is
-    no window where the data landed but the fence didn't.
+    no window where the data landed but the fence didn't. The fence is
+    table-global, not per checkpoint: a replay under a FRESH checkpoint
+    (batch ids restarting at 0) is absorbed too.
 
     Scale notes: the per-batch delta aggregate is tiny (distinct keys
     in one micro-batch); the txn merge it feeds rewrites only data
@@ -100,37 +128,19 @@ def start_running_count_stream(
     """
     from pyspark.sql import functions as F
 
-    from data_ingestion_project_spark.operators import txn_table as T
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+    def _fold(batch_df: DataFrame, batch_id: int) -> None:
         delta = batch_df.groupBy(key_col).agg(F.count(F.lit(1)).alias("n_events"))
-        if T.current_version(table_path) is None:
-            T.create_table(spark, table_path, delta, extra={"stream_batch_id": batch_id})
-            return
-        manifest = T._read_manifest(table_path, T.current_version(table_path))
-        fence = manifest.get("stream_batch_id", -1)
-        if batch_id <= fence:
-            return  # replayed micro-batch: already applied atomically
-        if delta.isEmpty():
-            return
-        # additive UPDATE SET inside the merge itself — the sink never
-        # reads the table; the file-pruned merge touches only the data
-        # directories containing this batch's keys, so per-batch cost
-        # tracks batch size, not table size
-        T.merge(
+        # fence id None: the table-global fence (docstring)
+        T.fold_merge(
             spark,
             table_path,
             delta,
             key_col,
-            update_expr={"n_events": "t.n_events + s.n_events"},
-            extra={"stream_batch_id": batch_id},
+            {"n_events": "t.n_events + s.n_events"},
+            fence=(None, batch_id),
         )
 
-    return (
-        events.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _start_sink(events, checkpoint_dir, _fold)
 
 
 def start_gated_ingestion_stream(
@@ -148,7 +158,7 @@ def start_gated_ingestion_stream(
 
     Semantics per batch:
     - clean  → metadata-only publish carrying a PER-STREAM batch-id
-      fence (``stream_fences[app_id]``, Delta's txnAppId shape) in the
+      fence (keyed by ``app_id``, Delta's txnAppId shape) in the
       SAME atomic manifest commit, so a replayed batch (at-least-once
       foreachBatch) is a no-op — exactly-once publishes. ``app_id``
       defaults to the checkpoint path: a different stream (its own
@@ -167,39 +177,28 @@ def start_gated_ingestion_stream(
     The target table must exist (create_table upfront): gating is an
     ingestion policy on an existing contract, not table bootstrap."""
     import json as _json
-    import os
 
-    from data_ingestion_project_spark.operators import txn_table as T
     from data_ingestion_project_spark.operators.wap import audit_staged
 
-    # Normalize the default fence identity: different spellings of the
-    # SAME checkpoint (relative vs absolute, trailing slash) must map to
-    # one fence key, or a restart that spells the path differently would
-    # silently drop the exactly-once replay fence.
-    fence_id = app_id or os.path.abspath(checkpoint_dir)
+    fence_id = _fence_id(app_id, checkpoint_dir)
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def _fold(batch_df: DataFrame, batch_id: int) -> None:
         cur = T.current_version(table_path)
         if cur is None:
             raise ValueError(
                 f"gated ingestion target {table_path!r} does not exist; "
                 "create_table it with the contract schema first"
             )
-        manifest = T._read_manifest(table_path, cur)
-        fences = manifest.get("stream_fences", {})
         # honor both the normalized key and a legacy raw-spelling key
-        # (tables fenced before the abspath normalization)
-        if batch_id <= max(fences.get(fence_id, -1), fences.get(checkpoint_dir, -1)):
+        # (tables fenced before the abspath normalization); a table
+        # written before per-app fences existed answers with its legacy
+        # scalar fence (fence_applied's rule), else the upgrade would
+        # drop replay protection for exactly the in-flight batch
+        if any(
+            T.fence_applied(table_path, (fid, batch_id), cur)
+            for fid in (fence_id, checkpoint_dir)
+        ):
             return  # replayed micro-batch: already published atomically
-        # migration: a pre-per-app table carries only the legacy scalar
-        # fence; honor it until the first new-style publish writes the
-        # map (only one stream could have stamped it — per-app fences
-        # did not exist yet), else the upgrade drops replay protection
-        # for exactly the in-flight batch
-        if not fences and batch_id <= manifest.get("stream_batch_id", -1):
-            return
         rel = T.stage(spark, table_path, batch_df)
         violations, n_rows, staged_schema = audit_staged(spark, table_path, rel, checks)
         if violations:
@@ -218,8 +217,8 @@ def start_gated_ingestion_stream(
             # fence= both records the batch id and enforces it ATOMICALLY
             # inside the commit loop — two zombie executions of the same
             # batch cannot both publish (the loser raises FenceApplied on
-            # its rebase attempt); the manifest read above is only the
-            # cheap skip-before-staging fast path
+            # its rebase attempt); the fence_applied check above is only
+            # the cheap skip-before-staging fast path
             T.publish_staged(
                 spark,
                 table_path,
@@ -230,11 +229,7 @@ def start_gated_ingestion_stream(
         except T.FenceApplied:
             return  # concurrent execution of this batch published first
 
-    return (
-        batches.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _start_sink(batches, checkpoint_dir, _fold)
 
 
 def start_scd2_dimension_stream(
@@ -267,16 +262,13 @@ def start_scd2_dimension_stream(
     open partition, the same proportionality argument as the
     file-pruned MERGE.
     """
-    from data_ingestion_project_spark.operators import txn_table as T
     from data_ingestion_project_spark.operators.scd2 import scd2_apply
 
-    def _sink(batch_df: DataFrame, batch_id: int, max_retries: int = 20) -> None:
-        if batch_df.isEmpty():
-            return
+    def _fold(batch_df: DataFrame, batch_id: int) -> None:
         # bounded retry LOOP (not recursion — sustained contention
         # would otherwise grow the stack until RecursionError kills
         # the streaming query); each attempt re-folds on the new head
-        for _ in range(max_retries):
+        for _ in range(T.FOLD_ATTEMPTS):
             base = T.current_version(table_path)
             if base is None:
                 state = scd2_apply(None, batch_df, key=key, attrs=attrs, ts_col=ts_col)
@@ -293,15 +285,10 @@ def start_scd2_dimension_stream(
             except T.TxnConflict:
                 continue  # concurrent writer: re-fold on the new head
         raise T.TxnConflict(
-            f"scd2 stream sink gave up after {max_retries} contended commits at {table_path}"
+            f"scd2 stream sink gave up after {T.FOLD_ATTEMPTS} contended commits at {table_path}"
         )
 
-    return (
-        updates.writeStream.foreachBatch(_sink)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _start_sink(updates, checkpoint_dir, _fold, output_mode="update")
 
 
 def start_quantile_sketch_stream(
@@ -329,18 +316,15 @@ def start_quantile_sketch_stream(
     touched, not the table."""
     from pyspark.sql import functions as F
 
-    from data_ingestion_project_spark.operators import txn_table as T
     from data_ingestion_project_spark.operators.quantile_sketch import (
         bottomk_sketches,
         merge_bottomk,
     )
 
-    def _sink(batch_df: DataFrame, batch_id: int, max_retries: int = 20) -> None:
-        if batch_df.isEmpty():
-            return
+    def _fold(batch_df: DataFrame, batch_id: int) -> None:
         days = batch_df.withColumn("day", F.date_format(ts_col, "yyyy-MM-dd"))
         batch_sk = bottomk_sketches(days, value_col, ["day"], key_col, k=k)
-        for _ in range(max_retries):
+        for _ in range(T.FOLD_ATTEMPTS):
             base = T.current_version(table_path)
             if base is None:
                 try:
@@ -367,15 +351,10 @@ def start_quantile_sketch_stream(
             except T.TxnConflict:
                 continue  # concurrent writer: re-fold on the new head
         raise T.TxnConflict(
-            f"sketch stream sink gave up after {max_retries} contended commits at {table_path}"
+            f"sketch stream sink gave up after {T.FOLD_ATTEMPTS} contended commits at {table_path}"
         )
 
-    return (
-        values.writeStream.foreachBatch(_sink)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _start_sink(values, checkpoint_dir, _fold, output_mode="update")
 
 
 def start_signature_asset_stream(
@@ -408,17 +387,13 @@ def start_signature_asset_stream(
     explicit app_id, else the checkpoint dir's abspath). Each table
     carries its own fence, so a crash between the two appends replays
     exactly the missing one."""
-    import os
-
     from data_ingestion_project_spark.operators.incremental_dedup import (
         update_signature_assets,
     )
 
-    fence_id = app_id or os.path.abspath(checkpoint_dir)
+    fence_id = _fence_id(app_id, checkpoint_dir)
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def _fold(batch_df: DataFrame, batch_id: int) -> None:
         update_signature_assets(
             spark,
             minhash_path,
@@ -430,12 +405,7 @@ def start_signature_asset_stream(
             fence=(fence_id, batch_id),
         )
 
-    return (
-        docs.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _start_sink(docs, checkpoint_dir, _fold)
 
 
 def start_cms_stream(
@@ -468,15 +438,11 @@ def start_cms_stream(
     j·width + bucket, pinned to the snapshot the fence was read from
     (base_version) so a concurrent writer raises TxnConflict and the
     sink re-reads the fence instead of double-applying."""
-    import os
-
     from data_ingestion_project_spark.operators.cms import update_cms_asset
 
-    fence_id = app_id or os.path.abspath(checkpoint_dir)
+    fence_id = _fence_id(app_id, checkpoint_dir)
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def _fold(batch_df: DataFrame, batch_id: int) -> None:
         update_cms_asset(
             spark,
             table_path,
@@ -487,12 +453,7 @@ def start_cms_stream(
             fence=(fence_id, batch_id),
         )
 
-    return (
-        items.writeStream.foreachBatch(_sink)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _start_sink(items, checkpoint_dir, _fold, output_mode="update")
 
 
 def start_dedup_ingestion_stream(
@@ -525,17 +486,13 @@ def start_dedup_ingestion_stream(
     manifest fence — at-least-once foreachBatch re-executions are
     no-ops per table, and a crash between the appends replays exactly
     the missing one."""
-    import os
-
     from data_ingestion_project_spark.operators.incremental_dedup import (
         ingest_dedup_batch,
     )
 
-    fence_id = app_id or os.path.abspath(checkpoint_dir)
+    fence_id = _fence_id(app_id, checkpoint_dir)
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def _fold(batch_df: DataFrame, batch_id: int) -> None:
         ingest_dedup_batch(
             spark,
             batch_df,
@@ -549,12 +506,7 @@ def start_dedup_ingestion_stream(
             fence=(fence_id, batch_id),
         )
 
-    return (
-        docs.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _start_sink(docs, checkpoint_dir, _fold)
 
 
 def start_forget_stream(
@@ -578,11 +530,9 @@ def start_forget_stream(
     unrepairable crash window — the property the crash-replay pytest
     drives.  ``checkpoint_hook`` is the crash-planting test seam."""
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        from data_ingestion_project_spark.operators.crypto_shred import forget_users
+    from data_ingestion_project_spark.operators.crypto_shred import forget_users
 
+    def _fold(batch_df: DataFrame, batch_id: int) -> None:
         forget_users(
             spark,
             base_dir,
@@ -590,12 +540,7 @@ def start_forget_stream(
             checkpoint_hook=checkpoint_hook,
         )
 
-    return (
-        requests.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _start_sink(requests, checkpoint_dir, _fold)
 
 
 def start_corpus_build_stream(
@@ -625,17 +570,13 @@ def start_corpus_build_stream(
     at-least-once foreachBatch replays exactly the commits a crash
     lost and re-executes none that landed.  ``checkpoint_hook`` is
     the crash-planting test seam; production callers leave it None."""
-    import os
-
     from data_ingestion_project_spark.operators.incremental_dedup import (
         build_corpus_batch,
     )
 
-    fence_id = app_id or os.path.abspath(checkpoint_dir)
+    fence_id = _fence_id(app_id, checkpoint_dir)
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def _fold(batch_df: DataFrame, batch_id: int) -> None:
         build_corpus_batch(
             spark,
             batch_df,
@@ -647,12 +588,7 @@ def start_corpus_build_stream(
             checkpoint_hook=checkpoint_hook,
         )
 
-    return (
-        docs.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _start_sink(docs, checkpoint_dir, _fold)
 
 
 def start_bloom_stream(
@@ -676,12 +612,9 @@ def start_bloom_stream(
     and the append is empty — so at-least-once foreachBatch delivery
     is absorbed by the algebra itself (the quantile/KMV argument),
     where the additive CMS and df folds need their manifest fences."""
-    from data_ingestion_project_spark.operators import txn_table as T
     from data_ingestion_project_spark.operators.bloom import bloom_bits
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def _fold(batch_df: DataFrame, batch_id: int) -> None:
         bits = bloom_bits(batch_df, item_col, m=m, k=k)
         if T.current_version(table_path) is None:
             try:
@@ -694,12 +627,7 @@ def start_bloom_stream(
         if not new_bits.isEmpty():
             T.append(spark, table_path, new_bits)
 
-    return (
-        items.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _start_sink(items, checkpoint_dir, _fold)
 
 
 def start_covariance_stream(
@@ -717,25 +645,16 @@ def start_covariance_stream(
     whitening can be refit at ANY time from KB-sized stored moments —
     never a corpus rescan. Additive cells ⇒ fenced, exactly the CMS
     posture (a replayed batch would double every moment)."""
-    import os
-
     from data_ingestion_project_spark.operators.pca import update_covariance_asset
 
-    fence_id = app_id or os.path.abspath(checkpoint_dir)
+    fence_id = _fence_id(app_id, checkpoint_dir)
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def _fold(batch_df: DataFrame, batch_id: int) -> None:
         update_covariance_asset(
             spark, table_path, batch_df, col=col, dim=dim, fence=(fence_id, batch_id)
         )
 
-    return (
-        embeddings.writeStream.foreachBatch(_sink)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _start_sink(embeddings, checkpoint_dir, _fold, output_mode="update")
 
 
 def start_moments_stream(
@@ -755,15 +674,11 @@ def start_moments_stream(
     stored moments -- never a fact rescan.  Additive cells => fenced,
     the same posture as the CMS and covariance sinks (a replayed batch
     would double every moment)."""
-    import os
-
     from data_ingestion_project_spark.operators.moments import update_moments_asset
 
-    fence_id = app_id or os.path.abspath(checkpoint_dir)
+    fence_id = _fence_id(app_id, checkpoint_dir)
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def _fold(batch_df: DataFrame, batch_id: int) -> None:
         update_moments_asset(
             spark,
             table_path,
@@ -774,9 +689,4 @@ def start_moments_stream(
             fence=(fence_id, batch_id),
         )
 
-    return (
-        events.writeStream.foreachBatch(_sink)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _start_sink(events, checkpoint_dir, _fold, output_mode="update")

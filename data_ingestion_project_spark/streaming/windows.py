@@ -1,4 +1,4 @@
-"""Event-time streaming analytics: watermarked tumbling/sliding/session
+"""Event-time streaming analytics: watermarked tumbling/session
 windows over the events stream — the in-engine operators the rubric
 lists as absent from the reference (SURVEY.md §2 'Streaming').
 
@@ -29,24 +29,6 @@ def tumbling_counts(
             "event_type",
             "n_events",
             "sum_value",
-        )
-    )
-
-
-def sliding_user_activity(
-    events: DataFrame,
-    window: str = "30 minutes",
-    slide: str = "10 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide), F.col("user_id"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            "user_id",
-            "n_events",
         )
     )
 

@@ -334,6 +334,57 @@ def test_equal_frequency_buckets_matches_ntile(spark):
     assert got == want
 
 
+def test_equal_frequency_buckets_multi_matches_chained_and_ntile(spark):
+    """The folded multi-column form == three chained
+    equal_frequency_buckets calls == ntile(k) per column, on columns
+    with heavy ties broken by tiebreak columns (N % k != 0 for every
+    k); a NULL value column raises instead of landing in bucket 1."""
+    import random
+
+    import pytest
+    from pyspark.sql import Window
+
+    from data_ingestion_project_spark.operators.quantiles import (
+        equal_frequency_buckets,
+        equal_frequency_buckets_multi,
+    )
+
+    rng = random.Random(11)
+    rows = [
+        (i, rng.randint(0, 9), rng.randint(0, 3), float(rng.randint(0, 40)))
+        for i in range(203)
+    ]
+    df = spark.createDataFrame(rows, "id long, a long, b long, c double")
+    specs = [
+        ("a", 5, ["id"], "a_bkt"),
+        ("b", 7, ["a", "id"], "b_bkt"),
+        ("c", 4, ["b", "id"], "c_bkt"),
+    ]
+    outs = [oc for *_, oc in specs]
+
+    def assignment(frame):
+        return sorted(tuple(r) for r in frame.select("id", *outs).collect())
+
+    got = assignment(equal_frequency_buckets_multi(df, specs))
+
+    chained = df
+    for vc, k, tb, oc in specs:
+        chained = equal_frequency_buckets(chained, vc, k, tiebreak_cols=tb, out_col=oc)
+    assert got == assignment(chained)
+
+    ntiled = df
+    for vc, k, tb, oc in specs:
+        w = Window.orderBy(F.col(vc).asc(), *[F.col(c).asc() for c in tb])
+        ntiled = ntiled.withColumn(oc, F.ntile(k).over(w))
+    assert got == assignment(ntiled)
+
+    with_null = df.unionByName(
+        spark.createDataFrame([(1000, 1, None, 2.0)], "id long, a long, b long, c double")
+    )
+    with pytest.raises(ValueError, match="'b'"):
+        equal_frequency_buckets_multi(with_null, specs)
+
+
 def test_lsh_ann_recall_floor(spark):
     """Multi-probe LSH must actually find neighbors: recall@10 >= 0.4 on
     the weakly-clustered synthetic corpus (deterministic: fixed seed +

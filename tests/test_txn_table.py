@@ -699,3 +699,75 @@ def test_publish_staged_fence_atomic(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(T, "_try_commit", real)
     assert sorted(r["id"] for r in T.read(spark, path).collect()) == [0, 1]
     assert rel_b not in T._read_manifest(path, T.current_version(path))["data_dirs"]
+
+
+def _cells(spark, pairs):
+    return spark.createDataFrame(pairs, "k long, n long")
+
+
+_ADD = {"n": "t.n + s.n"}
+
+
+def _folded(spark, path):
+    return {r["k"]: r["n"] for r in T.read(spark, path).collect()}
+
+
+def test_fold_merge_lost_create_race(spark, tmp_path, monkeypatch):
+    """fold_merge loses the create race to a winner that recorded a
+    fence: a zombie of the SAME batch must no-op, a NEWER batch must be
+    added exactly once on top of the winner."""
+    real_create = T.create_table
+
+    def racing_create(spark_, p, df, extra=None):
+        # the concurrent winner lands first, recording batch 0...
+        winner = _cells(spark_, [(1, 10), (2, 20)])
+        real_create(spark_, p, winner, extra={"stream_fences": {"s": 0}})
+        # ...so this process's create loses the race
+        raise FileExistsError(p)
+
+    monkeypatch.setattr(T, "create_table", racing_create)
+    same = str(tmp_path / "same")
+    T.fold_merge(spark, same, _cells(spark, [(1, 10), (2, 20)]), "k", _ADD, ("s", 0))
+    assert _folded(spark, same) == {1: 10, 2: 20}  # winner's cells, once
+    assert T.current_version(same) == 0  # no merge commit
+
+    newer = str(tmp_path / "newer")
+    T.fold_merge(spark, newer, _cells(spark, [(1, 1), (3, 3)]), "k", _ADD, ("s", 1))
+    assert _folded(spark, newer) == {1: 11, 2: 20, 3: 3}
+    assert T.fence_applied(newer, ("s", 1)) and not T.fence_applied(newer, ("s", 2))
+
+
+def test_fold_merge_gives_up_under_contention(spark, tmp_path, monkeypatch):
+    """A merge that always meets a concurrent commit makes the fold
+    raise TxnConflict after FOLD_ATTEMPTS attempts, table untouched."""
+    p = str(tmp_path / "t")
+    T.fold_merge(spark, p, _cells(spark, [(1, 1)]), "k", _ADD, ("s", 0))
+    calls = []
+
+    def contended_merge(*args, **kwargs):
+        calls.append(kwargs["base_version"])
+        raise T.TxnConflict("concurrent writer")
+
+    monkeypatch.setattr(T, "merge", contended_merge)
+    with pytest.raises(T.TxnConflict, match="gave up"):
+        T.fold_merge(spark, p, _cells(spark, [(1, 1)]), "k", _ADD, ("s", 1))
+    assert calls == [0] * T.FOLD_ATTEMPTS
+    assert _folded(spark, p) == {1: 1}
+
+
+def test_fence_applied_rule(spark, tmp_path):
+    """Fence id None reads the table-global scalar fence. A named
+    fence reads the per-stream map; on a table written before that map
+    existed, the scalar fence answers for it, until a fenced commit
+    writes the map."""
+    p = str(tmp_path / "t")
+    assert not T.fence_applied(p, ("a", 0))  # no table
+    T.create_table(spark, p, _df(spark, [1]), extra={"stream_batch_id": 3})
+    assert T.fence_applied(p, (None, 3)) and not T.fence_applied(p, (None, 4))
+    assert T.fence_applied(p, ("a", 3)) and not T.fence_applied(p, ("a", 4))
+    assert not T.fence_applied(p, None)
+    T.append(spark, p, _df(spark, [2]), fence=("a", 4))
+    assert T.fence_applied(p, ("a", 4))
+    assert not T.fence_applied(p, ("b", 0))  # the map now answers
+    assert T.fence_applied(p, (None, 3))  # scalar carried forward
+    assert T.fence_applied(p, ("a", 3), version=0)  # snapshot read
