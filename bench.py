@@ -27,10 +27,17 @@ doing) writes to the gitignored ``scratch/BENCH_DRIVER.json`` so a
 contended driver pass can't clobber the committed record; pass
 ``--record`` (or set $SPARK_GRAFT_BENCH_OUT) to write the protocol
 artifact at round end on a quiet machine.
+
+Positional query names (any registered query) time only that subset,
+e.g. ``python bench.py pricing_summary cube_revenue --passes 3`` — the
+optimization loop's measuring stick. A subset never combines with
+``--record`` or ``--cold``, so a partial sweep cannot overwrite a
+committed record. Argument errors exit 2 before Spark starts.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -67,31 +74,50 @@ def _drop_page_cache() -> bool:
         return False
 
 
+def _args() -> argparse.Namespace:
+    p = argparse.ArgumentParser(description="Time the headline query inventory.")
+    p.add_argument("queries", nargs="*", metavar="QUERY",
+                   help="time only these queries (any registered name)")
+    p.add_argument("--passes", type=int,
+                   help="whole-sweep repetitions; the record keeps per-query "
+                        "medians (default $SPARK_GRAFT_BENCH_PASSES, else 1, "
+                        "3 with --record)")
+    p.add_argument("--record", action="store_true",
+                   help="write the committed BENCH_LOCAL.json (quiesced machine only)")
+    p.add_argument("--cold", action="store_true",
+                   help="page-cache-dropped heavy-scan subset -> BENCH_COLD.json")
+    args = p.parse_intermixed_args()
+    if args.passes is not None and args.passes < 1:
+        p.error("--passes must be >= 1")
+    if args.queries and (args.record or args.cold):
+        p.error("--record and --cold time the whole set; a query subset "
+                "must not overwrite their committed records")
+    from data_ingestion_project_spark.queries import all_queries
+
+    unknown = [q for q in args.queries if q not in all_queries()]
+    if unknown:
+        p.error(f"unknown queries: {unknown}")
+    return args
+
+
 def main() -> None:
-    cold = "--cold" in sys.argv[1:]
+    args = _args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
     except ValueError:  # cosmetic field — never abort the bench over it
         sf = None
 
-    from data_ingestion_project_spark.queries import bench_queries, warm_derived_assets
-    from data_ingestion_project_spark.session import build_session
+    from data_ingestion_project_spark.queries import (
+        all_queries,
+        bench_queries,
+        warm_derived_assets,
+    )
+    from tools import harness
 
-    spark = build_session("bench")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = harness.session("bench")
 
-    # Isolate JVM/session warmup (executor spin-up, codegen compiler,
-    # parquet footer caches, OS page cache) from the first timed query
-    # so round-over-round regressions in the heaviest query aren't
-    # masked by a 5-8 s startup tax. The warmup decodes every COLUMN of
-    # every input table once (count() alone reads only footers, leaving
-    # the first lineitem-heavy query to pay the cold column decode).
-    from pyspark.sql import functions as F
-
-    from data_ingestion_project_spark.sources.readers import TABLES, table
-
-    if cold:
+    if args.cold:
         # assets must EXIST (they are pipeline outputs, not scan cost)
         # but the page cache is dropped before each timed query below
         t0 = time.perf_counter()
@@ -106,10 +132,8 @@ def main() -> None:
         for name in COLD_SET:
             spark.catalog.clearCache()
             _drop_page_cache()
-            t0 = time.perf_counter()
-            rows = qs[name](spark, sf_dir).collect()
-            timings[name] = round(time.perf_counter() - t0, 3)
-            print(f"# cold {name}: {timings[name]:.3f}s ({len(rows)} rows)",
+            timings[name], n = harness.time_query(spark, qs[name], sf_dir)
+            print(f"# cold {name}: {timings[name]:.3f}s ({n} rows)",
                   file=sys.stderr)
         total = round(sum(timings.values()), 3)
         result = {
@@ -125,31 +149,21 @@ def main() -> None:
             "SPARK_GRAFT_BENCH_COLD_OUT",
             os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_COLD.json"),
         )
-        with open(out_path, "w") as f:
-            json.dump(result, f, indent=1, sort_keys=True)
-            f.write("\n")
+        harness.write_json(out_path, result)
         print(json.dumps(result))
         return
 
-    t0 = time.perf_counter()
-    for t in TABLES:  # warm EVERY table the queries read — a new table
-        # missing here would re-absorb the cold-decode tax into its
-        # first timed query
-        df = table(spark, sf_dir, t)
-        # count(col) decodes every column regardless of type (max would
-        # reject maps); count(*) would read footers only.
-        df.select([F.count(F.col(c)).alias(c) for c in df.columns]).collect()
-    warmup = round(time.perf_counter() - t0, 3)
+    # Isolate JVM/session warmup (executor spin-up, codegen compiler,
+    # parquet footer caches, OS page cache) from the first timed query
+    # so round-over-round regressions in the heaviest query aren't
+    # masked by a 5-8 s startup tax. Shared derived assets (events
+    # day-layout, winnow fp/pair tables): built once per corpus mtime,
+    # reused by every consumer query and across runs. Built here —
+    # timed separately — so per-query numbers measure the query against
+    # maintained assets (the production posture), not a rebuild of
+    # pipeline outputs.
+    warmup, assets = harness.warm(spark, sf_dir)
     print(f"# warmup (session + table scans): {warmup:.3f}s", file=sys.stderr)
-
-    # Shared derived assets (events day-layout, winnow fp/pair tables):
-    # built once per corpus mtime, reused by every consumer query and
-    # across runs. Built here — timed separately — so per-query numbers
-    # measure the query against maintained assets (the production
-    # posture), not a rebuild of pipeline outputs.
-    t0 = time.perf_counter()
-    warm_derived_assets(spark, sf_dir)
-    assets = round(time.perf_counter() - t0, 3)
     print(f"# derived assets (events layout, winnow fp/pairs): {assets:.3f}s", file=sys.stderr)
 
     # Round-11 protocol (VERDICT r10 ask #7): the committed record is
@@ -164,12 +178,12 @@ def main() -> None:
     # Default 1 pass for ad-hoc/driver runs (time budget), 3 for the
     # committed --record artifact; override with --passes N or
     # $SPARK_GRAFT_BENCH_PASSES.
-    n_passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", 0) or 0)
-    if "--passes" in sys.argv[1:]:
-        n_passes = int(sys.argv[sys.argv.index("--passes") + 1])
+    n_passes = args.passes or int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", 0) or 0)
     if n_passes <= 0:
-        n_passes = 3 if "--record" in sys.argv[1:] else 1
+        n_passes = 3 if args.record else 1
 
+    qs = all_queries()
+    selected = {q: qs[q] for q in args.queries} if args.queries else bench_queries()
     all_passes: dict[str, list[float]] = {}
     # FIXED alphabetical run order, decoupled from the certification
     # rotation in queries/__init__: whichever queries run first absorb
@@ -177,20 +191,13 @@ def main() -> None:
     # order made round-over-round per-query diffs misread reordering
     # as regression (observed r3->r4 on dup_graph_pagerank et al.).
     for p in range(n_passes):
-        for name, fn in sorted(bench_queries().items()):
-            t0 = time.perf_counter()
-            rows = fn(spark, sf_dir).collect()
-            sec = round(time.perf_counter() - t0, 3)
+        for name, fn in sorted(selected.items()):
+            sec, n = harness.time_query(spark, fn, sf_dir)
             all_passes.setdefault(name, []).append(sec)
-            print(f"# pass{p + 1} {name}: {sec:.3f}s ({len(rows)} rows)",
+            print(f"# pass{p + 1} {name}: {sec:.3f}s ({n} rows)",
                   file=sys.stderr)
 
-    def _median(xs: list[float]) -> float:
-        s = sorted(xs)
-        n = len(s)
-        return round(s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2, 3)
-
-    timings = {name: _median(xs) for name, xs in all_passes.items()}
+    timings = {name: harness.median(xs) for name, xs in all_passes.items()}
     spread = {name: round(max(xs) - min(xs), 3) for name, xs in all_passes.items()}
 
     total = round(sum(timings.values()), 3)
@@ -211,9 +218,11 @@ def main() -> None:
     # ~100-query JSON line (BENCH_r02/r03 recorded "parsed": null — the
     # tail kept the END of the big line, chopping its opening brace).
     # Persist the full record to a repo file, print it FIRST, and make
-    # the LAST stdout line a short summary that always fits the tail.
+    # the LAST stdout line a short summary that always fits the tail,
+    # after one line naming the slowest queries (VERDICT r13 #8), so a
+    # truncated tail still shows where the time went.
     repo = os.path.dirname(os.path.abspath(__file__))
-    if "--record" in sys.argv[1:]:
+    if args.record:
         default_out = os.path.join(repo, "BENCH_LOCAL.json")
     else:
         # driver-triggered / ad-hoc run: keep the committed quiesced
@@ -221,10 +230,10 @@ def main() -> None:
         os.makedirs(os.path.join(repo, "scratch"), exist_ok=True)
         default_out = os.path.join(repo, "scratch", "BENCH_DRIVER.json")
     out_path = os.environ.get("SPARK_GRAFT_BENCH_OUT", default_out)
-    with open(out_path, "w") as f:
-        json.dump(result, f, indent=1, sort_keys=True)
-        f.write("\n")
+    harness.write_json(out_path, result)
     print(json.dumps(result))
+    slowest = sorted(timings.items(), key=lambda kv: kv[1], reverse=True)[:25]
+    print(json.dumps({"slowest": dict(slowest)}))
     summary = {
         "metric": result["metric"],
         "value": total,

@@ -37,17 +37,17 @@ they train in-query from a bounded ≤100k driver sample by design
 (operators/similarity.py), so their cost is priced by the query bench.
 
 Usage: python tools/asset_bench.py [out_json] [asset ...]
-Env: SPARK_GRAFT_ASSET_SFS (default "sf1,sf10" under scratch/),
-SPARK_GRAFT_DRIVER_MEM (record states it; default 8g).
+Env: SPARK_GRAFT_ASSET_SFS (default "sf1,sf10"; each label resolves
+through harness.decade_dir), SPARK_GRAFT_DRIVER_MEM (record states it;
+default 8g).
 """
 
 from __future__ import annotations
 
 import json
-import math
 import os
-import subprocess
 import sys
+import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -121,211 +121,91 @@ ASSETS: dict[str, tuple[str, str, tuple[str, ...], str]] = {
     ),
 }
 
-_CHILD = r"""
-import json, os, shutil, sys, time, urllib.request
-sys.path.insert(0, {repo!r})
-from importlib import import_module
-
-from data_ingestion_project_spark.session import build_session
-from data_ingestion_project_spark.sources.readers import table
-from data_ingestion_project_spark.operators.materialize import dataset_tag
-
-name, sf_dir = {name!r}, {sf_dir!r}
-mod_name, fn_name, prefixes, src_table = {spec!r}
-
-abs_dir = os.path.abspath(os.path.normpath(sf_dir))
-tag = dataset_tag(abs_dir)
-warehouse = os.path.join({repo!r}, "spark-warehouse")
-cleared = []
-for p in (prefixes or ()):
-    target = os.path.join(warehouse, p + tag)
-    if os.path.exists(target):
-        shutil.rmtree(target)
-        cleared.append(p + tag)
-
-spark = build_session("assetbench-" + name,
-                      extra_conf={{"spark.ui.enabled": "true",
-                                   "spark.ui.port": "0"}})
-spark.sparkContext.setLogLevel("ERROR")
-src_rows = table(spark, sf_dir, src_table).count()
-
-fn = getattr(import_module(mod_name), fn_name)
-t0 = time.perf_counter()
-result = fn(spark, sf_dir)
-secs = round(time.perf_counter() - t0, 3)
-
-disk_bytes = None
-if isinstance(result, str) and os.path.isdir(result):
-    disk_bytes = 0
-    for root, _dirs, files in os.walk(result):
+def _du(path: str) -> int:
+    total = 0
+    for root, _dirs, files in os.walk(path):
         for f in files:
             try:
-                disk_bytes += os.path.getsize(os.path.join(root, f))
+                total += os.path.getsize(os.path.join(root, f))
             except OSError:
                 pass
-elif prefixes:  # DataFrame-returning builder over a cleared dir
-    target = os.path.join(warehouse, prefixes[0] + tag)
-    if os.path.isdir(target):
-        disk_bytes = 0
-        for root, _dirs, files in os.walk(target):
-            for f in files:
-                try:
-                    disk_bytes += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
-
-def vm_hwm_kb(pid):
-    try:
-        with open(f"/proc/{{pid}}/status") as f:
-            for line in f:
-                if line.startswith("VmHWM:"):
-                    return int(line.split()[1])
-    except OSError:
-        return None
-
-def java_children(pid):
-    out = []
-    for p in os.listdir("/proc"):
-        if not p.isdigit():
-            continue
-        try:
-            with open(f"/proc/{{p}}/stat") as f:
-                parts = f.read().split()
-            if parts[3] == str(pid):
-                with open(f"/proc/{{p}}/cmdline", "rb") as f:
-                    cmd = f.read().decode(errors="replace")
-                if "java" in cmd.split("\x00")[0]:
-                    out.append(int(p))
-                out.extend(java_children(int(p)))
-        except OSError:
-            pass
-    return out
-
-jvms = [p for p in java_children(os.getpid())
-        if "java" in open(f"/proc/{{p}}/cmdline", "rb").read(200).decode(errors="replace")]
-jvm_peak = max((vm_hwm_kb(p) or 0) for p in jvms) if jvms else None
-
-stage_peak = None
-try:
-    base = spark.sparkContext.uiWebUrl
-    apps = json.load(urllib.request.urlopen(base + "/api/v1/applications", timeout=10))
-    app_id = apps[0]["id"]
-    stages = json.load(urllib.request.urlopen(
-        base + f"/api/v1/applications/{{app_id}}/stages?status=complete",
-        timeout=120))
-    stage_peak = max((s.get("peakExecutionMemory") or 0) for s in stages) if stages else 0
-except Exception:
-    stage_peak = None
-
-print("ASSETBENCH " + json.dumps({{
-    "asset": name,
-    "seconds": secs,
-    "src_rows": src_rows,
-    "cleared": cleared,
-    "disk_bytes": disk_bytes,
-    "jvm_peak_gb": round(jvm_peak / 1048576, 2) if jvm_peak else None,
-    "py_peak_gb": round((vm_hwm_kb(os.getpid()) or 0) / 1048576, 2),
-    "max_stage_peak_exec_gb": (
-        round(stage_peak / 2**30, 3) if stage_peak is not None else None),
-}}))
-"""
+    return total
 
 
-def _measure_one(name: str, sf_dir: str) -> dict:
-    spec = ASSETS[name]
-    code = _CHILD.format(repo=REPO, name=name, sf_dir=sf_dir, spec=spec)
-    proc = subprocess.run([sys.executable, "-c", code], capture_output=True, text=True)
-    for line in proc.stdout.splitlines():
-        if line.startswith("ASSETBENCH "):
-            return json.loads(line[11:])
-    return {"asset": name, "error": (proc.stderr or "")[-500:]}
+def measure(spark, name: str, sf_dir: str) -> dict:
+    """Child body (harness.run_child): clear the asset's own warehouse
+    dirs (upstream assets stay), then time its build."""
+    import shutil
+    from importlib import import_module
+
+    from data_ingestion_project_spark.operators.materialize import dataset_tag
+    from data_ingestion_project_spark.sources.readers import table
+
+    mod_name, fn_name, prefixes, src_table = ASSETS[name]
+    tag = dataset_tag(os.path.abspath(os.path.normpath(sf_dir)))
+    warehouse = os.path.join(REPO, "spark-warehouse")
+    cleared = []
+    for p in prefixes:
+        target = os.path.join(warehouse, p + tag)
+        if os.path.exists(target):
+            shutil.rmtree(target)
+            cleared.append(p + tag)
+    src_rows = table(spark, sf_dir, src_table).count()
+
+    fn = getattr(import_module(mod_name), fn_name)
+    t0 = time.perf_counter()
+    result = fn(spark, sf_dir)
+    secs = round(time.perf_counter() - t0, 3)
+
+    if isinstance(result, str) and os.path.isdir(result):
+        out = result
+    else:  # DataFrame-returning builder over a cleared dir
+        out = os.path.join(warehouse, prefixes[0] + tag) if prefixes else None
+    return {
+        "asset": name,
+        "seconds": secs,
+        "src_rows": src_rows,
+        "cleared": cleared,
+        "disk_bytes": _du(out) if out and os.path.isdir(out) else None,
+    }
 
 
 def main() -> None:
+    import harness
+
     args = sys.argv[1:]
     out_path = args[0] if args else os.path.join(REPO, "ASSET_BENCH.json")
     names = tuple(args[1:]) or tuple(ASSETS)
+    unknown = [n for n in names if n not in ASSETS]
+    if unknown:
+        print(f"not in ASSETS: {unknown}", file=sys.stderr)
+        sys.exit(2)
     # labels to MEASURE this run; the record keeps the union with any
     # prior rows so a targeted extension (e.g. SPARK_GRAFT_ASSET_SFS=
     # sf100 for the two heavy builds — VERDICT r11 ask #3) never
     # discards the committed sf1/sf10 decades
     run_labels = os.environ.get("SPARK_GRAFT_ASSET_SFS", "sf1,sf10").split(",")
 
-    records: dict = {}
-    prior_labels: list = []
-    if os.path.exists(out_path):  # resume/merge: keep prior rows
-        try:
-            with open(out_path) as f:
-                prior = json.load(f)
-            records = prior.get("assets", {})
-            prior_labels = prior.get("sf_labels", [])
-        except (json.JSONDecodeError, KeyError):
-            pass
-    sf_labels = list(dict.fromkeys(prior_labels + run_labels))
-    # a label containing "/" is used as a path directly (smoke runs
-    # against /root/testdata/sf0.01); bare labels live under scratch/
-    sf_dirs = {
-        lbl: (lbl if "/" in lbl else os.path.join(REPO, "scratch", lbl))
-        for lbl in sf_labels
-    }
+    def refit(name: str, fam: dict) -> None:
+        ok = harness.measured(fam["per_sf"])
+        got = harness.fit(
+            {lbl: r["src_rows"] for lbl, r in ok.items()},
+            ok,
+            {
+                "seconds": "alpha_time",
+                "max_stage_peak_exec_gb": "beta_stage",
+                "jvm_peak_gb": "beta_jvm",
+                "disk_bytes": "gamma_disk",
+            },
+        )
+        if got:
+            a, b, slopes = got
+            fam.update(fit_span=[a, b], **slopes)
 
-    def _flush() -> None:
-        with open(out_path, "w") as f:
-            json.dump(
-                {
-                    "sf_labels": sf_labels,
-                    "sf_dirs": sf_dirs,
-                    "driver_mem": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
-                    "assets": records,
-                },
-                f,
-                indent=1,
-                sort_keys=True,
-            )
-            f.write("\n")
+    def run(name: str, sf_dir: str) -> dict:
+        return {"asset": name, **harness.run_child("asset_bench.measure", name, sf_dir)}
 
-    def _refit(name: str) -> None:
-        fam = records[name]
-        per_sf = fam["per_sf"]
-        # fit on the smallest and LARGEST measured decades present for
-        # this asset (assets extended to sf100 refit across the full
-        # span; others keep their sf1→sf10 fit)
-        ok = [
-            lbl
-            for lbl in sf_labels
-            if lbl in per_sf
-            and "error" not in per_sf[lbl]
-            and per_sf[lbl].get("src_rows")
-        ]
-        if len(ok) < 2:
-            return
-        ok.sort(key=lambda lbl: per_sf[lbl]["src_rows"])
-        a, b = ok[0], ok[-1]
-        fam["fit_span"] = [a, b]
-        ra, rb = per_sf[a].get("src_rows"), per_sf[b].get("src_rows")
-        if not ra or not rb or rb <= ra:
-            return
-        lr = math.log(rb / ra)
-        fam["rows_ratio"] = round(rb / ra, 3)
-        for key, slope_key in (
-            ("seconds", "alpha_time"),
-            ("max_stage_peak_exec_gb", "beta_stage"),
-            ("jvm_peak_gb", "beta_jvm"),
-            ("disk_bytes", "gamma_disk"),
-        ):
-            va, vb = per_sf[a].get(key), per_sf[b].get(key)
-            if va and vb and va > 0:
-                fam[slope_key] = round(math.log(vb / va) / lr, 3)
-
-    for name in names:
-        rec = records.setdefault(name, {"per_sf": {}})
-        for lbl in run_labels:
-            if lbl in rec["per_sf"] and "error" not in rec["per_sf"][lbl]:
-                continue
-            print(f"== {name} @ {lbl}", file=sys.stderr)
-            rec["per_sf"][lbl] = _measure_one(name, sf_dirs[lbl])
-            _refit(name)
-            _flush()
+    records = harness.sweep(out_path, "assets", run_labels, names, run, refit)
     print(json.dumps({"assets": len(records), "out": out_path}))
 
 

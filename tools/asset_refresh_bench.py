@@ -123,6 +123,7 @@ def main() -> None:
     sf_labels = os.environ.get("SPARK_GRAFT_REFRESH_SFS", "sf1,sf10").split(",")
     batch_rows = int(os.environ.get("SPARK_GRAFT_REFRESH_BATCH_ROWS", "10000"))
 
+    import harness
     from pyspark.sql import functions as F
 
     from data_ingestion_project_spark.functions.text import winnow_fingerprints
@@ -136,15 +137,13 @@ def main() -> None:
         update_inverted_index,
     )
     from data_ingestion_project_spark.operators.moments import update_moments_asset
-    from data_ingestion_project_spark.session import build_session
 
-    spark = build_session("asset-refresh-bench")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = harness.session("asset-refresh-bench")
 
     record: dict = {"batch_rows": batch_rows, "per_sf": {}}
 
     for lbl in sf_labels:
-        sf_dir = lbl if "/" in lbl else os.path.join(_REPO, "scratch", lbl)
+        sf_dir = harness.decade_dir(lbl)
         state = os.path.join(_REPO, "scratch", "refresh_state", lbl.replace("/", "_"))
         if os.path.exists(state):
             shutil.rmtree(state)

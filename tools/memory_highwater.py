@@ -28,7 +28,8 @@ Runs with whatever SPARK_GRAFT_DRIVER_MEM the caller sets (the record
 should state it; 48g matches the committed SCALING.json protocol).
 
 r10: each family is measured at TWO decades (env
-SPARK_GRAFT_MEMHW_SFS, default "sf1,sf10" under scratch/) and the
+SPARK_GRAFT_MEMHW_SFS, default "sf1,sf10"; each label resolves through
+harness.decade_dir and must have rows in SCALING.json) and the
 record carries a per-family MEMORY-vs-rows slope beta =
 log(peak_ratio) / log(rows_ratio) for both the stage execution peak
 (the cluster-executor-relevant number) and the whole-JVM high-water
@@ -42,249 +43,68 @@ from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-_CHILD = r"""
-import json, os, sys, time, urllib.request
-sys.path.insert(0, {repo!r})
-from pyspark.sql import functions as F
-from data_ingestion_project_spark.queries import all_queries, warm_derived_assets
-from data_ingestion_project_spark.session import build_session
-from data_ingestion_project_spark.sources.readers import TABLES, table
 
-name, sf_dir = {name!r}, {sf_dir!r}
-# the engine default disables the UI; the status REST API (the only
-# public reader of per-stage peakExecutionMemory) needs it
-spark = build_session("memhw-" + name,
-                      extra_conf={{"spark.ui.enabled": "true",
-                                   "spark.ui.port": "0"}})
-spark.sparkContext.setLogLevel("ERROR")
-for t in TABLES:
-    df = table(spark, sf_dir, t)
-    df.select([F.count(F.col(c)).alias(c) for c in df.columns]).collect()
-# The sixth-decade families are scan/shuffle-bound and read no
-# materialized asset, so the sf100 pass skips the (hour-scale at 600 M
-# rows) unrelated asset builds — same env knob as remeasure_families.
-# A family that DOES read an asset still builds it lazily on first
-# touch; its row would then price build+query and must be re-measured
-# with assets prebuilt.
-if os.environ.get("SPARK_GRAFT_SKIP_ASSET_WARM") != "1":
-    warm_derived_assets(spark, sf_dir)
+def measure(spark, name: str, sf_dir: str) -> dict:
+    """Child body (harness.run_child): one family against warm tables and
+    prebuilt derived assets, so the peak prices the QUERY, not cold IO.
+    The sixth-decade families are scan/shuffle-bound and read no asset,
+    so an sf100 pass may set SPARK_GRAFT_SKIP_ASSET_WARM=1 (see
+    harness.warm) to skip the hour-scale unrelated asset builds."""
+    import harness
+    from data_ingestion_project_spark.queries import all_queries
 
-fn = all_queries().get(name)
-if fn is None:  # import-gated family (e.g. the Pillow twin)
-    print("MEMHW " + json.dumps({{"family": name, "skipped": "not registered in this env"}}))
-    raise SystemExit(0)
-t0 = time.perf_counter()
-n = len(fn(spark, sf_dir).collect())
-secs = round(time.perf_counter() - t0, 3)
-
-def vm_hwm_kb(pid):
-    try:
-        with open(f"/proc/{{pid}}/status") as f:
-            for line in f:
-                if line.startswith("VmHWM:"):
-                    return int(line.split()[1])
-    except OSError:
-        return None
-
-def java_children(pid):
-    out = []
-    for p in os.listdir("/proc"):
-        if not p.isdigit():
-            continue
-        try:
-            with open(f"/proc/{{p}}/stat") as f:
-                parts = f.read().split()
-            if parts[3] == str(pid):
-                with open(f"/proc/{{p}}/cmdline", "rb") as f:
-                    cmd = f.read().decode(errors="replace")
-                if "java" in cmd.split("\x00")[0]:
-                    out.append(int(p))
-                out.extend(java_children(int(p)))
-        except OSError:
-            pass
-    return out
-
-jvms = [p for p in java_children(os.getpid())
-        if "java" in open(f"/proc/{{p}}/cmdline", "rb").read(200).decode(errors="replace")]
-jvm_peak = max((vm_hwm_kb(p) or 0) for p in jvms) if jvms else None
-
-# largest per-stage execution-memory peak from the status API, plus —
-# r11 — the largest single-TASK peak of that stage (the number an
-# executor budget must actually hold: the stage value is the SUM over
-# all tasks and is partition-count-invariant, so it cannot show a
-# partitioning mitigation; the per-task max can)
-stage_peak = None
-task_peak = None
-try:
-    base = spark.sparkContext.uiWebUrl
-    apps = json.load(urllib.request.urlopen(base + "/api/v1/applications", timeout=10))
-    app_id = apps[0]["id"]
-    stages = json.load(urllib.request.urlopen(
-        base + f"/api/v1/applications/{{app_id}}/stages?status=complete",
-        timeout=120))
-    stage_peak = max((s.get("peakExecutionMemory") or 0) for s in stages) if stages else 0
-    top = sorted(stages, key=lambda s: -(s.get("peakExecutionMemory") or 0))[:3]
-    peaks = []
-    for s in top:
-        try:
-            ts = json.load(urllib.request.urlopen(
-                base + f"/api/v1/applications/{{app_id}}/stages/"
-                       f"{{s['stageId']}}/{{s['attemptId']}}/taskSummary"
-                       "?quantiles=1.0", timeout=60))
-            peaks.append((ts.get("peakExecutionMemory") or [0])[0])
-        except Exception:
-            pass
-    task_peak = max(peaks) if peaks else None
-except Exception as ex:  # UI disabled / field absent: record the gap
-    stage_peak = None
-
-print("MEMHW " + json.dumps({{
-    "family": name,
-    "seconds": secs,
-    "rows": n,
-    "jvm_peak_gb": round(jvm_peak / 1048576, 2) if jvm_peak else None,
-    "py_peak_gb": round((vm_hwm_kb(os.getpid()) or 0) / 1048576, 2),
-    "max_stage_peak_exec_gb": (
-        round(stage_peak / 2**30, 3) if stage_peak is not None else None),
-    "max_task_peak_exec_gb": (
-        round(task_peak / 2**30, 3) if task_peak is not None else None),
-}}))
-"""
-
-
-def _measure_one(name: str, sf_dir: str) -> dict:
-    code = _CHILD.format(repo=REPO, name=name, sf_dir=sf_dir)
-    proc = subprocess.run(
-        [sys.executable, "-c", code], capture_output=True, text=True
-    )
-    for line in proc.stdout.splitlines():
-        if line.startswith("MEMHW "):
-            return json.loads(line[6:])
-    # keep the exception HEADLINES, not just the stack tail — a bare
-    # 500-char tail was all TaskRunner frames with the actual error
-    # type cut off
-    err = proc.stderr or ""
-    heads = [
-        ln.strip()
-        for ln in err.splitlines()
-        if ("Error" in ln or "Exception" in ln) and "at " not in ln[:4]
-    ][:6]
-    return {"family": name, "error": " | ".join(heads)[:1500] or err[-500:]}
+    fn = all_queries().get(name)
+    if fn is None:  # import-gated family (e.g. the Pillow twin)
+        return {"family": name, "skipped": "not registered in this env"}
+    harness.warm(spark, sf_dir)
+    secs, n = harness.time_query(spark, fn, sf_dir)
+    return {"family": name, "seconds": secs, "rows": n}
 
 
 def main() -> None:
-    import math
-
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, REPO)
+    import harness
     from scaling_sweep import HEAVY
 
     args = sys.argv[1:]
     out_path = args[0] if args else os.path.join(REPO, "MEMORY_HIGHWATER.json")
     families = tuple(args[1:]) or tuple(sorted(HEAVY))
     sf_labels = os.environ.get("SPARK_GRAFT_MEMHW_SFS", "sf1,sf10").split(",")
-    sf_dirs = {lbl: os.path.join(REPO, "scratch", lbl) for lbl in sf_labels}
     with open(os.path.join(REPO, "SCALING.json")) as f:
         scaling_rows = json.load(f)["rows"]
+    # the betas divide by SCALING.json's driving rows per decade
+    for lbl in sf_labels:
+        if lbl not in scaling_rows:
+            print(f"decade {lbl!r} has no rows in SCALING.json", file=sys.stderr)
+            sys.exit(2)
 
-    # resume support: a killed sweep keeps everything already written.
-    # r11: a prior record whose labels are a PREFIX of the requested
-    # ones also resumes — that is how the sixth decade (sf100) extends
-    # the committed two-decade record for the ten sf100-timed families
-    # without discarding the other 72 families' rows.
-    records: dict = {}
-    if os.path.exists(out_path):
-        try:
-            with open(out_path) as f:
-                prior = json.load(f)
-            prior_labels = prior.get("sf_labels") or []
-            if prior_labels == sf_labels or prior_labels == sf_labels[: len(prior_labels)]:
-                records = prior.get("families", {})
-        except (json.JSONDecodeError, KeyError):
-            pass
+    def refit(name: str, fam: dict) -> None:
+        # beta is fitted on the LARGEST measured decade pair: a family
+        # extended to sf100 refits on sf10->sf100, the decade where an
+        # asymptotic surprise would OOM a node first
+        drv = fam["driver_table"] = HEAVY.get(name)
+        ok = harness.measured(fam["per_sf"])
+        got = harness.fit(
+            {lbl: scaling_rows[lbl][drv] for lbl in ok} if drv else {},
+            ok,
+            {"max_stage_peak_exec_gb": "beta_stage", "jvm_peak_gb": "beta_jvm"},
+        )
+        if got:
+            a, b, slopes = got
+            fam.update(beta_decade=f"{a}->{b}", **slopes)
 
-    def _flush() -> None:
-        with open(out_path, "w") as f:
-            json.dump(
-                {
-                    "sf_labels": sf_labels,
-                    "sf_dirs": sf_dirs,
-                    "driver_mem": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
-                    "families": records,
-                },
-                f,
-                indent=1,
-                sort_keys=True,
-            )
-            f.write("\n")
-
-    def _refit(name: str) -> None:
-        # beta is fitted on the LARGEST measured adjacent decade (the
-        # scaling_sweep rule): a family measured at sf1+sf10 fits
-        # sf1→sf10; one extended to sf100 re-fits on sf10→sf100 — the
-        # decade where an asymptotic surprise would OOM a node first.
-        fam = records[name]
-        per_sf = fam["per_sf"]
-        ok = [
-            lbl
-            for lbl in sf_labels
-            if lbl in per_sf and "error" not in per_sf[lbl]
-        ]
-        if len(ok) < 2:
-            return
-        a, b = ok[-2], ok[-1]
-        fam["beta_decade"] = f"{a}->{b}"
-        drv = HEAVY.get(name)
-        if (
-            drv
-            and a in per_sf
-            and b in per_sf
-            and "error" not in per_sf[a]
-            and "error" not in per_sf[b]
-        ):
-            rr = scaling_rows[b][drv] / scaling_rows[a][drv]
-            fam["rows_ratio"] = round(rr, 3)
-            for key, beta_key in (
-                ("max_stage_peak_exec_gb", "beta_stage"),
-                ("jvm_peak_gb", "beta_jvm"),
-            ):
-                pa, pb = per_sf[a].get(key), per_sf[b].get(key)
-                if pa and pb and pa > 0 and rr > 1:
-                    fam[beta_key] = round(math.log(pb / pa) / math.log(rr), 3)
+    def run(name: str, sf_dir: str) -> dict:
+        return {"family": name, **harness.run_child(
+            "memory_highwater.measure", name, sf_dir, task_peak=True)}
 
     # VmHWM isolation is per-PROCESS, so a small pool of concurrent
     # child processes keeps peaks valid; only the informational
     # ``seconds`` field gets contended.
-    from concurrent.futures import ThreadPoolExecutor
-    from threading import Lock
-
     par = int(os.environ.get("SPARK_GRAFT_MEMHW_PAR", "2"))
-    lock = Lock()
-    todo = []
-    for name in families:
-        records.setdefault(name, {"per_sf": {}, "driver_table": HEAVY.get(name)})
-        records[name].setdefault("per_sf", {})
-        for lbl in sf_labels:
-            got = records[name]["per_sf"].get(lbl)
-            if not got or "error" in got:
-                todo.append((name, lbl))
-
-    def _run(task) -> None:
-        name, lbl = task
-        rec = _measure_one(name, sf_dirs[lbl])
-        with lock:
-            records[name]["per_sf"][lbl] = rec
-            _refit(name)
-            _flush()
-        print(f"# {lbl} {name}: {json.dumps(rec)}", file=sys.stderr, flush=True)
-
-    with ThreadPoolExecutor(max_workers=par) as pool:
-        list(pool.map(_run, todo))
+    records = harness.sweep(out_path, "families", sf_labels, families, run, refit, par)
     print(json.dumps({"written": out_path, "n": len(records)}))
 
 

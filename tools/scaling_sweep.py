@@ -16,48 +16,37 @@ and the acceptance bound in tests/test_scaling_record.py allows the
 floor's distortion.
 
 Usage:  python tools/scaling_sweep.py [out_json]
-Writes SCALING.json (records + exponents) and prints a markdown table.
-Runtime: ~3 bench passes (one per sf) over the HEAVY set, ~4 min;
-plus the sf1 decade (below) when the derived corpus exists.
+        python tools/scaling_sweep.py [out_json] --patch sf1,sf10 family ...
+Writes out_json (default SCALING.json: records + exponents) and prints
+a markdown table. Runtime: ~3 bench passes (one per sf) over the HEAVY
+set, ~4 min; plus the sf1 decade (below) when the derived corpus exists.
+
+``--patch`` re-measures only the named families at the named decades
+into the existing out_json and refits their exponents: use it when a
+full pass measured a family under ambient load, or after a plan fix,
+so re-measuring the outliers quiesced is a 5-minute patch instead of
+a 60-minute sweep. A decade new to the record (e.g. sf100,
+tools/make_scaled_corpus.py scratch/sf100 1000) has its table rows
+recorded on first sight. Decade labels resolve through
+harness.decade_dir; SPARK_GRAFT_SKIP_ASSET_WARM=1 skips the asset build
+(harness.warm) where every named family reads base tables directly.
 
 Round-7 extension (VERDICT r6 ask #1): when the 10x derived corpus is
 present (tools/make_scaled_corpus.py -> scratch/sf1, override via
 SPARK_GRAFT_SF1_DIR), the sweep adds an sf0.1 -> sf1 measurement for
-the SF1_FAMILIES subset (the heaviest families the verdict named), so
-those exponents are fitted on a decade where per-query work is far
-above the scheduler floor (6M lineitem / 1M events / 50k documents).
+every heavy family, so the exponents are fitted on a decade where
+per-query work is far above the scheduler floor (6M lineitem / 1M
+events / 50k documents); likewise the fifth decade (scratch/sf10,
+SPARK_GRAFT_SF10_DIR, 60M lineitem / 10M events / 500k documents).
 """
 
 from __future__ import annotations
 
 import json
-import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-SFS = ("sf0.001", "sf0.01", "sf0.1")
-
-# families measured on the extra sf0.1 -> sf1 decade (VERDICT r6 ask
-# #1 list): the dedup/pair families, the substring census, CMS, NB
-# train+score, the sketch rollup, ER, and the served BM25 index
-# round 7 second pass: EVERY heavy family measures on the sf1 decade
-# (None = no subset filter); the first pass ran the verdict's named
-# 13 — broadening to all costs ~3 extra minutes and upgrades every
-# alpha from the scheduler-floor decade to a load-bearing one
-SF1_FAMILIES = None
-
-# round 7 closing pass introduced a FIFTH decade (scratch/sf10 — 60 M
-# lineitem / 10 M events / 500 k documents, factor 100 off sf0.1) for
-# the 18 heaviest families; round 8 (VERDICT r7 ask #1) extends it to
-# EVERY heavy family (None = no subset filter), so all exponents fit
-# on a decade where per-query work is far above the scheduler floor —
-# the shuffle-join-heavy stragglers (longest_repeat_extract, the
-# dup-graph iteration families, ER, the winnow family) are exactly
-# where super-linearity hides
-SF10_FAMILIES = None
 
 # query -> driving table (the input whose cardinality the family's
 # cost should track ~linearly under the committed plan shapes)
@@ -212,111 +201,83 @@ HEAVY = {
 
 
 def main() -> None:
-    out_path = sys.argv[1] if len(sys.argv) > 1 else "SCALING.json"
-    base = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
+    import argparse
 
-    from pyspark.sql import functions as F
+    import harness
 
-    from data_ingestion_project_spark.queries import all_queries, warm_derived_assets
-    from data_ingestion_project_spark.session import build_session
-    from data_ingestion_project_spark.sources.readers import TABLES, table
+    p = argparse.ArgumentParser(description="Scaling-curve sweep over HEAVY.")
+    p.add_argument("out_json", nargs="?", default=os.path.join(harness.REPO, "SCALING.json"))
+    p.add_argument("--patch", nargs="+", metavar=("SFS", "FAMILY"),
+                   help="re-measure only these families at these comma-separated "
+                        "decades into the existing out_json")
+    args = p.parse_args()
+    if args.patch:
+        if len(args.patch) < 2:
+            p.error("--patch takes a decade list and at least one family")
+        labels, families = args.patch[0].split(","), args.patch[1:]
+        unknown = [n for n in families if n not in HEAVY]
+        if unknown:
+            p.error(f"not in HEAVY: {unknown}")
+        with open(args.out_json) as f:
+            rec = json.load(f)
+    else:
+        labels, families = list(harness.BASE_SFS), sorted(HEAVY)
+        for sf in ("sf1", "sf10"):
+            if os.path.isdir(harness.decade_dir(sf)):
+                labels.append(sf)
+            else:
+                print(f"# {sf} corpus absent at {harness.decade_dir(sf)}", file=sys.stderr)
+        rec = {"rows": {}, "seconds": {}, "exponents": {}}
 
-    spark = build_session("scaling-sweep")
-    spark.sparkContext.setLogLevel("ERROR")
+    from data_ingestion_project_spark.queries import all_queries
+    from data_ingestion_project_spark.sources.readers import table
+
+    spark = harness.session("scaling-sweep")
     queries = all_queries()
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sf1_dir = os.environ.get(
-        "SPARK_GRAFT_SF1_DIR", os.path.join(repo, "scratch", "sf1")
-    )
-    steps: list[tuple[str, str, frozenset | None]] = [
-        (sf, os.path.join(base, sf), None) for sf in SFS
-    ]
-    if os.path.isdir(sf1_dir):
-        steps.append(("sf1", sf1_dir, SF1_FAMILIES))  # None = all
-    else:
-        print(f"# sf1 corpus absent at {sf1_dir}; 3-step sweep", file=sys.stderr)
-    sf10_dir = os.environ.get(
-        "SPARK_GRAFT_SF10_DIR", os.path.join(repo, "scratch", "sf10")
-    )
-    if os.path.isdir(sf10_dir):
-        steps.append(("sf10", sf10_dir, SF10_FAMILIES))
-    else:
-        print(f"# sf10 corpus absent at {sf10_dir}; no fifth decade", file=sys.stderr)
-
-    rows: dict[str, dict[str, int]] = {}
-    times: dict[str, dict[str, float]] = {q: {} for q in HEAVY}
-    for sf, sf_dir, subset in steps:
-        # same isolation protocol as bench.py: decode every column of
-        # every table once, then build the shared derived assets, so
-        # per-query numbers measure the query, not cold I/O
-        for t in TABLES:
-            df = table(spark, sf_dir, t)
-            df.select([F.count(F.col(c)).alias(c) for c in df.columns]).collect()
-        warm_derived_assets(spark, sf_dir)
-        rows[sf] = {
-            t: table(spark, sf_dir, t).count()
-            for t in {"documents", "events", "lineitem", "supplier",
-                      "embeddings", "orders", "customer"}
-        }
-        for name in sorted(HEAVY):
-            if subset is not None and name not in subset:
-                continue
+    for sf in labels:
+        sf_dir = harness.decade_dir(sf)
+        harness.warm(spark, sf_dir)
+        if sf not in rec["rows"]:
+            rec["rows"][sf] = {t: table(spark, sf_dir, t).count() for t in set(HEAVY.values())}
+        for name in families:
             if name not in queries:  # import-gated (e.g. the Pillow
                 # production twin) — measured only where it registers
                 print(f"# {sf} {name}: not registered in this env; skipped",
                       file=sys.stderr)
                 continue
-            t0 = time.perf_counter()
-            n = len(queries[name](spark, sf_dir).collect())
-            times[name][sf] = round(time.perf_counter() - t0, 3)
-            print(f"# {sf} {name}: {times[name][sf]:.3f}s ({n} rows)", file=sys.stderr)
+            secs, n = harness.time_query(spark, queries[name], sf_dir)
+            rec["seconds"].setdefault(name, {})[sf] = secs
+            print(f"# {sf} {name}: {secs:.3f}s ({n} rows)", file=sys.stderr)
 
-    labels = [sf for sf, _, _ in steps]
-    exponents: dict[str, dict] = {}
-    for name, driver_table in HEAVY.items():
-        # fit on the LAST decade where the driving table actually
-        # grows AND this query was measured on both ends
-        fit_steps = [
-            (a, b)
-            for a, b in zip(labels, labels[1:])
-            if rows[b][driver_table] > rows[a][driver_table]
-            and a in times[name]
-            and b in times[name]
-        ]
-        if not fit_steps:  # never measured in this env (import-gated)
+    for name in families:
+        t = rec["seconds"].get(name, {})
+        drv = HEAVY[name]
+        got = harness.fit(
+            {sf: rec["rows"][sf][drv] for sf in t},
+            {sf: {"seconds": secs} for sf, secs in t.items()},
+            {"seconds": "alpha"},
+        )
+        if not got or "alpha" not in got[2]:
+            print(f"# {name}: <2 growing decades measured, no exponent fit", file=sys.stderr)
             continue
-        a, b = fit_steps[-1]
-        n_ratio = rows[b][driver_table] / rows[a][driver_table]
-        t_ratio = times[name][b] / times[name][a]
-        alpha = math.log(t_ratio) / math.log(n_ratio)
-        exponents[name] = {
-            "driver_table": driver_table,
+        a, b, f = got
+        rec["exponents"][name] = {
+            "driver_table": drv,
             "step": f"{a}->{b}",
-            "rows_ratio": round(n_ratio, 2),
-            "time_ratio": round(t_ratio, 3),
-            "alpha": round(alpha, 3),
+            "rows_ratio": f["rows_ratio"],
+            "time_ratio": round(t[b] / t[a], 3),
+            "alpha": f["alpha"],
         }
+    harness.write_json(args.out_json, rec)
 
-    # drop never-measured families (import-gated in this env) so the
-    # committed record only carries real timings
-    record = {
-        "rows": rows,
-        "seconds": {q: t for q, t in times.items() if t},
-        "exponents": exponents,
-    }
-    with open(out_path, "w") as f:
-        json.dump(record, f, indent=1, sort_keys=True)
-
-    print("| query | driver | " + " | ".join(f"t({sf})" for sf in labels) + " | step | alpha |")
-    print("|---|---|" + "---|" * (len(labels) + 2))
-    for name in sorted(HEAVY):
-        if name not in exponents:
-            continue
-        e = exponents[name]
-        t = times[name]
-        cells = " | ".join(str(t.get(sf, "-")) for sf in labels)
-        print(f"| {name} | {e['driver_table']} | {cells} | {e['step']} | {e['alpha']} |")
+    cols = list(rec["rows"])
+    print("| query | driver | " + " | ".join(f"t({sf})" for sf in cols) + " | step | alpha |")
+    print("|---|---|" + "---|" * (len(cols) + 2))
+    for name in families:
+        if name in rec["exponents"]:
+            e, t = rec["exponents"][name], rec["seconds"][name]
+            cells = " | ".join(str(t.get(sf, "-")) for sf in cols)
+            print(f"| {name} | {e['driver_table']} | {cells} | {e['step']} | {e['alpha']} |")
 
 
 if __name__ == "__main__":

@@ -46,14 +46,13 @@ def main() -> None:
         "SPARK_GRAFT_SF_DIR", os.path.join(repo, "scratch", "sf10")
     )
 
+    import harness
     from pyspark.sql import functions as F
 
     from data_ingestion_project_spark.plans.explain import executed_plan
-    from data_ingestion_project_spark.session import build_session
     from data_ingestion_project_spark.sources.readers import table
 
-    spark = build_session("skew-demo")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = harness.session("skew-demo")
 
     cust = table(spark, sf_dir, "customer")
     orders = table(spark, sf_dir, "orders")
@@ -113,7 +112,7 @@ def main() -> None:
             times.append(round(time.perf_counter() - t0, 3))
         plan = executed_plan(probe().limit(10**9))
         results[label] = {
-            "seconds_median": sorted(times)[1],
+            "seconds_median": harness.median(times),
             "seconds_all": times,
             "skew_marker_in_plan": "skew=true" in plan,
             "n_result_rows": len(rows),
