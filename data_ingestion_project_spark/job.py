@@ -5,7 +5,10 @@ Re-expresses run_ingestion_job (job.py:18-95 in /root/reference) over
 the Spark engine. The metrics dict carries the same keys
 (job.py:73-79): http_status, retries_used, rows_fetched,
 rows_after_dedup, plus the table path (csv_path key name kept for
-contract parity even though the native table is parquet).
+contract parity even though the native table is parquet). The job has
+one persistence path, the single-writer keep-first parquet append; the
+multi-writer transaction-log table (operators/txn_table) is the
+streaming sinks' store, not the job's.
 """
 
 from __future__ import annotations
@@ -29,13 +32,11 @@ def run_ingestion_job(
     users: list[dict[str, Any]] | None = None,
     batch_size: int = 10,
     timeout: int = 15,
-    table_format: str = "parquet",
 ) -> dict[str, Any]:
     """One ingestion run. ``users=None`` fetches from the live API
-    (reference behavior); tests inject a fixture payload instead.
-    ``table_format="txn"`` persists through the transaction-log table
-    (versioned commits + conflict detection) instead of the plain
-    parquet directory swap.
+    (reference behavior); tests inject a fixture payload instead. The
+    batch persists through ``upsert_parquet_table``'s keep-first
+    append (its module doc holds the publish contract).
     """
     http_status: int | None = None
     retries_used: int | None = None
@@ -48,12 +49,7 @@ def run_ingestion_job(
 
     rows_fetched = len(users)  # users_from_json builds one row per payload dict
     df_secure = transform_users(users_from_json(spark, users), keys)
-    if table_format == "txn":
-        from data_ingestion_project_spark.operators.upsert import upsert_txn_table
-
-        _, rows_after_dedup = upsert_txn_table(spark, df_secure, table_path, key=KEY_COLUMN)
-    else:
-        _, rows_after_dedup = upsert_parquet_table(spark, df_secure, table_path, key=KEY_COLUMN)
+    _, rows_after_dedup = upsert_parquet_table(spark, df_secure, table_path, key=KEY_COLUMN)
 
     return {
         "http_status": http_status,
@@ -88,11 +84,6 @@ def main(argv: list[str] | None = None) -> int:
         help="read the user batch from a JSON-lines file instead of the live API",
     )
     parser.add_argument(
-        "--table-format", choices=["parquet", "txn"], default="parquet",
-        help="persistence: plain parquet dir swap (reference parity) or "
-        "the versioned transaction-log table",
-    )
-    parser.add_argument(
         "--env-file", default=None,
         help="optional .env file with PEPPER/FERNET_KEY/BLIND_INDEX_KEY "
         "(reference crypto_utils.py:27 loads BASE_DIR/.env; default: use "
@@ -123,7 +114,6 @@ def main(argv: list[str] | None = None) -> int:
         metrics = run_ingestion_job(
             spark, keys, args.table_path, users=users,
             batch_size=args.batch_size, timeout=args.timeout,
-            table_format=args.table_format,
         )
     except Exception as e:
         print(f"FATAL: ingestion failed: {e}", file=sys.stderr)

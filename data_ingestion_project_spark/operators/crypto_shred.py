@@ -111,10 +111,7 @@ def provision_deks(
         F.col("email_bidx").cast("string"),
         F.lit(created_at).cast("timestamp").alias("created_at"),
     )
-    path = keys_path(base_dir)
-    if txn_table.current_version(path) is None:
-        return txn_table.create_table(spark, path, rows)
-    return txn_table.merge_upsert(spark, path, rows, key="user_id")
+    return txn_table.merge_upsert(spark, keys_path(base_dir), rows, key="user_id")
 
 
 def encrypt_fields(
@@ -228,10 +225,7 @@ def forget_users(
             "tombstones_version": txn_table.current_version(tpath),
             "vacuumed": [],
         }
-    if txn_table.current_version(tpath) is None:
-        tv = txn_table.create_table(spark, tpath, doomed)
-    else:
-        tv = txn_table.merge_upsert(spark, tpath, doomed, key="user_id")
+    tv = txn_table.merge_upsert(spark, tpath, doomed, key="user_id")
     _hook("tombstones")
     res = txn_table.merge(
         spark,

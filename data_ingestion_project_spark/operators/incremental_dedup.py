@@ -18,13 +18,15 @@ guarantees a shared fingerprint). Per batch:
    reaches ``min_shared`` is a near-dup → dropped (containment/
    overlap detection, not just exact identity);
 4. survivors' fingerprints are APPENDED to the index in one atomic
-   txn commit — append-only, so concurrent batch processors rebase
-   cleanly and a crash between filter and append costs only
-   re-processing.  Replay is idempotent: the vs-index join ignores a
-   doc's own fingerprints (doc_ids are globally unique by contract),
-   so a batch replayed after its append reproduces the original
-   accepted set, and already-indexed doc_ids are never re-appended,
-   so the index is left bit-identical.
+   txn commit pinned to the snapshot the pass read
+   (``txn_table.fold``): a concurrent processor's commit makes the
+   pass re-run against the new head, so two processors never accept
+   each other's near-duplicates, and a crash between filter and
+   append costs only re-processing.  Replay is idempotent: the
+   vs-index join ignores a doc's own fingerprints (doc_ids are
+   globally unique by contract), so a batch replayed after its append
+   reproduces the original accepted set, and already-indexed doc_ids
+   are never re-appended, so the index is left bit-identical.
 
 Within-batch duplicates are handled by the same pass with
 drop-any-candidate-with-a-smaller-id semantics (the same rule Spark
@@ -54,35 +56,18 @@ def _fenced_append(
 ) -> None:
     """Append ``rows`` to the txn table at ``path``, creating it if
     absent, guarded by an optional ``(fence_id, batch_id)`` replay
-    fence (Delta txnAppId shape). The fence rides the table's manifest
-    atomically with the data commit AND is enforced inside the commit
-    loop itself (txn_table._commit_retry re-reads the head manifest on
-    every rebase attempt and raises FenceApplied when the batch is
-    already recorded) — so two concurrent executions of the same
-    (fence_id, batch_id), the zombie foreachBatch retry scenario,
-    cannot both land: whichever wins the O_EXCL manifest race records
-    the fence, and the loser's rebase aborts before double-applying.
-    The pre-check below is a cheap fast path for the common
-    already-applied replay (skips writing the data directory), not the
-    correctness mechanism. Shared by the pair-increment log and the
+    fence (Delta txnAppId shape), through :func:`txn_table.fold`. The
+    fence rides the table's manifest atomically with the data commit,
+    and the fold makes a batch its snapshot already records a no-op
+    (skipping the data write). The append also enforces the fence
+    inside the commit loop (txn_table._commit_retry re-reads the head
+    manifest on every rebase attempt), so two concurrent executions of
+    the same (fence_id, batch_id), the zombie foreachBatch retry
+    scenario, cannot both land — also when one of them lost the create
+    race to the other. Shared by the pair-increment log and the
     signature-asset maintenance — any append-maintained asset whose
     rows must not double-apply under foreachBatch re-execution."""
-    if T.fence_applied(path, fence):
-        return  # replayed micro-batch: already applied
-    if T.current_version(path) is None:
-        try:
-            T.create_table(spark, path, rows, extra=T.fence_extra(fence))
-            return
-        except (FileExistsError, T.TxnConflict):
-            # Concurrent creator won — possibly another execution of
-            # THIS SAME (fence_id, batch_id) racing table creation.
-            # Fall through: the fenced append below re-checks the
-            # winner's manifest atomically with its own commit.
-            pass
-    try:
-        T.append(spark, path, rows, fence=fence)
-    except T.FenceApplied:
-        return  # concurrent execution of this batch committed first
+    T.fold(spark, path, lambda: rows, lambda base: T.append(spark, path, rows, fence=fence), fence)
 
 
 def update_signature_assets(
@@ -245,25 +230,6 @@ def dedup_batch_against_index(
     fps = fps.localCheckpoint(eager=True)  # reused 3x below — cut the lineage once
 
     n_batch = batch.count()
-    index_exists = T.current_version(index_path) is not None
-
-    # --- vs the accepted corpus ---------------------------------------
-    dropped_vs_index = spark.createDataFrame([], "doc_id long")
-    idx = T.read(spark, index_path) if index_exists else None
-    if index_exists:
-        shared = (
-            fps.join(idx.withColumnRenamed("doc_id", "__accepted"), "fp")
-            # self-match filter: a batch replayed after a crash that
-            # happened after T.append (but before the caller persisted
-            # `accepted`) finds its OWN fingerprints in the index; without
-            # this it would drop every one of its docs permanently.
-            # doc_ids are globally unique across batches by contract.
-            .filter(F.col("__accepted") != F.col("doc_id"))
-            .groupBy("doc_id", "__accepted")
-            .agg(F.count(F.lit(1)).alias("n_shared"))
-            .filter(F.col("n_shared") >= min_shared)
-        )
-        dropped_vs_index = shared.select("doc_id").distinct()
 
     # --- within the batch ---------------------------------------------
     a = fps.select(F.col("doc_id").alias("__keep"), "fp")
@@ -277,65 +243,80 @@ def dedup_batch_against_index(
         .select(F.col("__cand").alias("doc_id"))
         .distinct()
     )
+    out: dict = {}
 
-    # one materialization carries both the drop set and its provenance,
-    # so the index join never re-executes for the counts. A doc dropped
-    # by BOTH passes counts as an IN-BATCH drop (min, not max): that
-    # classification is replay-stable — after a replayed batch's fps
-    # are in the index, its within-batch dups ALSO match the index, and
-    # vs-index priority would silently migrate their counts between the
-    # two categories across the replay even though `accepted` and the
-    # index are bit-identical.
-    tagged = (
-        dropped_vs_index.select("doc_id", F.lit(1).alias("__vs_index"))
-        .unionByName(in_batch.select("doc_id", F.lit(0).alias("__vs_index")))
-        .groupBy("doc_id")
-        .agg(F.min("__vs_index").alias("__vs_index"))
-        .localCheckpoint(eager=True)
-    )
-    n_dropped_vs_index = tagged.filter(F.col("__vs_index") == 1).count()
-    n_dropped_total = tagged.count()
-    dropped = tagged.select("doc_id")
-    accepted = batch.join(
-        dropped.withColumnRenamed("doc_id", "__dropped_id"),
-        F.col(id_col).cast("long") == F.col("__dropped_id"),
-        "left_anti",
-    )
+    def survivors(idx: DataFrame | None) -> DataFrame:
+        """The pass against index snapshot ``idx`` (None: no index
+        yet): records the accepted docs and counts in ``out`` and
+        returns the fingerprints to append."""
+        # --- vs the accepted corpus -----------------------------------
+        dropped_vs_index = spark.createDataFrame([], "doc_id long")
+        if idx is not None:
+            shared = (
+                fps.join(idx.withColumnRenamed("doc_id", "__accepted"), "fp")
+                # self-match filter: a batch replayed after a crash that
+                # happened after the append (but before the caller
+                # persisted `accepted`) finds its OWN fingerprints in the
+                # index; without this it would drop every one of its docs
+                # permanently. doc_ids are globally unique across batches
+                # by contract.
+                .filter(F.col("__accepted") != F.col("doc_id"))
+                .groupBy("doc_id", "__accepted")
+                .agg(F.count(F.lit(1)).alias("n_shared"))
+                .filter(F.col("n_shared") >= min_shared)
+            )
+            dropped_vs_index = shared.select("doc_id").distinct()
 
-    surviving_fps = fps.join(dropped, "doc_id", "left_anti")
-    if index_exists:
+        # one materialization carries both the drop set and its
+        # provenance, so the index join never re-executes for the
+        # counts. A doc dropped by BOTH passes counts as an IN-BATCH
+        # drop (min, not max): that classification is replay-stable —
+        # after a replayed batch's fps are in the index, its
+        # within-batch dups ALSO match the index, and vs-index priority
+        # would silently migrate their counts between the two
+        # categories across the replay even though `accepted` and the
+        # index are bit-identical.
+        tagged = (
+            dropped_vs_index.select("doc_id", F.lit(1).alias("__vs_index"))
+            .unionByName(in_batch.select("doc_id", F.lit(0).alias("__vs_index")))
+            .groupBy("doc_id")
+            .agg(F.min("__vs_index").alias("__vs_index"))
+            .localCheckpoint(eager=True)
+        )
+        n_dropped_vs_index = tagged.filter(F.col("__vs_index") == 1).count()
+        n_dropped_total = tagged.count()
+        dropped = tagged.select("doc_id")
+        out["accepted"] = batch.join(
+            dropped.withColumnRenamed("doc_id", "__dropped_id"),
+            F.col(id_col).cast("long") == F.col("__dropped_id"),
+            "left_anti",
+        )
+        out["info"] = {
+            "n_batch": n_batch,
+            "n_dropped_vs_index": n_dropped_vs_index,
+            "n_dropped_in_batch": n_dropped_total - n_dropped_vs_index,
+            "n_accepted": n_batch - n_dropped_total,
+        }
+        surviving_fps = fps.join(dropped, "doc_id", "left_anti")
+        if idx is None:
+            return surviving_fps
         # Replay safety: never re-append a doc_id the index already
         # holds, so a replayed batch leaves the index bit-identical
         # instead of duplicating its (fp, doc_id) pairs.
-        surviving_fps = surviving_fps.join(
-            idx.select("doc_id").distinct(), "doc_id", "left_anti"
-        )
-        T.append(spark, index_path, surviving_fps)
-    else:
-        try:
-            T.create_table(spark, index_path, surviving_fps)
-        except (FileExistsError, T.TxnConflict):
-            # First-batch race: another processor created the index
-            # between our existence check and create.  Rebase — re-run
-            # the whole pass against the now-existing index so this
-            # batch is deduplicated against the winner's docs too.
-            return dedup_batch_against_index(
-                spark,
-                index_path,
-                batch,
-                text_col=text_col,
-                id_col=id_col,
-                min_shared=min_shared,
-                k=k,
-                w=w,
-            )
+        return surviving_fps.join(idx.select("doc_id").distinct(), "doc_id", "left_anti")
 
-    return accepted, {
-        "n_batch": n_batch,
-        "n_dropped_vs_index": n_dropped_vs_index,
-        "n_dropped_in_batch": n_dropped_total - n_dropped_vs_index,
-        "n_accepted": n_batch - n_dropped_total,
-    }
+    # a lost create race or a concurrent processor's append re-runs
+    # the pass against the new head, so this batch is deduplicated
+    # against the racer's docs too
+    T.fold(
+        spark,
+        index_path,
+        lambda: survivors(None),
+        lambda base: T.append(
+            spark, index_path, survivors(T.read(spark, index_path, base)), base_version=base
+        ),
+    )
+    return out["accepted"], out["info"]
 
 
 # ------------------------------------------------------------------

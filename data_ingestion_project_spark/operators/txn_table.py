@@ -24,8 +24,9 @@ Protocol (the load-bearing ideas, same as the published Delta design):
   wins; the loser re-reads the log and retries against N+1
   (optimistic concurrency). Appends always merge cleanly; for
   read-modify-write ops (overwrite/merge) the loser's snapshot is
-  stale, so it raises ``TxnConflict`` for the caller to re-run — the
-  same semantics as Delta's ConcurrentModificationException.
+  stale, so it raises ``TxnConflict`` — the same semantics as Delta's
+  ConcurrentModificationException. ``fold`` is the one loop that
+  re-runs a read-modify-write (and a lost create race) on the new head.
   (On S3-like stores this single primitive is replaced by a
   put-if-absent call; everything else is unchanged.)
 - **Snapshot isolation / time travel.** Version resolution happens
@@ -53,6 +54,7 @@ from pyspark.sql.types import StructType
 
 _LOG = "_txnlog"
 _DATA = "data"
+COMMIT_ATTEMPTS = 10  # lost manifest races one commit rebases through
 
 
 class TxnConflict(Exception):
@@ -211,7 +213,6 @@ def _commit_retry(
     op: str,
     new_dirs_fn,
     base_version: int | None,
-    max_retries: int = 10,
     extra: dict | None = None,
     fence: tuple[str, int] | None = None,
 ) -> int:
@@ -237,7 +238,7 @@ def _commit_retry(
     the streaming ``stream_batch_id`` fence, and the ``evolved`` flag.
     Without this, one unrelated append would silently drop the fence —
     and a replayed micro-batch would double-apply."""
-    for _ in range(max_retries):
+    for _ in range(COMMIT_ATTEMPTS):
         vs = _versions(path)
         if not vs:
             raise FileNotFoundError(f"no txn table at {path}")
@@ -284,7 +285,7 @@ def _commit_retry(
         }
         if _try_commit(path, head + 1, manifest):
             return head + 1
-    raise TxnConflict(f"gave up after {max_retries} commit attempts at {path}")
+    raise TxnConflict(f"gave up after {COMMIT_ATTEMPTS} commit attempts at {path}")
 
 
 def _merged_schema(prev_json: str, new_schema: StructType) -> str:
@@ -313,9 +314,13 @@ def append(
     merge_schema: bool = False,
     extra: dict | None = None,
     fence: tuple[str, int] | None = None,
+    base_version: int | None = None,
 ) -> int:
     """Blind append: concurrency-safe without conflicts (set-union of
-    directories commutes, like Delta's AddFile-only commits).
+    directories commutes, like Delta's AddFile-only commits). An append
+    whose rows were DERIVED from a snapshot read (the dedup index's
+    survivors) passes that snapshot's ``base_version`` and gets
+    TxnConflict when another commit landed since, like ``overwrite``.
 
     ``merge_schema=True`` permits an evolved frame (extra columns):
     the committed table schema becomes the union, and snapshot reads
@@ -342,7 +347,7 @@ def append(
         path,
         "append",
         _append_dirs_fn(rel, df.schema, merge_schema),
-        None,
+        base_version,
         extra=merged_extra or None,
         fence=fence,
     )
@@ -490,16 +495,18 @@ def diff_versions(
 
 def merge_upsert(spark: SparkSession, path: str, new_rows: DataFrame, key: str) -> int:
     """Keep-first MERGE (existing wins — reference io_utils.py:34
-    semantics) as a versioned commit: snapshot-read, anti-join, commit
-    the union against the SAME snapshot version. A concurrent commit
-    between read and publish raises TxnConflict instead of silently
-    dropping the other writer's rows."""
+    semantics) as a :func:`fold`: with no table, create it from the
+    in-batch-deduplicated rows; otherwise snapshot-read, anti-join and
+    overwrite the union pinned to that snapshot. A concurrent commit
+    re-runs the fold on the new head instead of dropping the other
+    writer's rows. Returns the committed version."""
     from data_ingestion_project_spark.operators.upsert import upsert_keep_first
 
-    base = current_version(path)
-    existing = read(spark, path, base)
-    merged = upsert_keep_first(existing, new_rows, key)
-    return overwrite(spark, path, merged, base_version=base)
+    def update(base: int) -> int:
+        merged = upsert_keep_first(read(spark, path, base), new_rows, key)
+        return overwrite(spark, path, merged, base_version=base)
+
+    return fold(spark, path, lambda: upsert_keep_first(None, new_rows, key), update)
 
 
 def table_row_count(path: str, version: int | None = None) -> int:
@@ -926,9 +933,51 @@ def merge(
         source.unpersist()
 
 
-# ------------------------------------------------------ additive folds
+# ------------------------------------------------------ the fold loop
 
 FOLD_ATTEMPTS = 20  # contended commits a fold absorbs before giving up
+
+
+def fold(
+    spark: SparkSession,
+    path: str,
+    create,
+    update,
+    fence: tuple[str | None, int] | None = None,
+):
+    """The one optimistic-concurrency loop (the Delta rule): read a
+    snapshot, commit pinned to it, and on a conflict or a lost create
+    race re-read and re-run.
+
+    ``create()`` returns the rows of version 0 when there is no table
+    yet; ``fence=(fence_id, batch_id)`` is stamped on that create.
+    ``update(base)`` builds from snapshot ``base`` and commits pinned
+    to it (``base_version=base``), or blind where the commit is a
+    set-semantics append that rebases on its own. The loop does the
+    rest: a lost create race rebases onto the winner, a fence the
+    snapshot already records (or a :class:`FenceApplied` from
+    ``update``) makes the call a no-op, and a :class:`TxnConflict` from
+    ``update`` re-runs it at the new head. Gives up with TxnConflict
+    after ``FOLD_ATTEMPTS`` contended attempts.
+
+    Returns the create's version (0), what ``update`` returned, or None
+    for a no-op."""
+    for _ in range(FOLD_ATTEMPTS):
+        base = current_version(path)
+        if base is None:
+            try:
+                return create_table(spark, path, create(), extra=fence_extra(fence))
+            except (FileExistsError, TxnConflict):
+                continue  # lost the create race: rebase onto the winner
+        if fence_applied(path, fence, base):
+            return None  # replayed batch: already committed
+        try:
+            return update(base)
+        except FenceApplied:
+            return None  # a concurrent execution of this batch committed first
+        except TxnConflict:
+            continue  # concurrent writer: re-read head and fence
+    raise TxnConflict(f"fold gave up after {FOLD_ATTEMPTS} contended commits at {path}")
 
 
 def fold_merge(
@@ -948,36 +997,17 @@ def fold_merge(
 
     An additive merge is not idempotent, so a replayed batch would
     double-count: ``fence=(fence_id, batch_id)`` rides the same
-    manifest commit as the cells, and a batch the snapshot already
-    records is a no-op. The fence is checked on the snapshot the merge
-    is pinned to (``base_version``), so a concurrent commit raises
-    TxnConflict and the fold re-reads head and fence instead of
-    double-applying. Losing the create race rebases onto the winner the
-    same way: a winner that recorded this batch makes the fold a no-op.
-    Gives up with TxnConflict after ``FOLD_ATTEMPTS`` contended
-    attempts."""
+    manifest commit as the cells, and :func:`fold` makes a batch the
+    snapshot already records a no-op. The merge is pinned to that
+    snapshot, so a concurrent commit re-reads head and fence instead
+    of double-applying."""
     extra = fence_extra(fence)
-    for _ in range(FOLD_ATTEMPTS):
-        base = current_version(path)
-        if base is None:
-            try:
-                create_table(spark, path, rows, extra=extra)
-                return
-            except (FileExistsError, TxnConflict):
-                continue  # lost the create race: rebase onto the winner
-        if fence_applied(path, fence, base):
-            return  # replayed batch: already folded
-        try:
-            merge(
-                spark,
-                path,
-                rows,
-                key=key,
-                update_expr=update_expr,
-                extra=extra,
-                base_version=base,
-            )
-            return
-        except TxnConflict:
-            continue  # concurrent writer: re-read head and fence
-    raise TxnConflict(f"fold gave up after {FOLD_ATTEMPTS} contended commits at {path}")
+    fold(
+        spark,
+        path,
+        lambda: rows,
+        lambda base: merge(
+            spark, path, rows, key=key, update_expr=update_expr, extra=extra, base_version=base
+        ),
+        fence,
+    )

@@ -30,16 +30,22 @@ the table. The publish contract of :func:`upsert_parquet_table`:
   file, so once a publish takes the table past ``MAX_TABLE_FILES``
   files, ``layout.compact_parquet`` rewrites it into ~256 MB files
   through :func:`atomic_dir_swap` — the only step left that rewrites
-  the table, and the only one with the swap's two-rename window.
+  the table, and the only one with the swap's two-rename window. A
+  crash inside that window leaves the table at its ``__old_`` sibling;
+  the next read finds no table there and renames the sibling back
+  (:func:`read_table_if_exists`).
 
 The table is single-writer (the ingestion job is single-flight by the
-run_ingestion.sh lock). Multiple producers need a transactional table
-format, where this step is a metadata commit: ``upsert_txn_table``.
+run_ingestion.sh lock). Multiple producers need the transaction-log
+table (operators/txn_table), whose ``merge_upsert`` applies the same
+keep-first rule with conflict retry — and rewrites the whole table on
+every commit.
 """
 
 from __future__ import annotations
 
 import contextlib
+import glob
 import os
 import shutil
 import uuid as _uuid
@@ -146,9 +152,17 @@ def _check_schema(schema: StructType, footer_schema, path: str) -> None:
 
 def read_table_if_exists(spark: SparkSession, path: str, schema: StructType | None = None) -> DataFrame | None:
     """The table at ``path``, or ``None`` if there is none. A given
-    ``schema`` skips the schema-inference job of a plain read."""
+    ``schema`` skips the schema-inference job of a plain read.
+
+    With nothing at ``path`` and exactly one ``<path>__old_<hex>``
+    sibling, a crash cut :func:`atomic_dir_swap` between its two
+    renames and that sibling is the whole previous table: it is renamed
+    back before reading. The check runs only when ``path`` is missing."""
     if not os.path.exists(path):
-        return None
+        stranded = glob.glob(f"{glob.escape(path)}__old_*")
+        if len(stranded) != 1:
+            return None
+        os.rename(stranded[0], path)
     reader = spark.read if schema is None else spark.read.schema(schema)
     return reader.parquet(path)
 
@@ -188,27 +202,6 @@ def upsert_parquet_table(
 
         compact_parquet(spark, path)
     return spark.read.schema(new_rows.schema).parquet(path), sum(m.num_rows for m in footers) + inserted
-
-
-def upsert_txn_table(
-    spark: SparkSession, new_rows: DataFrame, path: str, key: str
-) -> tuple[DataFrame, int]:
-    """upsert_parquet_table's transactional twin: the same keep-first
-    MERGE committed through the transaction log (operators/txn_table)
-    — versioned commits, no rename window, conflict detection instead
-    of lost updates. The scale path once multiple producers exist."""
-    from data_ingestion_project_spark.operators import txn_table as T
-
-    new_rows = new_rows.cache()
-    new_rows.count()  # materialize through the nondeterministic UDFs
-    if T.current_version(path) is None:
-        T.create_table(spark, path, new_rows.dropDuplicates([key]))
-    else:
-        T.merge_upsert(spark, path, new_rows, key=key)
-    new_rows.unpersist()
-    # footer-metadata count: no second full-table scan just to report
-    # the row count (same posture as upsert_parquet_table's observe)
-    return T.read(spark, path), T.table_row_count(path)
 
 
 def write_csv_parity(df: DataFrame, path: str, columns: tuple[str, ...]) -> None:

@@ -265,27 +265,16 @@ def start_scd2_dimension_stream(
     from data_ingestion_project_spark.operators.scd2 import scd2_apply
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        # bounded retry LOOP (not recursion — sustained contention
-        # would otherwise grow the stack until RecursionError kills
-        # the streaming query); each attempt re-folds on the new head
-        for _ in range(T.FOLD_ATTEMPTS):
-            base = T.current_version(table_path)
-            if base is None:
-                state = scd2_apply(None, batch_df, key=key, attrs=attrs, ts_col=ts_col)
-                try:
-                    T.create_table(spark, table_path, state)
-                    return
-                except (FileExistsError, T.TxnConflict):
-                    continue  # lost the create race: rebase onto the winner
+        def update(base: int) -> int:
             prior = T.read(spark, table_path, base)
-            new_state = scd2_apply(prior, batch_df, key=key, attrs=attrs, ts_col=ts_col)
-            try:
-                T.overwrite(spark, table_path, new_state, base_version=base)
-                return
-            except T.TxnConflict:
-                continue  # concurrent writer: re-fold on the new head
-        raise T.TxnConflict(
-            f"scd2 stream sink gave up after {T.FOLD_ATTEMPTS} contended commits at {table_path}"
+            state = scd2_apply(prior, batch_df, key=key, attrs=attrs, ts_col=ts_col)
+            return T.overwrite(spark, table_path, state, base_version=base)
+
+        T.fold(
+            spark,
+            table_path,
+            lambda: scd2_apply(None, batch_df, key=key, attrs=attrs, ts_col=ts_col),
+            update,
         )
 
     return _start_sink(updates, checkpoint_dir, _fold, output_mode="update")
@@ -324,14 +313,8 @@ def start_quantile_sketch_stream(
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
         days = batch_df.withColumn("day", F.date_format(ts_col, "yyyy-MM-dd"))
         batch_sk = bottomk_sketches(days, value_col, ["day"], key_col, k=k)
-        for _ in range(T.FOLD_ATTEMPTS):
-            base = T.current_version(table_path)
-            if base is None:
-                try:
-                    T.create_table(spark, table_path, batch_sk)
-                    return
-                except (FileExistsError, T.TxnConflict):
-                    continue  # lost the create race: rebase onto the winner
+
+        def update(base: int) -> dict:
             prior = T.read(spark, table_path, base)
             touched = prior.join(batch_sk.select("day"), "day", "left_semi")
             # fold_salts=None: bounded-inputs contract — each day group
@@ -340,19 +323,11 @@ def start_quantile_sketch_stream(
             merged = merge_bottomk(
                 touched.unionByName(batch_sk), ["day"], k=k, fold_salts=None
             )
-            try:
-                # base_version pins the merge to the SAME snapshot the
-                # fold read: a concurrent commit between the read above
-                # and merge's internal head read now raises TxnConflict
-                # (and re-folds) instead of silently replacing the
-                # other writer's overlapping days.
-                T.merge(spark, table_path, merged, key="day", base_version=base)
-                return
-            except T.TxnConflict:
-                continue  # concurrent writer: re-fold on the new head
-        raise T.TxnConflict(
-            f"sketch stream sink gave up after {T.FOLD_ATTEMPTS} contended commits at {table_path}"
-        )
+            # pinned to the snapshot the fold read: a concurrent commit
+            # re-folds instead of replacing the other writer's days
+            return T.merge(spark, table_path, merged, key="day", base_version=base)
+
+        T.fold(spark, table_path, lambda: batch_sk, update)
 
     return _start_sink(values, checkpoint_dir, _fold, output_mode="update")
 
@@ -616,16 +591,16 @@ def start_bloom_stream(
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
         bits = bloom_bits(batch_df, item_col, m=m, k=k)
-        if T.current_version(table_path) is None:
-            try:
-                T.create_table(spark, table_path, bits)
-                return
-            except (FileExistsError, T.TxnConflict):
-                pass  # lost the create race: fall through to delta append
-        existing = T.read(spark, table_path).select("bit")
-        new_bits = bits.join(existing, "bit", "left_anti")
-        if not new_bits.isEmpty():
-            T.append(spark, table_path, new_bits)
+
+        def update(base: int) -> None:
+            # blind append (set semantics): a bit a concurrent batch
+            # also appended leaves every membership answer unchanged
+            existing = T.read(spark, table_path, base).select("bit")
+            new_bits = bits.join(existing, "bit", "left_anti")
+            if not new_bits.isEmpty():
+                T.append(spark, table_path, new_bits)
+
+        T.fold(spark, table_path, lambda: bits, update)
 
     return _start_sink(items, checkpoint_dir, _fold)
 

@@ -89,6 +89,33 @@ def test_first_batch_create_race_rebases(spark, tmp_path, monkeypatch):
     assert info["n_dropped_vs_index"] == 1 and info["n_accepted"] == 1
 
 
+def test_concurrent_processor_append_reruns_the_pass(spark, tmp_path, monkeypatch):
+    """A racer's append lands between this processor's pass and its
+    commit: the commit is pinned to the snapshot the pass read, so it
+    conflicts and the pass re-runs against the racer's docs, dropping
+    the near-duplicate instead of accepting it next to the racer's."""
+    from data_ingestion_project_spark.operators import incremental_dedup as mod
+
+    idx = str(tmp_path / "race_index")
+    dedup_batch_against_index(spark, idx, _docs(spark, [(1, OTHER)]))
+    real_append = mod.T.append
+    raced = []
+
+    def racer_lands_first(*args, **kwargs):
+        if not raced:
+            raced.append(True)
+            dedup_batch_against_index(spark, idx, _docs(spark, [(2, DOC)]))
+        return real_append(*args, **kwargs)
+
+    monkeypatch.setattr(mod.T, "append", racer_lands_first)
+    near = DOC.replace("lazy", "sleepy")
+    acc, info = dedup_batch_against_index(spark, idx, _docs(spark, [(3, near)]))
+    assert acc.count() == 0
+    assert info["n_dropped_vs_index"] == 1 and info["n_accepted"] == 0
+    indexed = {r["doc_id"] for r in mod.T.read(spark, idx).select("doc_id").distinct().collect()}
+    assert indexed == {1, 2}
+
+
 def test_incremental_pair_index_matches_batch_rebuild(spark, tmp_path):
     """The increment-log pair table, maintained batch by batch, must
     equal the full-corpus batch rebuild (posting lists of 2..max_df

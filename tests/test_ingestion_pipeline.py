@@ -189,6 +189,25 @@ def test_failed_swap_write_leaves_no_temp_dir(spark, tmp_path):
     assert _tmp_siblings(path) == []
 
 
+def test_table_stranded_by_a_cut_swap_is_restored(spark, keys, tmp_path, batch1, batch3_half_new):
+    """A crash between atomic_dir_swap's two renames leaves the table
+    only at its ``__old_`` sibling. The next batch restores it and
+    appends to it, instead of publishing a table of that batch alone."""
+    import os
+
+    path = str(tmp_path / "users.parquet")
+    run_ingestion_job(spark, keys, path, users=batch1)
+    os.rename(path, f"{path}__old_0123abcd")  # the swap's first rename, then the crash
+
+    m = run_ingestion_job(spark, keys, path, users=batch3_half_new)
+
+    rows = spark.read.parquet(path).collect()
+    assert m["rows_after_dedup"] == len(rows) == 15
+    assert {r["login.uuid"] for r in rows} == {u["login"]["uuid"] for u in batch1 + batch3_half_new}
+    assert "CHANGED" not in {r["name.last"] for r in rows}  # the seed rows won
+    assert _tmp_siblings(path) == []
+
+
 def test_metrics_dict_contract(spark, keys, tmp_path, batch1):
     """Exact metrics keys of job.py:73-79 (reference)."""
     m = run_ingestion_job(spark, keys, str(tmp_path / "t.parquet"), users=batch1)
