@@ -139,18 +139,6 @@ def cms_point_estimates(
     )
 
 
-def cms_merge(*sketches: DataFrame) -> DataFrame:
-    """Cellwise-additive merge: CMS(A ⊎ B) == merge(CMS(A), CMS(B))
-    EXACTLY (counter addition is associative/commutative) — the
-    identity the rollup rests on, pinned bit-for-bit in pytest.
-    ADDITIVE, not idempotent: callers replaying batches must fence
-    (see module docstring)."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("j", "bucket").agg(F.sum("cnt").alias("cnt"))
-
-
 def update_cms_asset(
     spark,
     table_path: str,

@@ -569,8 +569,8 @@ def md5_minhash_candidates(
     """Banded-MinHash candidate pairs using md5-STRING min-hashing —
     the cross-engine-deterministic variant.
 
-    The production path (minhash_lsh_pairs) hashes with seeded
-    xxhash64 for JVM codegen speed; this variant instead uses
+    The production path (minhash_signatures / minhash_asset_rows)
+    hashes with seeded xxhash64 for JVM codegen speed; this variant instead uses
     ``min(md5(j || ':' || word))`` per permutation j. md5 over
     identical strings yields identical lowercase hex in Spark AND
     DuckDB, and the min of hex strings is a valid min-hash (any
@@ -673,68 +673,6 @@ def minhash_asset_rows(
     )
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_perm: int = 32,
-    bands: int = 8,
-    min_jaccard: float = 0.5,
-    shingle: int | None = None,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Near-dup pairs via banded MinHash LSH, rescored with exact Jaccard.
-
-    Band signature equality → equi-join candidate generation (the LSH
-    step); ONLY the surviving candidate pairs are then rescored with
-    exact word-set Jaccard (array_intersect over per-doc word arrays),
-    so the output threshold is exact, not probabilistic, and the
-    rescore cost is O(|candidates|) — the band join remains the only
-    quadratic-risk step, tunable via (num_perm, bands).
-
-    ``max_bucket_size`` is the 100 TB safety valve on that step: a band
-    bucket holding B docs emits B² candidate pairs, and real corpora
-    always have degenerate buckets (boilerplate, templated pages, tiny
-    shared vocabularies) whose members are near-dups of each other in
-    the UNINTERESTING sense — production LSH dedup pipelines drop
-    oversized buckets rather than pay their quadratic cost (the same
-    posting-list cap functions/text.winnow applies at 50 docs/fp).
-    Recall loss is confined to pairs whose EVERY shared band is
-    oversized; exact/fingerprint dedup upstream already collapses the
-    identical-text clusters that dominate such buckets. Implemented as
-    a count-over-window on the (band, bucket) shuffle the self-join
-    needs anyway — no extra pass over the signatures.
-    """
-    assert num_perm % bands == 0
-    # ONE tokenization pass feeds both the signatures and the exact
-    # rescore's word sets (they must share a vocabulary anyway for the
-    # rescore threshold to mean what the bands selected for);
-    # localCheckpoint materializes it once instead of re-running the
-    # normalize+split+explode pipeline per consumer. NOTE: this ad-hoc
-    # path re-derives both from raw text; the production posture is
-    # minhash_lsh_pairs_from over MAINTAINED signature/word-set assets
-    # (pipeline outputs appended per doc batch — see
-    # queries/documents._minhash_assets), where the corpus-sized
-    # exploded token table never materializes per query.
-    words = tokenized(df, text_col, id_col, shingle=shingle).localCheckpoint(eager=True)
-    mins = [F.min(_hash_band(i)).alias(f"h{i}") for i in range(num_perm)]
-    sig = (
-        words.groupBy(id_col)
-        .agg(*mins)
-        .select(F.col(id_col), F.array(*[f"h{i}" for i in range(num_perm)]).alias("signature"))
-    )
-    word_sets = words.groupBy(id_col).agg(F.collect_set("word").alias("words"))
-    return minhash_lsh_pairs_from(
-        sig,
-        word_sets,
-        id_col=id_col,
-        num_perm=num_perm,
-        bands=bands,
-        min_jaccard=min_jaccard,
-        max_bucket_size=max_bucket_size,
-    )
-
-
 def minhash_band_candidates(
     sig: DataFrame,
     id_col: str = "doc_id",
@@ -799,14 +737,29 @@ def minhash_lsh_pairs_from(
     min_jaccard: float = 0.5,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
-    """``minhash_lsh_pairs`` over PRECOMPUTED inputs: ``sig`` is
-    (id, signature array<long> of length num_perm) from
-    ``minhash_signatures``; ``word_sets`` is (id, words array) sharing
-    the signatures' vocabulary. This is the 100 TB entry point — the
-    signature and word-set tables are maintained pipeline assets
-    (appended per ingested batch, like the winnow fingerprint index in
-    operators/incremental_dedup.py), so a dedup query reads two compact
-    per-doc tables instead of re-exploding the corpus into tokens."""
+    """Near-dup pairs via banded MinHash LSH, rescored with exact
+    Jaccard, over PRECOMPUTED inputs: ``sig`` is (id, signature
+    array<long> of length num_perm) from ``minhash_signatures`` or
+    ``minhash_asset_rows``; ``word_sets`` is (id, words array) sharing
+    the signatures' vocabulary. The signature and word-set tables are
+    maintained pipeline assets (appended per ingested batch, like the
+    winnow fingerprint index in operators/incremental_dedup.py), so a
+    dedup query reads two compact per-doc tables instead of
+    re-exploding the corpus into tokens.
+
+    Band signature equality → equi-join candidates (the LSH step);
+    ONLY the surviving candidate pairs are rescored with exact word-set
+    Jaccard (array_intersect), so the output threshold is exact, not
+    probabilistic, and the rescore costs O(|candidates|).
+
+    ``max_bucket_size`` is the safety valve on the band join: a bucket
+    holding B docs emits B² candidate pairs, and real corpora always
+    have degenerate buckets (boilerplate, templated pages, tiny shared
+    vocabularies) whose members are near-dups only in the
+    UNINTERESTING sense — production LSH dedup drops oversized buckets
+    rather than pay their quadratic cost (the same posting-list cap
+    functions/text.winnow applies at 50 docs/fp). Recall loss is
+    confined to pairs whose EVERY shared band is oversized."""
     candidates = minhash_band_candidates(
         sig, id_col=id_col, num_perm=num_perm, bands=bands, max_bucket_size=max_bucket_size
     )
@@ -879,46 +832,6 @@ def simhash(
     return packed
 
 
-def simhash_near_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    blocks: int = 4,
-    shingle: int | None = None,
-    max_block_size: int | None = None,
-) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance ≤ ``max_hamming``.
-
-    Candidate generation: split the 64-bit hash into ``blocks`` equal
-    blocks; by pigeonhole, a pair is GUARANTEED to share a block only
-    when its Hamming distance is < ``blocks`` — so full recall requires
-    ``max_hamming < blocks`` (enforced below; a larger threshold would
-    silently drop pairs whose differing bits spread across all blocks).
-    Then exact popcount rescoring. No cross join.
-
-    ``max_block_size`` caps degenerate blocks exactly like
-    ``minhash_lsh_pairs``' ``max_bucket_size`` (see that docstring): a
-    block key shared by B docs emits B² candidates, and boilerplate
-    concentrates — measured on the sf0.1 corpus, 28 of ~15 k block
-    keys held >100 docs and one held ~2 000 (≈2 M pairs by itself).
-    Capped recall loss is confined to pairs whose EVERY shared block
-    is oversized — near-identical boilerplate that upstream exact
-    dedup already collapses. Same count-over-window implementation:
-    rides the (blk, key) shuffle the self-join needs anyway.
-    """
-    # no .cache(): the caller cannot unpersist a handle it never sees,
-    # and pinned storage accumulates across calls in long-lived sessions
-    sh = simhash(df, text_col, id_col, shingle=shingle)
-    return simhash_near_pairs_from(
-        sh,
-        id_col=id_col,
-        max_hamming=max_hamming,
-        blocks=blocks,
-        max_block_size=max_block_size,
-    )
-
-
 def simhash_near_pairs_from(
     sh: DataFrame,
     id_col: str = "doc_id",
@@ -926,10 +839,20 @@ def simhash_near_pairs_from(
     blocks: int = 4,
     max_block_size: int | None = None,
 ) -> DataFrame:
-    """``simhash_near_pairs`` over a PRECOMPUTED (id, simhash) table —
-    the maintained-asset entry point (simhashes are per-doc scalars a
+    """Near-dup pairs by SimHash Hamming distance ≤ ``max_hamming``
+    over a PRECOMPUTED (id, simhash) table from :func:`simhash` — the
+    maintained-asset entry point (simhashes are per-doc scalars a
     pipeline appends per batch; re-hashing the corpus per query
-    measures recompute, not the query)."""
+    measures recompute, not the query).
+
+    Candidates: split the 64-bit hash into ``blocks`` equal blocks; by
+    pigeonhole a pair is GUARANTEED to share a block only when its
+    Hamming distance is < ``blocks``, so full recall requires
+    ``max_hamming < blocks`` (enforced). Then exact popcount rescoring.
+    No cross join. ``max_block_size`` caps degenerate blocks like
+    ``minhash_lsh_pairs_from``'s ``max_bucket_size``: on the sf0.1
+    corpus 28 of ~15 k block keys held >100 docs and one held ~2 000
+    (≈2 M pairs by itself)."""
     if max_hamming >= blocks:
         raise ValueError(
             f"max_hamming={max_hamming} >= blocks={blocks}: pigeonhole recall "

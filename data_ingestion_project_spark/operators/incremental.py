@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from data_ingestion_project_spark.operators.txn_table import (
     _read_manifest,
     current_version,
+    reclaim_orphans,
 )
 
 #: aggregate -> (partial over raw rows, merge over partials)
@@ -74,30 +75,6 @@ def _meta_path(state_path: str) -> str:
     return os.path.join(state_path, "_meta.json")
 
 
-def _sweep_orphans(state_path: str, keep: str | None, min_age_seconds: float = 3600.0) -> None:
-    """Reclaim state directories no meta pointer references — the
-    leftovers of a refresh that crashed between the parquet write and
-    the ``os.replace`` publish. Age-guarded like txn_table.vacuum: a
-    fresh unreferenced dir may be an in-flight refresh (refreshes are
-    single-writer by contract, but the guard keeps a mis-deployed
-    second writer from corrupting anything)."""
-    import time
-
-    if not os.path.isdir(state_path):
-        return
-    now = time.time()
-    for name in os.listdir(state_path):
-        full = os.path.join(state_path, name)
-        if name == keep or not os.path.isdir(full):
-            continue
-        try:
-            if now - os.path.getmtime(full) < min_age_seconds:
-                continue
-            shutil.rmtree(full)
-        except OSError:  # raced with another sweep
-            continue
-
-
 def refresh_agg(
     spark: SparkSession,
     table_path: str,
@@ -128,7 +105,12 @@ def refresh_agg(
     if os.path.exists(_meta_path(state_path)):
         with open(_meta_path(state_path), encoding="utf-8") as fh:
             prev_meta = json.load(fh)
-    _sweep_orphans(state_path, keep=prev_meta["state_dir"] if prev_meta else None)
+    # reclaim state dirs no meta pointer references: the leftovers of
+    # a refresh that crashed between the parquet write and the
+    # os.replace publish (the grace window spares a mis-deployed
+    # second writer's in-flight dir)
+    live = prev_meta["state_dir"] if prev_meta else None
+    reclaim_orphans(state_path, lambda name: name != live)
 
     def _read_dirs(rels: list[str]) -> DataFrame:
         if not rels:  # e.g. an all-deletes merge emptied the table

@@ -520,26 +520,6 @@ def read_pair_index(spark: SparkSession, pair_path: str) -> DataFrame:
     )
 
 
-def compact_pair_index(spark: SparkSession, pair_path: str) -> None:
-    """Replace the increment log with its aggregate — one row per
-    surviving pair, delta = current n_shared, zero-sum and retracted
-    pairs dropped. Readers are unaffected (groupBy-sum of the compacted
-    log equals the original view); subsequent batches keep appending
-    increments on top. Run periodically so read cost tracks LIVE pairs,
-    not ingestion history — the same OPTIMIZE posture as the txn
-    table's small-file compaction. The overwrite commits against the
-    snapshot it read, so a concurrent batch append raises TxnConflict
-    instead of being silently folded away; just re-run."""
-    base = T.current_version(pair_path)
-    compacted = (
-        T.read(spark, pair_path, base)
-        .groupBy("id_a", "id_b")
-        .agg(F.sum("delta").alias("delta"))
-        .filter(F.col("delta") != 0)
-    )
-    T.overwrite(spark, pair_path, compacted, base_version=base)
-
-
 def ingest_dedup_batch(
     spark: SparkSession,
     batch_docs: DataFrame,

@@ -25,6 +25,8 @@ import shutil
 import uuid
 from collections.abc import Callable
 
+from data_ingestion_project_spark.operators.txn_table import reclaim_orphans
+
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
@@ -53,25 +55,11 @@ def ensure_materialized(
         return out
     # Reclaim leftovers from crashed earlier runs: a kill inside the
     # swap below can strand a __stale_ copy (or an unrenamed __build_
-    # dir); without this sweep they would leak forever. Same grace
-    # window as txn_table.vacuum: a YOUNG __build_ dir may be a
-    # concurrent in-flight build — deleting it mid-write would corrupt
-    # that run — so only dirs older than an hour are reclaimed.
+    # dir); without this sweep they would leak forever. A YOUNG
+    # __build_ dir may be a concurrent in-flight build, so the sweep
+    # keeps txn_table's grace window.
     parent, base = os.path.split(out)
-    if os.path.isdir(parent):
-        import time as _time
-
-        now = _time.time()
-        for name in os.listdir(parent):
-            if not name.startswith((f"{base}__stale_", f"{base}__build_")):
-                continue
-            leftover = os.path.join(parent, name)
-            try:
-                if now - os.path.getmtime(leftover) < 3600.0:
-                    continue
-            except OSError:  # raced with another sweep
-                continue
-            shutil.rmtree(leftover, ignore_errors=True)
+    reclaim_orphans(parent, lambda name: name.startswith((f"{base}__stale_", f"{base}__build_")))
     tmp = f"{out}__build_{uuid.uuid4().hex[:12]}"
     try:
         build_fn(tmp)

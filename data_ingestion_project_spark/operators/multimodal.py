@@ -808,20 +808,3 @@ def frame_sample(
         "media_id", "kind", "payload", F.col("meta.duration_ms").alias("duration_ms")
     )
     return flat.mapInPandas(_sample, schema=out_schema)
-
-
-def media_summary(media: DataFrame) -> DataFrame:
-    """Metadata-only aggregate — reads kind + meta, never the payload
-    bytes, so the parquet scan prunes the heavy column entirely
-    (verify with plans.scan_info: payload absent from ReadSchema).
-    Byte sizes belong in a metadata column at write time for exactly
-    this reason."""
-    return (
-        media.groupBy("kind")
-        .agg(
-            F.count(F.lit(1)).alias("n_media"),
-            F.avg("meta.width").alias("avg_width"),
-            F.max("meta.duration_ms").alias("max_duration_ms"),
-        )
-        .orderBy("kind")
-    )

@@ -43,8 +43,15 @@ def _scored(
     count_col: str,
     train_pred: Column | None,
 ) -> DataFrame:
-    """Shared train+score plumbing: per-(test doc, candidate label)
-    integer-quantized log-likelihood + prior ("score")."""
+    """Shared train+score plumbing: train on the rows where
+    ``train_pred`` holds (default: even ids), score the rest, and
+    return per-(test doc, candidate label) integer-quantized
+    log-likelihood + prior ("score").
+
+    ``counts`` is the per-(doc, label, word) term-frequency frame —
+    typically a materialized asset; queries/documents materializes the
+    returned score frame once (the nb_scores asset) and every NB
+    consumer reads it through a ``*_from_scored`` function below."""
     if train_pred is None:
         train_pred = F.col(id_col) % 2 == 0
     train = counts.filter(train_pred)
@@ -101,31 +108,12 @@ def _scored(
     return scored
 
 
-def nb_confusion(
-    counts: DataFrame,
-    id_col: str = "doc_id",
-    label_col: str = "lang",
-    word_col: str = "word",
-    count_col: str = "c",
-    train_pred: Column | None = None,
-) -> DataFrame:
-    """Train on the rows where ``train_pred`` holds (default: even
-    ids), score the rest, return the (true_label, pred_label, n_docs)
-    confusion matrix ordered by both labels.
-
-    ``counts`` is the per-(doc, label, word) term-frequency frame —
-    typically a materialized asset; see queries/documents.
-    """
-    scored = _scored(counts, id_col, label_col, word_col, count_col, train_pred)
-    return confusion_from_scored(scored, id_col=id_col, label_col=label_col)
-
-
 def confusion_from_scored(
     scored: DataFrame, id_col: str = "doc_id", label_col: str = "lang"
 ) -> DataFrame:
-    """Confusion matrix from an already-computed (or materialized —
-    the r12 nb_scores asset) per-(test doc, candidate label) score
-    frame.  The argmax is a partial-aggregable ``min_by`` over
+    """The (true_label, pred_label, n_docs) confusion matrix, ordered
+    by both labels, from a :func:`_scored` frame (or the materialized
+    nb_scores asset).  The argmax is a partial-aggregable ``min_by`` over
     (−score, m_label) — identical tie-break to the oracle's
     ROW_NUMBER(ORDER BY score DESC, m_lang ASC) but ONE map-side-
     combinable shuffle instead of a partitioned window sort."""
@@ -145,36 +133,19 @@ def confusion_from_scored(
     )
 
 
-def nb_ovr_scores(
-    counts: DataFrame,
-    positive_label: str,
-    id_col: str = "doc_id",
-    label_col: str = "lang",
-    word_col: str = "word",
-    count_col: str = "c",
-    train_pred: Column | None = None,
-) -> DataFrame:
-    """One-vs-rest decision statistic per test doc for ROC analysis:
-    ``stat = score(positive_label) − max over other labels' score`` —
-    the margin by which the classifier prefers (or rejects) the
-    positive class, in EXACT integer 1e-4-nat units (differences of
-    the quantized-logit sums; no softmax).  Returns
-    (id, is_pos, stat) where ``is_pos`` flags the TRUE label.
-
-    Same train/score plumbing as :func:`nb_confusion`; the extra work
-    is one per-doc max over the label-cardinality score frame."""
-    scored = _scored(counts, id_col, label_col, word_col, count_col, train_pred)
-    return ovr_from_scored(scored, positive_label, id_col=id_col, label_col=label_col)
-
-
 def ovr_from_scored(
     scored: DataFrame,
     positive_label: str,
     id_col: str = "doc_id",
     label_col: str = "lang",
 ) -> DataFrame:
-    """One-vs-rest decision statistic from an already-computed (or
-    materialized) score frame — see :func:`nb_ovr_scores`."""
+    """One-vs-rest decision statistic per test doc for ROC analysis,
+    from a :func:`_scored` frame: ``stat = score(positive_label) − max
+    over other labels' score`` — the margin by which the classifier
+    prefers (or rejects) the positive class, in EXACT integer
+    1e-4-nat units (differences of the quantized-logit sums; no
+    softmax). Returns (id, is_pos, stat) where ``is_pos`` flags the
+    TRUE label."""
     pos = scored.filter(F.col("m_label") == positive_label).select(
         id_col,
         (F.col(label_col) == positive_label).cast("int").alias("is_pos"),
@@ -190,33 +161,16 @@ def ovr_from_scored(
     )
 
 
-def nb_margins(
-    counts: DataFrame,
-    id_col: str = "doc_id",
-    label_col: str = "lang",
-    word_col: str = "word",
-    count_col: str = "c",
-    train_pred: Column | None = None,
-) -> DataFrame:
-    """Per-test-doc decision MARGIN: winning score minus runner-up —
-    the classifier's confidence in EXACT integer 1e-4-nat units (the
-    scores are already quantized-logit sums, so the margin is a plain
-    BIGINT difference; no softmax/exp ever enters, which keeps the
-    whole calibration surface cross-engine exact).
-
-    Same train/score plumbing as :func:`nb_confusion` (shared
-    ``_scored``); one extra window rank over the per-doc
-    label-cardinality frames.  Returns (id, true_label, pred_label,
-    margin_i, correct)."""
-    scored = _scored(counts, id_col, label_col, word_col, count_col, train_pred)
-    return margins_from_scored(scored, id_col=id_col, label_col=label_col)
-
-
 def margins_from_scored(
     scored: DataFrame, id_col: str = "doc_id", label_col: str = "lang"
 ) -> DataFrame:
-    """Decision margins from an already-computed (or materialized)
-    score frame — see :func:`nb_margins`."""
+    """Per-test-doc decision MARGIN from a :func:`_scored` frame:
+    winning score minus runner-up — the classifier's confidence in
+    EXACT integer 1e-4-nat units (a plain BIGINT difference; no
+    softmax/exp ever enters, which keeps the whole calibration surface
+    cross-engine exact). One window rank over the per-doc
+    label-cardinality frames. Returns (id, true_label, pred_label,
+    margin_i, correct)."""
     from pyspark.sql.window import Window
 
     win = Window.partitionBy(id_col).orderBy(

@@ -232,63 +232,6 @@ def lsh_bucket(corpus: DataFrame, planes: list[list[float]], vec_col: str = "emb
     return corpus.withColumn("bucket", random_projection_signature(vec_col, planes))
 
 
-def bucket_topk_pairs_grouped(
-    corpus: DataFrame,
-    n_planes: int = 6,
-    seed: int = 42,
-    k_per_bucket: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Per-LSH-bucket exact top-k pairs via grouped-map applyInPandas.
-
-    The grouped-map flavor of the UDF surface, used where it genuinely
-    wins: within a bucket, all-pairs cosine is one numpy matmul over an
-    Arrow-delivered batch — for buckets of hundreds/thousands of
-    vectors this beats per-pair JVM HOF evaluation by the usual BLAS
-    margin, while the bucketing keeps the global problem linear. One
-    shuffle (groupBy bucket); each group never leaves its executor.
-    """
-    import pandas as pd
-
-    id_type = dict(corpus.dtypes).get(id_col, "")
-    if id_type not in ("bigint", "int", "smallint", "tinyint"):
-        raise ValueError(f"bucket_topk_pairs_grouped requires an integral id column, got {id_type!r}")
-    first = corpus.select(vec_col).first()
-    if first is None or first[0] is None:
-        return corpus.sparkSession.createDataFrame(
-            [], "bucket string, id_a long, id_b long, sim double"
-        )
-    planes = make_planes(len(first[0]), n_planes, seed)
-    bucketed = lsh_bucket(corpus, planes, vec_col)
-
-    def _topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) < 2:
-            return pd.DataFrame(columns=["bucket", "id_a", "id_b", "sim"])
-        mat = np.stack(pdf[vec_col].map(np.asarray).to_numpy()).astype(float)
-        norms = np.linalg.norm(mat, axis=1, keepdims=True)
-        unit = mat / np.clip(norms, 1e-12, None)
-        sims = unit @ unit.T
-        ids = pdf[id_col].to_numpy()
-        iu = np.triu_indices(len(ids), k=1)
-        tri = sims[iu]  # extract the O(n^2) triangle ONCE
-        order = np.argsort(-tri, kind="stable")[:k_per_bucket]
-        rows = [
-            {
-                "bucket": pdf["bucket"].iloc[0],
-                "id_a": int(min(ids[iu[0][j]], ids[iu[1][j]])),
-                "id_b": int(max(ids[iu[0][j]], ids[iu[1][j]])),
-                "sim": float(tri[j]),
-            }
-            for j in order
-        ]
-        return pd.DataFrame(rows)
-
-    return bucketed.groupBy("bucket").applyInPandas(
-        _topk, schema="bucket string, id_a long, id_b long, sim double"
-    )
-
-
 def ivf_centroids(
     corpus: DataFrame,
     n_centroids: int = 16,

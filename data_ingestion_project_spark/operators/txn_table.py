@@ -47,6 +47,7 @@ import os
 import shutil
 import time
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -509,30 +510,48 @@ def merge_upsert(spark: SparkSession, path: str, new_rows: DataFrame, key: str) 
     return fold(spark, path, lambda: upsert_keep_first(None, new_rows, key), update)
 
 
-def table_row_count(path: str, version: int | None = None) -> int:
-    """Exact row count of a snapshot from parquet FOOTER metadata only
-    — a driver-side walk over the manifest's files, no Spark job and no
-    data pages. The cheap answer to 'how many rows after the commit'
-    (a ``df.count()`` would rescan the whole table)."""
-    import pyarrow.parquet as pq
-
-    v = current_version(path) if version is None else version
-    if v is None:
-        raise FileNotFoundError(f"no txn table at {path}")
-    total = 0
-    for rel in _read_manifest(path, v)["data_dirs"]:
-        d = os.path.join(path, rel)
-        for name in os.listdir(d):
-            if name.endswith(".parquet"):
-                total += pq.ParquetFile(os.path.join(d, name)).metadata.num_rows
-    return total
-
-
 def history(path: str) -> list[dict]:
     return [_read_manifest(path, v) for v in _versions(path)]
 
 
-def vacuum(path: str, keep_versions: int = 1, min_age_seconds: float = 3600.0) -> list[str]:
+#: Delta-VACUUM grace window shared by every orphan sweep: an
+#: unreferenced directory younger than this is indistinguishable from
+#: an in-flight writer's output, so no sweep reclaims it.
+ORPHAN_GRACE_SECONDS = 3600.0
+
+
+def reclaim_orphans(
+    root: str,
+    is_orphan: Callable[[str], bool],
+    min_age_seconds: float = ORPHAN_GRACE_SECONDS,
+) -> list[str]:
+    """Delete the directories directly under ``root`` whose name
+    ``is_orphan`` selects and whose mtime is at least
+    ``min_age_seconds`` old; return their names. An entry another
+    sweep removes first is skipped, not an error. The one orphan rule
+    behind ``vacuum``, ``materialize.ensure_materialized`` and
+    ``incremental.refresh_agg``."""
+    if not os.path.isdir(root):
+        return []
+    removed = []
+    now = time.time()
+    for name in os.listdir(root):
+        full = os.path.join(root, name)
+        if not is_orphan(name) or not os.path.isdir(full):
+            continue
+        try:
+            if now - os.path.getmtime(full) < min_age_seconds:
+                continue  # possible in-flight writer — not yet an orphan
+            shutil.rmtree(full)
+        except OSError:  # raced with another sweep
+            continue
+        removed.append(name)
+    return removed
+
+
+def vacuum(
+    path: str, keep_versions: int = 1, min_age_seconds: float = ORPHAN_GRACE_SECONDS
+) -> list[str]:
     """Reclaim space: drop manifests older than the newest
     ``keep_versions`` and delete data directories no retained manifest
     references (including orphans from crashed commits). Returns the
@@ -552,23 +571,12 @@ def vacuum(path: str, keep_versions: int = 1, min_age_seconds: float = 3600.0) -
         if v not in keep:
             os.remove(_manifest_path(path, v))
     referenced = {rel for v in keep for rel in _read_manifest(path, v)["data_dirs"]}
-    removed = []
-    now = time.time()
-    data_root = os.path.join(path, _DATA)
-    for name in os.listdir(data_root) if os.path.isdir(data_root) else []:
-        rel = os.path.join(_DATA, name)
-        full = os.path.join(path, rel)
-        if rel in referenced:
-            continue
-        try:
-            age = now - os.path.getmtime(full)
-        except OSError:  # raced with another vacuum
-            continue
-        if age < min_age_seconds:
-            continue  # possible in-flight commit — not yet an orphan
-        shutil.rmtree(full)
-        removed.append(rel)
-    return removed
+    orphans = reclaim_orphans(
+        os.path.join(path, _DATA),
+        lambda name: os.path.join(_DATA, name) not in referenced,
+        min_age_seconds,
+    )
+    return [os.path.join(_DATA, name) for name in orphans]
 
 
 def _dir_bytes(path: str, rel: str) -> int:

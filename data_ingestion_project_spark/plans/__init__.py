@@ -1,7 +1,6 @@
 """Plan inspection helpers (the ".explain and iterate" loop)."""
 
 from data_ingestion_project_spark.plans.explain import (  # noqa: F401
-    codegen_stage_count,
     executed_plan,
     formatted_plan,
     plan_census,

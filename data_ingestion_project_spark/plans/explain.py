@@ -29,12 +29,6 @@ def executed_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def codegen_stage_count(df: DataFrame) -> int:
-    """Number of WholeStageCodegen stages in the executed plan
-    (rendered as ``*(N)`` markers in the plan string)."""
-    return len(set(re.findall(r"\*\((\d+)\)", executed_plan(df))))
-
-
 def plan_census(df: DataFrame) -> dict[str, object]:
     plan = formatted_plan(df)
 

@@ -131,7 +131,7 @@ def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # re-certifies them on planted non-degenerate structure.
 # minhash/simhash_near_dups have been in since round 3: bounded
 # rescored top-200 with an oversized-bucket cap
-# (operators/dedup.minhash_lsh_pairs max_bucket_size), which cut the
+# (operators/dedup.minhash_lsh_pairs_from max_bucket_size), which cut the
 # MinHash query 130 s → ~10 s at sf0.1 by refusing degenerate buckets'
 # quadratic candidate sets.
 EXCLUDE_FROM_BENCH = frozenset(

@@ -1589,10 +1589,10 @@ def sketch_rollup_dau(spark: SparkSession, sf_dir: str) -> DataFrame:
     design for distinct counts: registers are computed once at ingest
     (one partial-agg shuffle bounded by days x 1024 rows), any
     date-range distinct query is a register MAX over stored KB-sized
-    state, zero fact-table rescan. Unlike the binary Datasketches
-    variant (kept as _datasketches_dau_rollup, accuracy-pinned in
-    pytest), every stage here — integer bit-length rho, exact int64
-    harmonic fold, ln-quantized linear counting — replays as ANSI SQL,
+    state, zero fact-table rescan. Unlike a binary Datasketches HLL
+    (hll_sketch_agg: opaque bytes no other engine can replay), every
+    stage here — integer bit-length rho, exact int64 harmonic fold,
+    ln-quantized linear counting — replays as ANSI SQL,
     so the driver certifies the whole rollup VALUE-EXACTLY; the ~3%
     accuracy floor vs exact DAU is pinned in pytest."""
     from data_ingestion_project_spark.operators.hll import (
@@ -1612,27 +1612,6 @@ def sketch_rollup_dau(spark: SparkSession, sf_dir: str) -> DataFrame:
         "day", F.lit("TOTAL")
     )
     total = hll_estimate(tregs, ["day"])
-    return per_day.unionByName(total).orderBy("day")
-
-
-def _datasketches_dau_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The binary Datasketches twin of sketch_rollup_dau: one
-    hll_sketch_agg blob per day, hll_union_agg for the period total.
-    Production-grade (compact bytes, constant-time union) but opaque —
-    no other engine can replay the sketch, so it lives as a
-    pytest-pinned helper (exact in sparse mode at tiny cardinality;
-    see test_sketch_rollup_dau_pinned_point_estimates) while the
-    portable register implementation carries the driver oracle."""
-    e = table(spark, sf_dir, "events")
-    daily = e.groupBy(F.date_format("ts", "yyyy-MM-dd").alias("day")).agg(
-        F.hll_sketch_agg("user_id").alias("sk")
-    )
-    per_day = daily.select(
-        "day", F.hll_sketch_estimate("sk").alias("est_users")
-    )
-    total = daily.agg(
-        F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("est_users")
-    ).select(F.lit("TOTAL").alias("day"), "est_users")
     return per_day.unionByName(total).orderBy("day")
 
 
@@ -2312,39 +2291,6 @@ ORDER BY week_start
 """
 
 
-def theta_weekly_retention_datasketches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Datasketches-binary twin of ``theta_weekly_retention`` —
-    the production variant where native sketch registers beat the
-    portable md5 arithmetic: theta_sketch_agg per week, then
-    theta_intersection / theta_difference per adjacent pair.
-    Approximate by construction (not driver-declared); pinned in
-    pytest against the portable query and the exact set algebra."""
-    e = table(spark, sf_dir, "events")
-    weekly = e.groupBy(F.date_trunc("week", "ts").alias("wk")).agg(
-        F.theta_sketch_agg("user_id").alias("sk")
-    )
-    nxt = weekly.select(
-        (F.col("wk") - F.expr("INTERVAL 7 DAYS")).alias("wk"),
-        F.col("sk").alias("sk_next"),
-    )
-    return (
-        weekly.join(nxt, "wk")
-        .select(
-            F.date_format("wk", "yyyy-MM-dd").alias("week_start"),
-            F.theta_sketch_estimate(
-                F.theta_intersection(F.col("sk"), F.col("sk_next"))
-            ).alias("est_retained_next_week"),
-            F.theta_sketch_estimate(
-                F.theta_difference(F.col("sk"), F.col("sk_next"))
-            ).alias("est_churned_next_week"),
-            F.theta_sketch_estimate(
-                F.theta_difference(F.col("sk_next"), F.col("sk"))
-            ).alias("est_new_next_week"),
-        )
-        .orderBy("week_start")
-    )
-
-
 def approx_order_price_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """approx_percentile: fixed-size mergeable summaries instead of the
     per-group sort of exact percentile — constant memory per group at
@@ -2781,7 +2727,6 @@ FROM classes CROSS JOIN ks
 GROUP BY k
 ORDER BY k
 """
-
 
 
 def _shred_state_path(spark: SparkSession, sf_dir: str) -> str:

@@ -2313,8 +2313,8 @@ def minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates → exact-Jaccard rescore → bounded TakeOrdered (VERDICT
     r2 #4 — a dedup QUERY should return the ranked worst offenders, not
     the raw candidate firehose; the unbounded pair stream is an
-    operator stage, operators/dedup.minhash_lsh_pairs, feeding the
-    cluster pass). Deterministic total order (jaccard desc, id
+    operator stage, operators/dedup.minhash_lsh_pairs_from, feeding
+    the cluster pass). Deterministic total order (jaccard desc, id
     tiebreak) so the rows-only check is stable. Approximate candidate
     generation → rows-only (no oracle); recall floor pinned in pytest
     against exact Jaccard ground truth. Served from the MAINTAINED
@@ -4686,7 +4686,7 @@ def nb_margin_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     reliability curve behind every "keep if classifier is confident"
     filtering rule, computed WITHOUT softmax or exp: margins are exact
     BIGINT differences of the integer-quantized logit sums
-    (operators/nb.nb_margins), so the whole curve replays value-
+    (operators/nb.margins_from_scored), so the whole curve replays value-
     exactly in DuckDB.
 
     Plan (r12): reads the materialized nb_scores asset — one per-doc
@@ -4744,7 +4744,7 @@ def nb_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
     AUC = (concordant + ties/2) / (P·N).
 
     Plan: the decision statistics are exact BIGINTs (differences of
-    quantized-logit sums, operators/nb.nb_ovr_scores), so pair
+    quantized-logit sums, operators/nb.ovr_from_scored), so pair
     counting groups by DISTINCT statistic value and needs one
     cumulative negative count per value — computed with the repo's
     two-level bucket-prefix decomposition (ks_length_drift posture):
@@ -4823,7 +4823,7 @@ def nb_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistics s descending, with P = TP/(TP+FP) at threshold s.
 
     Plan/exactness: the decision statistics are the same exact BIGINT
-    margins (operators/nb.nb_ovr_scores); the threshold sweep needs
+    margins (operators/nb.ovr_from_scored); the threshold sweep needs
     one cumulative (pos, neg)-below count per DISTINCT statistic —
     the repo's two-level bucket-prefix decomposition (nb_auc_roc
     posture: within-bucket windows partitioned, the unpartitioned

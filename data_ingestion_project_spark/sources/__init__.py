@@ -2,7 +2,6 @@
 
 from data_ingestion_project_spark.sources.readers import (  # noqa: F401
     TABLES,
-    load_tables,
     register_views,
     table,
 )

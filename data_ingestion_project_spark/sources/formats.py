@@ -1,9 +1,9 @@
-"""Multi-format table I/O: parquet (native), ORC, JSON-lines, CSV.
+"""Multi-format table writes: parquet (native), ORC, JSON-lines, CSV.
 
-One pair of functions so every format follows the same rules: writes
-are plain distributed writes (no driver funnel), reads of
-schema-on-read formats (json/csv) ALWAYS take an explicit schema with
-FAILFAST — inference is never on a production path (SURVEY.md §1.2).
+One function so every format follows the same rules: writes are plain
+distributed writes (no driver funnel), and CSV carries a header. A
+schema-on-read format (json/csv) is read back with an explicit schema
+— inference is never on a production path (SURVEY.md §1.2).
 
 Format guidance at scale: parquet/ORC are the only sane table formats
 (columnar, pushdown, pruning); JSON/CSV exist as interchange for the
@@ -14,8 +14,7 @@ columnar pair.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql import DataFrame
 
 COLUMNAR_FORMATS = ("parquet", "orc")
 TEXT_FORMATS = ("json", "csv")
@@ -28,50 +27,3 @@ def write_table(df: DataFrame, path: str, fmt: str = "parquet", mode: str = "ove
     if fmt == "csv":
         writer = writer.option("header", True)
     writer.save(path)
-
-
-def read_table(
-    spark: SparkSession, path: str, fmt: str = "parquet", schema: StructType | None = None
-) -> DataFrame:
-    if fmt in COLUMNAR_FORMATS:
-        reader = spark.read.format(fmt)
-        if schema is not None:  # enforce the expected shape, don't trust the files
-            reader = reader.schema(schema)
-        return reader.load(path)
-    if schema is None:
-        raise ValueError(f"{fmt} is schema-on-read: an explicit schema is required")
-    reader = spark.read.format(fmt).schema(schema).option("mode", "FAILFAST")
-    if fmt == "csv":
-        reader = reader.option("header", True)
-    return reader.load(path)
-
-
-def read_quarantined(
-    spark: SparkSession,
-    path: str,
-    fmt: str,
-    schema: StructType,
-    corrupt_col: str = "_corrupt_record",
-) -> DataFrame:
-    """Schema-on-read scan that QUARANTINES malformed rows instead of
-    failing the job (the dead-letter posture for third-party feeds,
-    where FAILFAST would let one bad producer stall the whole batch):
-    a bad line lands whole in ``corrupt_col`` with every schema column
-    NULL, so the pipeline routes it to a dead-letter sink and keeps
-    moving. The corrupt column must ride in the read schema — Spark
-    populates it only when declared — which is why this is a separate
-    entry point and not a flag on read_table."""
-    if fmt not in TEXT_FORMATS:
-        raise ValueError(f"quarantine applies to schema-on-read formats, not {fmt!r}")
-    from pyspark.sql.types import StringType, StructField
-
-    full = StructType(list(schema.fields) + [StructField(corrupt_col, StringType())])
-    reader = (
-        spark.read.format(fmt)
-        .schema(full)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_col)
-    )
-    if fmt == "csv":
-        reader = reader.option("header", True)
-    return reader.load(path)

@@ -1,31 +1,20 @@
-"""Executor-side paged fetch: the 100 TB-scale form of the users source.
+"""Page fetchers for the paged users source.
 
-The reference fetches one 10-row batch on the driver
-(api_client.py:9-27 in /root/reference). That shape cannot scale —
-the driver becomes the bottleneck and the single point of retry. The
-scale form distributes a *page range* and fetches inside
-``mapInPandas``: each executor task owns a slice of pages, performs
-its own fail-fast HTTP calls, and emits rows as Arrow batches. The
-driver never sees payload data.
+The reference fetches one 10-row batch on the driver (reference
+``api_client.py:9-27``). The scale form is the
+``paged_users`` Python DataSource (``users_datasource.py``): it plans
+one input partition per page chunk and fetches inside executor tasks,
+so the driver never sees payload data and one bad page fails (and
+retries) one task, not the whole job.
 
-The fetcher is injectable (``page -> list[user dict]``) so tests run
-networkless with a deterministic fake; production passes a
-requests-based fetcher with the same contract. Per-task fetch also
-localizes retries: one bad page fails one task (and Spark retries
-that task), not the whole job.
+A fetcher is ``(page, page_size) -> list[user dict]``, named to the
+DataSource by dotted path: ``http_fetcher`` for production,
+``offline_fetcher`` for networkless runs and tests.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
 from typing import Any
-
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-
-from data_ingestion_project_spark.schemas import RAW_USER_SCHEMA
-
-Fetcher = Callable[[int, int], list[dict[str, Any]]]  # (page, page_size) -> users
 
 
 def http_fetcher(page: int, page_size: int) -> list[dict[str, Any]]:
@@ -81,35 +70,3 @@ def offline_fetcher(page: int, page_size: int) -> list[dict[str, Any]]:
         }
         for i in range(page_size)
     ]
-
-
-def fetch_user_pages(
-    spark: SparkSession,
-    n_pages: int,
-    page_size: int = 10,
-    fetcher: Fetcher = http_fetcher,
-    tasks: int | None = None,
-) -> DataFrame:
-    """Distributed fetch of ``n_pages`` pages → users DataFrame.
-
-    The page range is a tiny driver-side DataFrame repartitioned to
-    ``tasks``; all payload I/O happens in the mapInPandas stage."""
-    tasks = tasks or min(n_pages, spark.sparkContext.defaultParallelism)
-    pages = spark.range(1, n_pages + 1).toDF("page").repartition(tasks)
-
-    def _fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict[str, Any]] = []
-            for page in pdf["page"]:
-                for u in fetcher(int(page), page_size):
-                    loc = u.get("location") or {}
-                    if loc.get("postcode") is not None:
-                        # copy before coercing the unstable type — never
-                        # mutate the fetcher's dicts (shared fixtures)
-                        u = {**u, "location": {**loc, "postcode": str(loc["postcode"])}}
-                    rows.append(u)
-            yield pd.DataFrame(
-                {name: [r.get(name) for r in rows] for name in RAW_USER_SCHEMA.fieldNames()}
-            )
-
-    return pages.mapInPandas(_fetch, schema=RAW_USER_SCHEMA)

@@ -1,10 +1,9 @@
 """Spark 4 Python DataSource for the paged users API.
 
-The third (and most idiomatic) form of the users source, after the
-driver-side parity fetch (``users_json.py``, reference
-``api_client.py:9-27``) and the ``mapInPandas`` page fan-out
-(``paged_http.py``): a first-class connector registered with
-``spark.dataSource.register``, so callers write
+The scale form of the users source, next to the driver-side parity
+fetch (``users_json.py``, reference ``api_client.py:9-27``): a
+first-class connector registered with ``spark.dataSource.register``,
+so callers write
 
     spark.read.format("paged_users")
         .option("pages", "8").option("page_size", "10").load()
@@ -12,13 +11,11 @@ driver-side parity fetch (``users_json.py``, reference
 and get the standard source contract — schema discovery, planned
 input partitions (one per page chunk → Spark schedules, retries, and
 speculates fetch tasks like any scan), and executor-side I/O. The
-fetcher is injected as a dotted import path because DataSource
-options are strings and the reader is pickled to executors;
-tests point it at a deterministic in-repo fake and stay networkless.
-
-At 100 TB the win over ``mapInPandas`` is operational: the page range
-lives in the source's partition planning (not a synthetic driver
-DataFrame), so AQE statistics, task retry, and speculative execution
+fetcher (``paged_http.py``) is injected as a dotted import path
+because DataSource options are strings and the reader is pickled to
+executors; tests point it at the deterministic ``offline_fetcher``
+and stay networkless. The page range lives in the source's partition
+planning, so AQE statistics, task retry, and speculative execution
 all see a real scan.
 """
 

@@ -119,62 +119,6 @@ def trending_words(
     )
 
 
-# ------------------------------------------- transformWithState (Spark 4)
-#
-# The modern arbitrary-state API: typed state VARIABLES (ValueState /
-# ListState / MapState, optional TTL) owned by a StatefulProcessor
-# object, instead of one opaque state tuple per key. Same 100 TB
-# posture as above — fixed-size state per user in the key-partitioned
-# store — but state declaration is explicit and per-variable TTL lets
-# the store expire cold keys without a timer per key.
-
-
-from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-
-class RunningTotalsProcessor(StatefulProcessor):
-    """StatefulProcessor for per-user lifetime totals — the
-    transformWithStateInPandas twin of ``running_user_totals``."""
-
-    def init(self, handle) -> None:
-        self._totals = handle.getValueState("totals", STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        prior = self._totals.get() if self._totals.exists() else None
-        n, total = prior if prior is not None else (0, 0.0)
-        for pdf in rows:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        self._totals.update((n, total))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def running_user_totals_tws(events: DataFrame) -> DataFrame:
-    """Per-user lifetime totals via ``transformWithStateInPandas`` —
-    value-identical to :func:`running_user_totals`, expressed in the
-    Spark 4 StatefulProcessor API. ``timeMode="None"``: emission is
-    driven by data arrival, not timers/watermark.
-
-    Environment note: executing this operator needs ``protobuf`` (the
-    TWS state-server wire protocol,
-    ``transform_with_state_driver_worker`` imports
-    ``google.protobuf.descriptor``), which this container lacks — so
-    its equivalence test is import-gated (skipped here, runs anywhere
-    protobuf exists). The legacy ``applyInPandasWithState`` twin above
-    carries the live-stream coverage in this environment."""
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningTotalsProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 SESSION_OUTPUT_SCHEMA = (
     "user_id long, session_start timestamp, session_end timestamp, n_events long"
 )

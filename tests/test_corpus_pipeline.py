@@ -122,7 +122,7 @@ def test_nb_classifier_learns_separable_corpus(spark):
     certifies machinery + priors via its DuckDB oracle instead.)"""
     from pyspark.sql import functions as F
 
-    from data_ingestion_project_spark.operators.nb import nb_confusion
+    from data_ingestion_project_spark.operators.nb import _scored, confusion_from_scored
 
     vocab = {
         "aa": "alpha beta gamma delta",
@@ -146,7 +146,9 @@ def test_nb_classifier_learns_separable_corpus(spark):
     )
     got = {
         (r["true_label"], r["pred_label"]): r["n_docs"]
-        for r in nb_confusion(counts, label_col="lang").collect()
+        for r in confusion_from_scored(
+            _scored(counts, "doc_id", "lang", "word", "c", None)
+        ).collect()
     }
     # perfect diagonal: every held-out doc classified correctly
     assert got == {("aa", "aa"): 10, ("bb", "bb"): 10, ("cc", "cc"): 10}

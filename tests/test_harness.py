@@ -51,10 +51,14 @@ def test_fit_reproduces_every_committed_slope():
         )
         n += _check(e, got, "step", lambda a, b: f"{a}->{b}", ("alpha",))
 
+    # the memory tool's refit takes the driving table from HEAVY, not
+    # from the record, so a record entry without one cannot hide a slope
+    from scaling_sweep import HEAVY
+
     rows = scaling["rows"]
-    for fam in _load("MEMORY_HIGHWATER.json")["families"].values():
+    for name, fam in _load("MEMORY_HIGHWATER.json")["families"].items():
         ok = harness.measured(fam["per_sf"])
-        drv = fam["driver_table"]
+        drv = HEAVY.get(name)
         got = harness.fit(
             {lbl: rows[lbl][drv] for lbl in ok} if drv else {},
             ok,
@@ -74,7 +78,7 @@ def test_fit_reproduces_every_committed_slope():
         got = harness.fit({lbl: r["src_rows"] for lbl, r in ok.items()}, ok, keys)
         n += _check(asset, got, "fit_span", lambda a, b: [a, b], tuple(keys.values()))
 
-    assert n == 99 + 183 + 42
+    assert n == 99 + 193 + 42
 
 
 def test_fit_takes_the_last_growing_pair():
@@ -128,6 +132,12 @@ def test_sweep_resumes_and_keeps_prior_rows(tmp_path):
     assert rec["items"]["a"] == {
         "n": 3, "per_sf": {"old": {"v": 1}, "x": {"v": 1}, "y": {"v": 2}}}
     assert rec["items"]["z"] == {"per_sf": {"old": {"v": 9}}}
+
+    # a requested item with nothing left to measure is still refitted
+    calls.clear()
+    harness.sweep(str(out), "items", ["old"], ["z"], measure, refit)
+    assert calls == []
+    assert json.loads(out.read_text())["items"]["z"] == {"n": 1, "per_sf": {"old": {"v": 9}}}
 
 
 def test_memory_highwater_refuses_a_decade_without_rows(tmp_path):

@@ -203,3 +203,32 @@ def test_cdf_refresh_falls_back_to_full_after_vacuum(spark, tmp_path):
     out, info = refresh_agg(spark, table, state, KEYS, SUM_SPECS)
     assert info["mode"] == "full"
     assert _sum_map(out) == {"a": (10, 1), "b": (2, 1)}
+
+
+def test_refresh_reclaims_only_old_orphan_state_dirs(spark, tmp_path):
+    """A state dir no meta pointer names (a refresh that crashed before
+    its publish) is reclaimed once it is older than the grace window; a
+    young one may be an in-flight refresh and stays, and so does the
+    live state."""
+    import json
+    import os
+    import time
+
+    table = str(tmp_path / "t")
+    state = str(tmp_path / "s")
+    txn_table.create_table(spark, table, _df(spark, [("a", 1), ("b", 5)]))
+    refresh_agg(spark, table, state, KEYS, SPECS)
+    old, young = os.path.join(state, "crashed_old"), os.path.join(state, "crashed_young")
+    os.makedirs(old)
+    os.makedirs(young)
+    stale = time.time() - txn_table.ORPHAN_GRACE_SECONDS - 60
+    os.utime(old, (stale, stale))
+
+    out, info = refresh_agg(spark, table, state, KEYS, SPECS)
+    assert info["mode"] == "noop"
+    with open(os.path.join(state, "_meta.json"), encoding="utf-8") as fh:
+        live = json.load(fh)["state_dir"]
+    assert not os.path.exists(old)
+    assert os.path.isdir(young)
+    assert os.path.isdir(os.path.join(state, live))
+    assert _as_map(out) == _full(spark, table)

@@ -216,22 +216,6 @@ def test_incremental_pair_index_matches_batch_rebuild(spark, tmp_path):
     )
     assert n_retract > 0
 
-    # compaction: log collapses to one row per live pair, the reader
-    # view is unchanged, and subsequent appends keep working on top
-    from data_ingestion_project_spark.operators.incremental_dedup import (
-        compact_pair_index,
-    )
-
-    log_rows_before = T.read(spark, pair_idx).count()
-    compact_pair_index(spark, pair_idx)
-    after = sorted(
-        (r["id_a"], r["id_b"], r["n_shared"])
-        for r in read_pair_index(spark, pair_idx).collect()
-    )
-    assert after == want                                   # view unchanged
-    assert T.read(spark, pair_idx).count() == len(want)    # one row per pair
-    assert T.read(spark, pair_idx).count() < log_rows_before
-
 
 def test_update_pair_index_fence_skips_replayed_batch(spark, tmp_path):
     """ADVICE r4: increments are additive, so a replayed un-fenced

@@ -11,7 +11,6 @@ from data_ingestion_project_spark.operators.multimodal import (
     MEDIA_SCHEMA,
     extract_media_features,
     frame_sample,
-    media_summary,
     require_real_decoder,
 )
 
@@ -49,20 +48,6 @@ def test_frame_sample_expands_videos_only(spark, media_df):
         3000,
     ]
     assert all(len(f["frame_payload"]) == 32 for f in frames)
-
-
-def test_media_summary_prunes_payload(spark, media_df, tmp_path):
-    from data_ingestion_project_spark.plans.explain import scan_info
-
-    path = str(tmp_path / "media.parquet")
-    media_df.write.parquet(path)
-    media = spark.read.parquet(path)
-    out = media_summary(media)
-    assert {r["kind"]: r["n_media"] for r in out.collect()} == {"image": 2, "video": 1, "audio": 1}
-    scans = scan_info(out)
-    assert scans, "expected a parquet scan in the plan"
-    assert scans[0]["read_schema"].startswith("struct<")  # real schema, not a parse miss
-    assert "payload" not in scans[0]["read_schema"]
 
 
 def test_real_decoder_guard_raises():

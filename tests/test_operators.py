@@ -11,7 +11,8 @@ from data_ingestion_project_spark.operators.asof import asof_join
 from data_ingestion_project_spark.operators.dedup import (
     exact_dedup,
     jaccard_pairs,
-    minhash_lsh_pairs,
+    minhash_asset_rows,
+    minhash_lsh_pairs_from,
     simhash,
 )
 from data_ingestion_project_spark.operators.sessionize import sessionize
@@ -78,7 +79,11 @@ def test_minhash_lsh_finds_near_identical(spark):
     near = " ".join(f"w{i}" for i in range(49)) + " zz"
     far = " ".join(f"q{i}" for i in range(50))
     df = spark.createDataFrame([(1, base), (2, near), (3, far)], "doc_id int, text string")
-    got = {(r["id_a"], r["id_b"]) for r in minhash_lsh_pairs(df, min_jaccard=0.5).collect()}
+    rows = minhash_asset_rows(df)
+    pairs = minhash_lsh_pairs_from(
+        rows.select("doc_id", "signature"), rows.select("doc_id", "words"), min_jaccard=0.5
+    )
+    got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
     assert (1, 2) in got
     assert (1, 3) not in got and (2, 3) not in got
 
@@ -227,28 +232,6 @@ def test_char_shingle_tokenization(spark):
         got.setdefault(r["doc_id"], set()).add(r["word"])
     assert got[1] == {"abc", "bcd"}
     assert got[2] == {"ab"}
-
-
-def test_grouped_bucket_topk_finds_near_duplicates(spark):
-    """applyInPandas per-bucket exact search: a planted near-duplicate
-    pair must surface with sim ~1; pairs never share a bucket with
-    orthogonal noise vectors' buckets unless LSH collides them."""
-    import numpy as np
-
-    from data_ingestion_project_spark.operators.similarity import bucket_topk_pairs_grouped
-
-    rng = np.random.default_rng(7)
-    base = rng.standard_normal(16)
-    # exact duplicate: identical LSH signature by construction (a tiny
-    # perturbation can still flip a sign when a plane-dot is near zero)
-    rows = [(1, base.tolist()), (2, base.tolist())]
-    rows += [(10 + i, rng.standard_normal(16).tolist()) for i in range(40)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-    pairs = bucket_topk_pairs_grouped(df, n_planes=4, k_per_bucket=3).collect()
-    best = {(r["id_a"], r["id_b"]): r["sim"] for r in pairs}
-    assert (1, 2) in best
-    assert best[(1, 2)] > 0.999999
 
 
 def test_minhash_signature_estimates_jaccard(spark):
@@ -586,35 +569,6 @@ def test_pq_ann_recall_floor(spark):
     assert bad == 0
 
 
-def test_sentence_split_udtf(spark):
-    """Python UDTF surface: DataFrame-API call and SQL LATERAL both
-    produce the positioned sentence table."""
-    from data_ingestion_project_spark.functions.tablefuncs import (
-        SentenceSplit,
-        register_udtfs,
-    )
-
-    out = SentenceSplit(F.lit("One. Two two.  . Three")).collect()
-    assert [(r["pos"], r["sentence"]) for r in out] == [
-        (0, "One"), (1, "Two two"), (3, "Three"),
-    ]
-
-    register_udtfs(spark)
-    spark.createDataFrame(
-        [(1, "A. B."), (2, None), (3, "C")], "doc_id int, text string"
-    ).createOrReplaceTempView("udtf_docs")
-    rows = spark.sql(
-        """
-        SELECT d.doc_id, s.pos, s.sentence, s.n_chars
-        FROM udtf_docs d, LATERAL sentence_split(d.text) s
-        ORDER BY d.doc_id, s.pos
-        """
-    ).collect()
-    assert [(r["doc_id"], r["sentence"]) for r in rows] == [
-        (1, "A"), (1, "B"), (3, "C"),
-    ]
-
-
 def test_sketch_estimates_track_exact_counts(spark):
     """Accuracy floors for the sketch queries: HLL day/total estimates
     (the oracle-certified portable register rollup AND its binary
@@ -636,14 +590,6 @@ def test_sketch_estimates_track_exact_counts(spark):
     exact["TOTAL"] = e.select("user_id").distinct().count()
     assert set(got) == set(exact)
     for day, est in got.items():
-        assert abs(est - exact[day]) <= max(0.05 * exact[day], 2), day
-
-    # the binary Datasketches twin (pytest-pinned, not driver-declared)
-    from data_ingestion_project_spark.queries.advanced import _datasketches_dau_rollup
-
-    ds = {r["day"]: r["est_users"] for r in _datasketches_dau_rollup(spark, sf).collect()}
-    assert set(ds) == set(exact)
-    for day, est in ds.items():
         assert abs(est - exact[day]) <= max(0.05 * exact[day], 2), day
 
     # the KMV certified twin: same shape, same accuracy expectation
@@ -692,19 +638,9 @@ def test_sketch_estimates_track_exact_counts(spark):
 
     # theta set-algebra query (r11 portable redesign): at this sf every
     # week holds fewer than k=256 users → exact mode, so retained,
-    # churned AND new must EQUAL the exact set algebra; the binary
-    # Datasketches twin (also exact-mode at these cardinalities) must
-    # agree on every cell too.
-    from data_ingestion_project_spark.queries.advanced import (
-        theta_weekly_retention_datasketches,
-    )
-
+    # churned AND new must EQUAL the exact set algebra.
     ret = all_queries()["theta_weekly_retention"](spark, sf).collect()
     assert ret
-    ds_ret = {
-        r["week_start"]: r for r in theta_weekly_retention_datasketches(spark, sf).collect()
-    }
-    assert set(ds_ret) == {r["week_start"] for r in ret}
     weeks = e.select(
         F.date_format(F.date_trunc("week", "ts"), "yyyy-MM-dd").alias("w"), "user_id"
     ).distinct()
@@ -720,10 +656,6 @@ def test_sketch_estimates_track_exact_counts(spark):
         assert r["est_retained_next_week"] == exact_ret, r["week_start"]
         assert r["est_churned_next_week"] == exact_churn, r["week_start"]
         assert r["est_new_next_week"] == exact_new, r["week_start"]
-        d = ds_ret[r["week_start"]]
-        assert round(d["est_retained_next_week"]) == exact_ret, r["week_start"]
-        assert round(d["est_churned_next_week"]) == exact_churn, r["week_start"]
-        assert round(d["est_new_next_week"]) == exact_new, r["week_start"]
 
 
 def test_near_dup_queries_bounded_with_recall_floor(spark):
@@ -812,20 +744,22 @@ def test_html_main_text_extraction_rules(spark):
         assert g == want, (html, g, want)
 
 
-def test_cms_upper_bound_error_and_merge_identity(spark):
+def test_cms_upper_bound_error_and_merge_identity(spark, tmp_path):
     """Count-Min guarantees vs exact counts, with a sketch small enough
     (4×64 cells vs ~500 distinct items) to force collisions: (a) every
     estimate is an UPPER bound (errors only add — the dual of the MG
     lower bound), (b) the fraction of items overcounting by more than
-    2n/width stays near the (1/2)^depth Markov bound, (c) the cellwise
-    merge of two disjoint halves equals the whole-stream sketch
-    BIT-FOR-BIT (exact algebraic identity, not an approximation)."""
+    2n/width stays near the (1/2)^depth Markov bound, (c) folding two
+    disjoint halves into the standing asset (update_cms_asset, the
+    streaming sink's merge) equals the whole-stream sketch BIT-FOR-BIT
+    (exact algebraic identity, not an approximation)."""
     import random
 
+    from data_ingestion_project_spark.operators import txn_table as T
     from data_ingestion_project_spark.operators.cms import (
         cms_build,
-        cms_merge,
         cms_point_estimates,
+        update_cms_asset,
     )
 
     rng = random.Random(11)
@@ -864,10 +798,10 @@ def test_cms_upper_bound_error_and_merge_identity(spark):
 
     half_a = spark.createDataFrame([(x,) for x in items[: n // 2]], "item string")
     half_b = spark.createDataFrame([(x,) for x in items[n // 2 :]], "item string")
-    merged = cms_merge(
-        cms_build(half_a, "item", depth=depth, width=width),
-        cms_build(half_b, "item", depth=depth, width=width),
-    )
+    asset = str(tmp_path / "cms")
+    update_cms_asset(spark, asset, half_a, "item", depth=depth, width=width)
+    update_cms_asset(spark, asset, half_b, "item", depth=depth, width=width)
+    merged = T.read(spark, asset)
     whole_cells = {(r["j"], r["bucket"]): r["cnt"] for r in sketch.collect()}
     merged_cells = {(r["j"], r["bucket"]): r["cnt"] for r in merged.collect()}
     assert merged_cells == whole_cells
@@ -1896,7 +1830,7 @@ def test_nb_margins_planted_separable_corpus(spark):
     computation's sign/scale expectations."""
     from pyspark.sql import functions as F
 
-    from data_ingestion_project_spark.operators.nb import nb_margins
+    from data_ingestion_project_spark.operators.nb import _scored, margins_from_scored
 
     rows = []
     for i in range(40):
@@ -1908,7 +1842,7 @@ def test_nb_margins_planted_separable_corpus(spark):
             rows.append((i, lab, word))
     df = spark.createDataFrame(rows, "doc_id long, lang string, word string")
     counts = df.groupBy("doc_id", "lang", "word").agg(F.count(F.lit(1)).alias("c"))
-    m = nb_margins(counts).toPandas()
+    m = margins_from_scored(_scored(counts, "doc_id", "lang", "word", "c", None)).toPandas()
     assert len(m) == 20  # odd ids are the test half
     assert (m["correct"] == 1).all()
     assert (m["margin_i"] > 10000).all()  # > 1 nat of confidence
@@ -1923,7 +1857,7 @@ def test_nb_ovr_scores_and_auc_brute_force(spark):
     import numpy as np
     from pyspark.sql import functions as F
 
-    from data_ingestion_project_spark.operators.nb import nb_ovr_scores
+    from data_ingestion_project_spark.operators.nb import _scored, ovr_from_scored
     from data_ingestion_project_spark.queries.documents import nb_auc_roc
 
     rows = []
@@ -1934,14 +1868,14 @@ def test_nb_ovr_scores_and_auc_brute_force(spark):
             rows.append((i, lab, word))
     df = spark.createDataFrame(rows, "doc_id long, lang string, word string")
     counts = df.groupBy("doc_id", "lang", "word").agg(F.count(F.lit(1)).alias("c"))
-    st = nb_ovr_scores(counts, "en").toPandas()
+    st = ovr_from_scored(_scored(counts, "doc_id", "lang", "word", "c", None), "en").toPandas()
     pos = st.loc[st.is_pos == 1, "stat"].to_numpy()
     neg = st.loc[st.is_pos == 0, "stat"].to_numpy()
     assert pos.min() > neg.max()  # separable -> AUC 1
 
     out = nb_auc_roc(spark, "/root/testdata/sf0.001").toPandas().iloc[0]
-    d = nb_ovr_scores(
-        _real_counts(spark), "en"
+    d = ovr_from_scored(
+        _scored(_real_counts(spark), "doc_id", "lang", "word", "c", None), "en"
     ).toPandas()
     p = d.loc[d.is_pos == 1, "stat"].to_numpy()[:, None]
     n = d.loc[d.is_pos == 0, "stat"].to_numpy()[None, :]

@@ -1,65 +1,25 @@
-"""Paged executor-side source: networkless via an injected fetcher.
-
-The fake fetcher is fully self-contained (no references to test
-modules) because it executes inside executor Python workers, which
-cannot import the test package.
-"""
+"""Paged users source: the Spark 4 Python DataSource, networkless
+through the dotted-path ``paged_http.offline_fetcher``."""
 
 from __future__ import annotations
 
-
-def _make_fake_fetcher():
-    def fake_fetcher(page: int, page_size: int) -> list[dict]:
-        # deterministic per (page, size) — the retry-safety contract
-        return [
-            {
-                "name": {"title": "Mr", "first": f"F{page}-{i}", "last": "L"},
-                "location": {
-                    "street": {"number": i, "name": f"S{i}"},
-                    "city": "C",
-                    "state": "S",
-                    "country": "Nowhere",
-                    "postcode": 1000 + i,  # int on purpose: must be pinned to string
-                    "coordinates": {"latitude": "0", "longitude": "0"},
-                    "timezone": {"offset": "+0:00", "description": "UTC"},
-                },
-                "email": f"p{page}u{i}@x.com",
-                "login": {
-                    "uuid": f"p{page}-u{i}",
-                    "username": f"user{page}_{i}",
-                    "password": f"pw{page}_{i}",
-                    "salt": "s",
-                    "md5": "m",
-                    "sha1": "h",
-                    "sha256": "h",
-                },
-                "dob": {"date": "1980-01-01T00:00:00Z", "age": 40},
-                "registered": {"date": "2010-01-01T00:00:00Z", "age": 10},
-                "phone": "555",
-            }
-            for i in range(page_size)
-        ]
-
-    return fake_fetcher
-
-
-def test_paged_fetch_distributes_and_preserves_schema(spark):
-    from data_ingestion_project_spark.sources.paged_http import fetch_user_pages
-
-    df = fetch_user_pages(spark, n_pages=5, page_size=4, fetcher=_make_fake_fetcher(), tasks=3)
-    rows = df.collect()
-    assert len(rows) == 20
-    uuids = {r["login"]["uuid"] for r in rows}
-    assert len(uuids) == 20  # all pages present, no dupes
-    assert {r["location"]["postcode"] for r in rows} <= {"1000", "1001", "1002", "1003"}
-    assert df.schema["location"].dataType["postcode"].dataType.simpleString() == "string"
+OFFLINE_FETCHER = "data_ingestion_project_spark.sources.paged_http.offline_fetcher"
 
 
 def test_paged_fetch_feeds_transform(spark, keys):
+    """Paged rows feed the secure transform: every fetched user gets
+    its own blind index."""
     from data_ingestion_project_spark.operators.transforms import transform_users
-    from data_ingestion_project_spark.sources.paged_http import fetch_user_pages
+    from data_ingestion_project_spark.sources.users_datasource import register
 
-    df = fetch_user_pages(spark, n_pages=2, page_size=3, fetcher=_make_fake_fetcher())
+    register(spark)
+    df = (
+        spark.read.format("paged_users")
+        .option("pages", "2")
+        .option("page_size", "3")
+        .option("fetcher", OFFLINE_FETCHER)
+        .load()
+    )
     out = transform_users(df, keys)
     assert out.count() == 6
     assert len({r["email_bidx"] for r in out.collect()}) == 6
@@ -80,10 +40,7 @@ def test_python_datasource_paged_users(spark):
         .option("pages", "6")
         .option("page_size", "4")
         .option("pages_per_task", "2")
-        .option(
-            "fetcher",
-            "data_ingestion_project_spark.sources.paged_http.offline_fetcher",
-        )
+        .option("fetcher", OFFLINE_FETCHER)
         .load()
     )
     rows = df.collect()
@@ -110,10 +67,7 @@ def test_python_datasource_feeds_transform(spark, keys):
         spark.read.format("paged_users")
         .option("pages", "2")
         .option("page_size", "3")
-        .option(
-            "fetcher",
-            "data_ingestion_project_spark.sources.paged_http.offline_fetcher",
-        )
+        .option("fetcher", OFFLINE_FETCHER)
         .load()
     )
     out = transform_users(df, keys)
@@ -136,10 +90,7 @@ def test_python_datasource_streaming_pages(spark, tmp_path):
         .option("pages", "4")
         .option("page_size", "3")
         .option("pages_per_batch", "2")
-        .option(
-            "fetcher",
-            "data_ingestion_project_spark.sources.paged_http.offline_fetcher",
-        )
+        .option("fetcher", OFFLINE_FETCHER)
         .load()
     )
     q = (

@@ -59,11 +59,11 @@ def test_breusch_pagan_gate_picks_rows_at_tiny_sf(spark, monkeypatch):
 def test_nb_scores_asset_matches_recompute(spark):
     """The materialized nb_scores asset must serve the EXACT frame the
     in-query plumbing used to compute: the asset-served confusion
-    matrix (min_by argmax) has to equal nb_confusion run from the raw
-    corpus (window argmax) — same scores, same tie-break."""
+    matrix has to equal the confusion matrix recomputed from the raw
+    corpus — same scores, same tie-break."""
     from pyspark.sql import functions as F
 
-    from data_ingestion_project_spark.operators.nb import nb_confusion
+    from data_ingestion_project_spark.operators.nb import _scored, confusion_from_scored
     from data_ingestion_project_spark.queries import all_queries
     from data_ingestion_project_spark.queries.documents import _nb_scored
 
@@ -79,7 +79,9 @@ def test_nb_scores_asset_matches_recompute(spark):
     counts = words.groupBy("doc_id", "lang", "word").agg(F.count(F.lit(1)).alias("c"))
     scratch = sorted(
         (r["true_label"], r["pred_label"], r["n_docs"])
-        for r in nb_confusion(counts, label_col="lang").collect()
+        for r in confusion_from_scored(
+            _scored(counts, "doc_id", "lang", "word", "c", None)
+        ).collect()
     )
     assert served == scratch
     # the asset's scores are exact BIGINTs: re-reading must be stable

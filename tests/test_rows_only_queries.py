@@ -217,89 +217,3 @@ def test_approx_order_price_quantiles_error_floor_vs_exact_twin(spark):
         ap = approx[st]
         assert abs(ap["ap50"] - ex["p50"]) <= 0.01 * ex["p50"], (st, ap["ap50"], ex["p50"])
         assert abs(ap["ap99"] - ex["p99"]) <= 0.01 * ex["p99"], (st, ap["ap99"], ex["p99"])
-
-
-def test_datasketches_dau_rollup_pinned_point_estimates(spark):
-    """VERDICT r7 ask #8: Datasketches HLL estimates are deterministic
-    for a fixed corpus + config. Pin the sf0.001 per-day estimates to
-    the exact per-day DAU (at these tiny cardinalities the sketch is in
-    exact sparse mode) and the TOTAL union row to the exact overall
-    distinct count — any lgK/seed/estimator change breaks this.
-    (Covers the binary-sketch twin of the oracle-certified portable
-    register query sketch_rollup_dau — r10 moved the query name onto
-    the replayable register implementation.)"""
-    from data_ingestion_project_spark.queries.advanced import _datasketches_dau_rollup
-
-    got = {
-        r["day"]: r["est_users"]
-        for r in _datasketches_dau_rollup(spark, SF0001).collect()
-    }
-    exact = dict(
-        duckdb.sql(
-            f"""SELECT strftime(ts, '%Y-%m-%d'), COUNT(DISTINCT user_id)
-                FROM '{SF0001}/events.parquet' GROUP BY 1"""
-        ).fetchall()
-    )
-    total = duckdb.sql(
-        f"SELECT COUNT(DISTINCT user_id) FROM '{SF0001}/events.parquet'"
-    ).fetchone()[0]
-    assert set(got) == set(exact) | {"TOTAL"}
-    for day, dau in exact.items():
-        assert got[day] == dau, (day, got[day], dau)
-    assert got["TOTAL"] == total
-
-
-def test_theta_weekly_retention_pinned_point_estimates(spark):
-    """VERDICT r7 ask #8, theta half (r11: the declared query is now the
-    portable oracle-certified set-algebra form; this test pins the
-    BINARY Datasketches twin value-exactly at sf0.001 — tiny
-    cardinalities → theta sketches in exact mode, so est == exact on
-    all three set-op cells; a config change that pushes them into
-    estimation mode, or a seed / estimator change, breaks the pin)."""
-    from data_ingestion_project_spark.queries.advanced import (
-        theta_weekly_retention_datasketches,
-    )
-
-    rows = theta_weekly_retention_datasketches(spark, SF0001).collect()
-    assert rows, "query returned no weeks"
-    exact = {
-        str(w): (nr, nc, nn)
-        for w, nr, nc, nn in duckdb.sql(
-            f"""
-            WITH wk AS (
-              SELECT CAST(date_trunc('week', ts) AS DATE) AS week, user_id
-              FROM '{SF0001}/events.parquet' GROUP BY 1, 2
-            ), weeks AS (SELECT DISTINCT week FROM wk),
-            pairs AS (
-              SELECT a.week AS wa FROM weeks a
-              JOIN weeks b ON b.week = a.week + INTERVAL 7 DAY
-            )
-            , cells AS (
-              SELECT COALESCE(a.week, b.week) AS week,
-                     a.user_id IS NOT NULL AS in_a,
-                     b.user_id IS NOT NULL AS in_b
-              FROM wk a
-              FULL OUTER JOIN (SELECT week - INTERVAL 7 DAY AS week, user_id
-                               FROM wk) b
-                ON b.week = a.week AND b.user_id = a.user_id
-            )
-            SELECT p.wa AS week,
-                   SUM(CASE WHEN in_a AND in_b THEN 1 ELSE 0 END) AS n_ret,
-                   SUM(CASE WHEN in_a AND NOT in_b THEN 1 ELSE 0 END) AS n_churn,
-                   SUM(CASE WHEN NOT in_a AND in_b THEN 1 ELSE 0 END) AS n_new
-            FROM pairs p JOIN cells c ON c.week = p.wa
-            GROUP BY 1 ORDER BY 1
-            """
-        ).fetchall()
-    }
-    got = {
-        r["week_start"]: (
-            round(r["est_retained_next_week"]),
-            round(r["est_churned_next_week"]),
-            round(r["est_new_next_week"]),
-        )
-        for r in rows
-    }
-    assert set(got) == set(exact)
-    for week, cells in exact.items():
-        assert got[week] == cells, (week, got[week], cells)

@@ -456,56 +456,6 @@ def test_sessions_finalized_on_event_time_timeout(spark, tmp_path):
         q.stop()
 
 
-def test_transform_with_state_matches_legacy_operator(spark, tmp_path):
-    """transformWithStateInPandas (Spark 4 StatefulProcessor) must
-    accumulate across micro-batches exactly like the legacy
-    applyInPandasWithState running-totals operator. Import-gated: the
-    TWS state-server protocol needs protobuf (absent in this
-    container); the operator itself is exercised wherever protobuf
-    exists."""
-    pytest.importorskip("google.protobuf")
-    from data_ingestion_project_spark.streaming.stateful import running_user_totals_tws
-
-    src = tmp_path / "events_tws"
-    src.mkdir()
-    stream = (
-        spark.readStream.schema("ts timestamp, user_id long, event_type string, value double")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-    )
-    out = running_user_totals_tws(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("tws_test")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt_tws"))
-        .start()
-    )
-    try:
-        rows1 = [
-            {"ts": "2024-01-01T10:00:00", "user_id": 1, "event_type": "click", "value": 2.0},
-            {"ts": "2024-01-01T10:01:00", "user_id": 1, "event_type": "click", "value": 3.0},
-            {"ts": "2024-01-01T10:02:00", "user_id": 2, "event_type": "view", "value": 1.0},
-        ]
-        (src / "b1.json").write_text("\n".join(json.dumps(r) for r in rows1))
-        q.processAllAvailable()
-        rows2 = [{"ts": "2024-01-01T11:00:00", "user_id": 1, "event_type": "click", "value": 5.0}]
-        (src / "b2.json").write_text("\n".join(json.dumps(r) for r in rows2))
-        q.processAllAvailable()
-        emissions_u1 = [
-            (r["n_events"], r["total_value"])
-            for r in spark.sql("select * from tws_test where user_id = 1").collect()
-        ]
-        assert (3, 10.0) in emissions_u1  # state carried across batches
-        u2 = {
-            (r["n_events"], r["total_value"])
-            for r in spark.sql("select * from tws_test where user_id = 2").collect()
-        }
-        assert (1, 1.0) in u2
-    finally:
-        q.stop()
-
-
 def test_scd2_dimension_stream_versions_across_microbatches(spark, tmp_path):
     """Streaming SCD2 maintenance: versions mint only on change across
     micro-batches, history lands in the txn table, and a replayed

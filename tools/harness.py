@@ -140,7 +140,8 @@ def sweep(out_path, kind, labels, items, measure, refit, workers=1) -> dict:
     """Measure every (item, decade) pair that ``out_path``'s record lacks
     or holds an error for: ``measure(item, sf_dir) -> row``, then
     ``refit(item, record[kind][item])``, and rewrite the record after
-    each row so a killed sweep keeps what it measured. Prior rows and
+    each row so a killed sweep keeps what it measured. Every requested
+    item is refitted, also one with nothing left to measure. Prior rows and
     decades stay: the record's ``sf_labels`` are the prior ones plus
     ``labels``. ``workers`` rows run at once (each in its own process,
     so peaks stay per row; only their seconds share the machine)."""
@@ -165,22 +166,28 @@ def sweep(out_path, kind, labels, items, measure, refit, workers=1) -> dict:
 
     lock = Lock()
 
+    def write() -> None:
+        write_json(out_path, {
+            "sf_labels": sf_labels,
+            "sf_dirs": sf_dirs,
+            "driver_mem": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+            kind: records,
+        })
+
     def run(task) -> None:
         item, lbl = task
         row = measure(item, sf_dirs[lbl])
         with lock:
             records[item]["per_sf"][lbl] = row
             refit(item, records[item])
-            write_json(out_path, {
-                "sf_labels": sf_labels,
-                "sf_dirs": sf_dirs,
-                "driver_mem": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
-                kind: records,
-            })
+            write()
         print(f"# {lbl} {item}: {json.dumps(row)}", file=sys.stderr, flush=True)
 
     with ThreadPoolExecutor(max_workers=workers) as pool:
         list(pool.map(run, todo))
+    for item in items:
+        refit(item, records[item])
+    write()
     return records
 
 
