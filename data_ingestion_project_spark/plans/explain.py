@@ -2,7 +2,7 @@
 
 ``plan_census`` distills what matters at 100 TB out of
 ``explain("formatted")``: how many shuffles, which joins were chosen,
-whether codegen spans the hot path, what reached the parquet scan
+whether Python runs in the row path, what reached the parquet scan
 (PushedFilters / ReadSchema). Used by tests to pin plan shapes —
 e.g. "this join must be broadcast" — so perf regressions fail loudly
 instead of silently shuffling.
@@ -44,7 +44,6 @@ def plan_census(df: DataFrame) -> dict[str, object]:
         "n_shuffled_hash_joins": nodes("ShuffledHashJoin"),
         "n_bnl_joins": nodes("BroadcastNestedLoopJoin"),
         "n_cartesian": nodes("CartesianProduct"),
-        "n_codegen_stages": len(set(re.findall(r"\[codegen id : (\d+)\]", plan))),
         # explicit execution-node markers only: a bare "Python" match
         # also catches "applySchemaToPythonRDD" in the Scan ExistingRDD
         # detail of a tiny createDataFrame dim (driver-local rows, no

@@ -6,25 +6,6 @@ from __future__ import annotations
 OFFLINE_FETCHER = "data_ingestion_project_spark.sources.paged_http.offline_fetcher"
 
 
-def test_paged_fetch_feeds_transform(spark, keys):
-    """Paged rows feed the secure transform: every fetched user gets
-    its own blind index."""
-    from data_ingestion_project_spark.operators.transforms import transform_users
-    from data_ingestion_project_spark.sources.users_datasource import register
-
-    register(spark)
-    df = (
-        spark.read.format("paged_users")
-        .option("pages", "2")
-        .option("page_size", "3")
-        .option("fetcher", OFFLINE_FETCHER)
-        .load()
-    )
-    out = transform_users(df, keys)
-    assert out.count() == 6
-    assert len({r["email_bidx"] for r in out.collect()}) == 6
-
-
 def test_python_datasource_paged_users(spark):
     """Spark 4 Python DataSource form: schema discovery, one planned
     InputPartition per page chunk, executor-side fetch through the
@@ -57,8 +38,9 @@ def test_python_datasource_paged_users(spark):
 
 
 def test_python_datasource_feeds_transform(spark, keys):
-    """The connector's output drops straight into the secure transform
-    — proving it is a full substitute for the other two source forms."""
+    """The connector's output drops straight into the secure transform:
+    every fetched user gets its own blind index, and the plaintext
+    password is dropped."""
     from data_ingestion_project_spark.operators.transforms import transform_users
     from data_ingestion_project_spark.sources.users_datasource import register
 
@@ -72,6 +54,7 @@ def test_python_datasource_feeds_transform(spark, keys):
     )
     out = transform_users(df, keys)
     assert out.count() == 6
+    assert len({r["email_bidx"] for r in out.collect()}) == 6  # one blind index per user
     assert "login.password" not in out.columns  # plaintext dropped
 
 
