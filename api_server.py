@@ -16,6 +16,7 @@ from typing import Any
 
 from data_ingestion_project_spark.functions.crypto import CryptoKeys
 from data_ingestion_project_spark.job import run_ingestion_job
+from data_ingestion_project_spark.operators.materialize import pin_scope
 from data_ingestion_project_spark.session import build_session
 
 TABLE_PATH = os.environ.get("USERS_TABLE_PATH", "data/random_users.parquet")
@@ -110,8 +111,9 @@ def run_query(name: str, sf_dir: str | None = None, limit: int = 100) -> dict[st
     if safe_dir is None:
         return {"error": f"sf_dir outside {DATA_ROOT!r}", "status": 403}
     spark = _spark_session()
-    df = queries[name](spark, safe_dir)
-    rows = df.limit(max(1, min(limit, MAX_ROWS))).toPandas()
+    with pin_scope():
+        df = queries[name](spark, safe_dir)
+        rows = df.limit(max(1, min(limit, MAX_ROWS))).toPandas()
     return {
         "name": name,
         "columns": list(rows.columns),

@@ -60,6 +60,7 @@ def main(argv: list[str] | None = None) -> int:
             print(f"{name}\t{kind}")
         return 0
 
+    from data_ingestion_project_spark.operators.materialize import pin_scope
     from data_ingestion_project_spark.session import build_session
 
     if args.cmd == "catalog":
@@ -108,31 +109,32 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = build_session(f"analytics-{args.cmd}")
     spark.sparkContext.setLogLevel("ERROR")
-    try:
-        df = queries[args.query](spark, args.sf_dir)
-        if args.cmd == "explain":
-            from data_ingestion_project_spark.plans.explain import formatted_plan
+    with pin_scope():
+        try:
+            df = queries[args.query](spark, args.sf_dir)
+            if args.cmd == "explain":
+                from data_ingestion_project_spark.plans.explain import formatted_plan
 
-            print(formatted_plan(df))
+                print(formatted_plan(df))
+                return 0
+            if args.output is not None:
+                df.write.mode("errorifexists").parquet(args.output)
+                print(f"wrote {args.output}")
+                return 0
+            if args.limit is not None:
+                df = df.limit(args.limit)
+            if args.format == "table":
+                df.show(n=args.limit or 1000, truncate=False)
+            elif args.format == "json":
+                for row in df.toJSON().collect():
+                    print(row)
+            else:  # csv
+                pdf = df.toPandas()
+                pdf.to_csv(sys.stdout, index=False)
             return 0
-        if args.output is not None:
-            df.write.mode("errorifexists").parquet(args.output)
-            print(f"wrote {args.output}")
-            return 0
-        if args.limit is not None:
-            df = df.limit(args.limit)
-        if args.format == "table":
-            df.show(n=args.limit or 1000, truncate=False)
-        elif args.format == "json":
-            for row in df.toJSON().collect():
-                print(row)
-        else:  # csv
-            pdf = df.toPandas()
-            pdf.to_csv(sys.stdout, index=False)
-        return 0
-    except Exception as e:  # surface the cause, exit nonzero for cron/scripts
-        print(f"query failed: {e}", file=sys.stderr)
-        return 1
+        except Exception as e:  # surface the cause, exit nonzero for cron/scripts
+            print(f"query failed: {e}", file=sys.stderr)
+            return 1
 
 
 if __name__ == "__main__":

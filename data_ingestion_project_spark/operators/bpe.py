@@ -29,6 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_ingestion_project_spark.operators.materialize import pin
+
 END = "</w>"  # end-of-word marker, per the paper
 
 
@@ -140,7 +142,7 @@ def bpe_train(
     """Learn up to ``n_merges`` BPE merges; returns [(left, right,
     pair_count)] in learned order. Stops early when no pair reaches
     ``min_pair_count`` (merging hapax pairs learns noise)."""
-    vocab = word_freq_symbols(docs, text_col).localCheckpoint(eager=True)
+    vocab = pin(word_freq_symbols(docs, text_col))
     merges: list[tuple[str, str, int]] = []
     for _ in range(n_merges):
         # words already merged down to ONE symbol contribute no pairs;
@@ -167,5 +169,5 @@ def bpe_train(
         if best is None or best["n"] < min_pair_count:
             break
         merges.append((best["l"], best["r"], int(best["n"])))
-        vocab = _merge_round(vocab, best["l"], best["r"]).localCheckpoint(eager=True)
+        vocab = pin(_merge_round(vocab, best["l"], best["r"]))
     return merges

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from data_ingestion_project_spark.functions.text import fingerprint, normalize_text
+from data_ingestion_project_spark.operators.materialize import pin
 
 
 # ---------------------------------------------------------------- exact
@@ -457,7 +458,7 @@ def jaccard_topk_smalldict(
     threshold are expanded to doc ids (≥-threshold tie explosion
     only)."""
     groups = wordset_mask_groups(df, vocab, text_col=text_col, id_col=id_col)
-    groups = groups.localCheckpoint(eager=True)
+    groups = pin(groups)
     cross = _mask_cross_pairs(groups)
     same = _same_mask_pairs(groups)
     meta = cross.select("jaccard", "mult").unionByName(
@@ -498,7 +499,7 @@ def jaccard_threshold_counts_smalldict(
     masks whose best pair clears the threshold.  No doc-pair frame is
     ever materialized."""
     groups = wordset_mask_groups(df, vocab, text_col=text_col, id_col=id_col)
-    groups = groups.localCheckpoint(eager=True)
+    groups = pin(groups)
     cross = _mask_cross_pairs(groups).withColumnRenamed("jaccard", "j")
     # per-mask best cross-pair jaccard (symmetrized), for n_docs
     best = (

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_ingestion_project_spark.operators.materialize import pin
+
 
 def connected_components(
     edges: DataFrame,
@@ -63,14 +65,12 @@ def connected_components(
     # edge-producing pipeline (e.g. the winnow candidate generation)
     # TWICE — Spark does not share common subexpressions across union
     # branches. Observed 2× on dup_cluster_sizes before this.
-    directed = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).localCheckpoint(
-        eager=True
-    )
+    directed = pin(edges.select(F.col(src).alias("a"), F.col(dst).alias("b")))
     # ... and the symmetric closure once more: every propagation round
     # joins against it — O(upstream + rounds), not O(rounds × upstream).
-    sym = directed.union(
+    sym = pin(directed.union(
         directed.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).distinct().localCheckpoint(eager=True)
+    ).distinct())
     from pyspark.sql import Observation
 
     labels = sym.select(F.col("a").alias("node")).distinct().select(
@@ -80,7 +80,7 @@ def connected_components(
     # materialization job instead of costing a separate aggregate action.
     obs0 = Observation("cc_init")
     labels = labels.observe(obs0, F.sum(F.col("comp").cast("decimal(38,0)")).alias("s"))
-    labels = labels.localCheckpoint(eager=True)
+    labels = pin(labels)
     prev_sum = obs0.get["s"]
 
     for i in range(max_iter):
@@ -96,7 +96,7 @@ def connected_components(
         # .get below does not launch a new action).
         obs = Observation(f"cc_round_{i}")
         new_labels = new_labels.observe(obs, F.sum(F.col("comp").cast("decimal(38,0)")).alias("s"))
-        new_labels = new_labels.localCheckpoint(eager=True)
+        new_labels = pin(new_labels)
         new_sum = obs.get["s"]
         labels = new_labels
         if new_sum == prev_sum:
@@ -179,17 +179,12 @@ def connected_components_star(
     # appearing only as (x, x) is still a singleton component): star
     # contraction deletes dominated nodes' own edges, but they must
     # still appear in the output.
-    nodes = (
+    nodes = pin(
         raw.select(F.col("a").alias("node"))
         .union(raw.select(F.col("b").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    e = (
-        raw.filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = pin(raw.filter(F.col("a") != F.col("b")).distinct())
     from pyspark.sql import Observation
 
     prev_cert: tuple | None = None
@@ -202,7 +197,7 @@ def connected_components_star(
             F.sum(F.col("a").cast("decimal(38,0)")).alias("sa"),
             F.sum(F.col("b").cast("decimal(38,0)")).alias("sb"),
         )
-        stepped = stepped.localCheckpoint(eager=True)
+        stepped = pin(stepped)
         got = obs.get
         cert = (got["n"], got["sa"], got["sb"])
         prev_e, e = e, stepped
@@ -238,20 +233,18 @@ def k_core(
     Scale: each round is one degree aggregation + two semi-joins over
     the SHRINKING edge list — shuffles keyed by node id, no windows,
     nothing corpus-sized beyond the edges themselves; each round is
-    localCheckpoint'ed (house posture: bounded lineage, no
-    re-execution of prior rounds).
+    pinned (bounded lineage, no re-execution of prior rounds).
 
     Returns (node, core_degree) for nodes surviving all rounds, with
     their degree inside the surviving subgraph.
     """
-    e = edges.select(src, dst).localCheckpoint(eager=True)
+    e = pin(edges.select(src, dst))
     for _ in range(rounds):
         deg = e.groupBy(src).agg(F.count(F.lit(1)).alias("deg"))
         keep = deg.filter(F.col("deg") >= k).select(src)
-        e = (
+        e = pin(
             e.join(keep, src, "left_semi")
             .join(keep.select(F.col(src).alias(dst)), dst, "left_semi")
-            .localCheckpoint(eager=True)
         )
     return (
         e.groupBy(src)
@@ -308,18 +301,16 @@ def bfs_distances(
     once and total work is O(E + V) across all rounds, the Pregel/
     delta-iteration shape, vs O(rounds * E) for naive Bellman-Ford
     re-relaxation. Each round: one semi-join + one distinct + one
-    anti-join, all shuffles keyed by node id; per-round
-    localCheckpoint (house posture: bounded lineage). Rounds stop
+    anti-join, all shuffles keyed by node id; each round pinned
+    (bounded lineage). Rounds stop
     early at the reachability fixpoint (an empty frontier makes all
     remaining rounds no-ops — same fixed-upper-bound spec posture as
     k_core, so the SQL twin unrolling exactly ``max_depth`` levels
     replays value-exactly whenever the reachable eccentricity is
     within ``max_depth``, pinned for the corpus graphs in pytest)."""
-    e = edges.select(src, dst).localCheckpoint(eager=True)
+    e = pin(edges.select(src, dst))
     cols = seed.columns
-    settled = seed.select(F.col(cols[0]).alias("node"), F.lit(0).alias("dist")).localCheckpoint(
-        eager=True
-    )
+    settled = pin(seed.select(F.col(cols[0]).alias("node"), F.lit(0).alias("dist")))
     frontier = settled
     for depth in range(1, max_depth + 1):
         nxt = (
@@ -327,14 +318,10 @@ def bfs_distances(
             .select(F.col(dst).alias("node"))
             .distinct()
         )
-        new = (
-            nxt.join(settled, "node", "left_anti")
-            .select("node", F.lit(depth).alias("dist"))
-            .localCheckpoint(eager=True)
-        )
+        new = pin(nxt.join(settled, "node", "left_anti").select("node", F.lit(depth).alias("dist")))
         if new.isEmpty():
             break
-        settled = settled.unionByName(new).localCheckpoint(eager=True)
+        settled = pin(settled.unionByName(new))
         frontier = new
     return settled
 

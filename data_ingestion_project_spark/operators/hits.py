@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_ingestion_project_spark.operators.materialize import pin
+
 SCORE_SCALE = 12  # per-iteration normalized-score rounding
 _DEC = "decimal(38,14)"  # exact inbox accumulator over rounded scores
 
@@ -55,11 +57,7 @@ def hits(
     hub->authority pass)."""
     if iterations < 1:
         raise ValueError(f"hits requires iterations >= 1, got {iterations}")
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = pin(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct())
     h = e.select("src").distinct().select("src", F.lit(1.0).alias("h"))
     a = None
     for i in range(iterations):
@@ -84,8 +82,8 @@ def hits(
             ).alias("h"),
         )
         if i < iterations - 1:
-            a = a.localCheckpoint(eager=False)
-            h = h.localCheckpoint(eager=False)
+            a = pin(a, eager=False)
+            h = pin(h, eager=False)
     hubs = h.select(F.col("src").alias("node"), F.col("h").alias("hub"))
     auths = a.select(F.col("dst").alias("node"), F.col("a").alias("authority"))
     return hubs, auths

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from data_ingestion_project_spark.functions.text import winnow_fingerprints
 from data_ingestion_project_spark.operators import txn_table as T
+from data_ingestion_project_spark.operators.materialize import pin
 
 INDEX_SCHEMA = "fp bigint, doc_id bigint"
 
@@ -227,7 +228,7 @@ def dedup_batch_against_index(
     fps = winnow_fingerprints(batch, text_col, id_col, k=k, w=w).select(
         F.col(id_col).cast("long").alias("doc_id"), F.col("fp").cast("long")
     )
-    fps = fps.localCheckpoint(eager=True)  # reused 3x below — cut the lineage once
+    fps = pin(fps)  # reused 3x below — cut the lineage once
 
     n_batch = batch.count()
 
@@ -276,12 +277,11 @@ def dedup_batch_against_index(
         # would silently migrate their counts between the two
         # categories across the replay even though `accepted` and the
         # index are bit-identical.
-        tagged = (
+        tagged = pin(
             dropped_vs_index.select("doc_id", F.lit(1).alias("__vs_index"))
             .unionByName(in_batch.select("doc_id", F.lit(0).alias("__vs_index")))
             .groupBy("doc_id")
             .agg(F.min("__vs_index").alias("__vs_index"))
-            .localCheckpoint(eager=True)
         )
         n_dropped_vs_index = tagged.filter(F.col("__vs_index") == 1).count()
         n_dropped_total = tagged.count()
@@ -386,9 +386,7 @@ def update_pair_index(
     if T.fence_applied(pair_path, fence):
         return  # replayed micro-batch: increments already applied
 
-    new_fps = new_fps.select(
-        F.col("fp").cast("long"), F.col("doc_id").cast("long")
-    ).localCheckpoint(eager=True)
+    new_fps = pin(new_fps.select(F.col("fp").cast("long"), F.col("doc_id").cast("long")))
 
     # bound the collected NEW posting list exactly like the old side: a
     # fp with more than max_df batch docs already exceeds the cap on
@@ -562,7 +560,7 @@ def ingest_dedup_batch(
         min_shared=min_shared,
     )
     # survivors feed three appends below — cut the dedup lineage once
-    accepted = accepted.localCheckpoint(eager=True)
+    accepted = pin(accepted)
     _fenced_append(spark, corpus_path, accepted, fence)
     update_signature_assets(
         spark,
@@ -629,7 +627,7 @@ def build_corpus_batch(
         id_col=id_col,
         min_shared=min_shared,
     )
-    accepted = accepted.localCheckpoint(eager=True)
+    accepted = pin(accepted)
     _hook("dedup")
     _fenced_append(spark, paths["corpus"], accepted, fence)
     _hook("corpus")

@@ -1,6 +1,20 @@
-"""Materialize-once helper: build a derived dataset under
+"""The one owner of materialization, in executor memory and on disk.
+
+Pins: ``pin(df)`` is ``df.localCheckpoint(eager)``, the package's only
+call of it, for a frame several branches read or an iterative round
+whose lineage must be cut. Inside ``with pin_scope():``, which each
+runner enters around building AND collecting one query, a pin records
+its RDD id (not the frame, so a dead round can still be garbage
+collected) in its thread's innermost scope. When a pin dies: at scope
+exit, by return or exception, the scope unpersists the recorded RDDs
+the context still holds, and a frame pinned inside can no longer be
+collected; the scope frees no enclosing scope's, other thread's or
+``.cache()`` frames. A pin made outside any scope (the ingestion job,
+``foreachBatch`` threads) lives until GC or the session's end.
+
+Derived datasets: ``ensure_materialized`` builds a dataset under
 ``spark-warehouse/`` exactly once per (source, mtime) and atomically
-publish it — the single-node stand-in for a shared derived table a
+publishes it — the single-node stand-in for a shared derived table a
 production pipeline would keep in the lakehouse (the incremental
 version of this idea — append new rows instead of rebuild — is
 operators/incremental_dedup.py over operators/txn_table.py).
@@ -23,11 +37,46 @@ import hashlib
 import os
 import shutil
 import uuid
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
+from contextvars import ContextVar
+
+from pyspark import SparkContext
+from pyspark.sql import DataFrame
 
 from data_ingestion_project_spark.operators.txn_table import reclaim_orphans
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+_SCOPE: ContextVar[list[int] | None] = ContextVar("pin_scope", default=None)
+
+
+def pin(df: DataFrame, eager: bool = True) -> DataFrame:
+    """``df.localCheckpoint(eager)``, recorded in the active pin scope."""
+    out = df.localCheckpoint(eager)
+    scope = _SCOPE.get()
+    if scope is not None:
+        scope.append(out._jdf.logicalPlan().rdd().id())
+    return out
+
+
+@contextmanager
+def pin_scope() -> Iterator[None]:
+    """Unpersist, on exit, every RDD pinned inside (and not in a nested
+    scope) that the context still holds."""
+    ids: list[int] = []
+    token = _SCOPE.set(ids)
+    try:
+        yield
+    finally:
+        _SCOPE.reset(token)
+        sc = SparkContext._active_spark_context
+        if ids and sc is not None:
+            held = sc._jsc.getPersistentRDDs()
+            for rid in ids:
+                rdd = held.get(rid)
+                if rdd is not None:
+                    rdd.unpersist(False)
 
 
 def dataset_tag(abs_src_dir: str) -> str:

@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_ingestion_project_spark.operators.materialize import pin
+
 CONTRIB_SCALE = 14  # per-edge contribution rounding (value-determined)
 RANK_SCALE = 10  # per-iteration rank rounding
 _DEC = "decimal(38,14)"  # exact inbox accumulator
@@ -97,7 +99,7 @@ def pagerank(
     # plan re-derives it from the raw edges (5x the candidate-pair
     # pipeline on the dup-graph query — measured 3.6 s -> ~1 s at
     # sf0.1). Same posture as graph.py's propagation loop.
-    out_edges = e.join(deg, "src").localCheckpoint(eager=True)
+    out_edges = pin(e.join(deg, "src"))
 
     if dangling == "ignore":
         # one zero-contribution row per SOURCE, unioned into every
@@ -108,7 +110,7 @@ def pagerank(
         # Materialized ONCE: without the checkpoint every iteration
         # re-derives deg (a full groupBy over the edge list) just to
         # produce the zero rows (measured ~+1 s/round on the dup graph)
-        zero = deg.select("src", F.lit(0.0).alias("c")).localCheckpoint(eager=True)
+        zero = pin(deg.select("src", F.lit(0.0).alias("c")))
         # r13 (guide §2.4): n = |source nodes| = |deg rows| — count the
         # node-scale zero checkpoint instead of re-shuffling the
         # EDGE-scale checkpoint through a distinct (deg is distinct on
@@ -131,14 +133,11 @@ def pagerank(
             # Truncate lineage so plan depth (and Catalyst analysis
             # cost) stays constant per round instead of growing with i.
             if i < iterations - 1:
-                ranks = ranks.localCheckpoint(eager=False)
+                ranks = pin(ranks, eager=False)
         return ranks.select(F.col("src").alias("node"), "rank")
 
     # general directed model: full vertex set, dangling mass recycled
-    nodes = (
-        e.select("src").unionByName(e.select(F.col("dst").alias("src"))).distinct()
-        .localCheckpoint(eager=True)
-    )
+    nodes = pin(e.select("src").unionByName(e.select(F.col("dst").alias("src"))).distinct())
     n = nodes.count()
     teleport = (1.0 - damping) / n
     ranks = nodes.select("src", F.lit(1.0 / n).alias("rank"))
@@ -173,7 +172,7 @@ def pagerank(
             )
         )
         if i < iterations - 1:
-            ranks = ranks.localCheckpoint(eager=False)
+            ranks = pin(ranks, eager=False)
     return ranks.select(F.col("src").alias("node"), "rank")
 
 
@@ -254,14 +253,13 @@ def stationary_distribution(
     localCheckpoint'ed once so rounds don't re-derive it.
     """
     tot = trans.groupBy(src).agg(F.sum(weight).alias("tot"))
-    p = (
+    p = pin(
         trans.join(tot, src)
         .select(
             F.col(src).alias("src"),
             F.col(dst).alias("dst"),
             F.round(F.col(weight) / F.col("tot"), CONTRIB_SCALE).alias("p"),
         )
-        .localCheckpoint(eager=True)
     )
     k = p.select("src").distinct().count()
     pi = p.select("src").distinct().select(
@@ -278,7 +276,7 @@ def stationary_distribution(
             .agg(F.round(F.sum(F.col("term").cast(_DEC)).cast("double"), RANK_SCALE).alias("pi"))
         )
         if i < iterations - 1:
-            pi = pi.localCheckpoint(eager=False)
+            pi = pin(pi, eager=False)
     return pi
 
 
@@ -339,7 +337,7 @@ def hitting_time(
     chain is K-vocabulary-sized; every iteration is one equi-join plus
     one K-row aggregation on the tiny localCheckpoint'ed matrix."""
     tot = trans.groupBy(src).agg(F.sum(weight).alias("tot"))
-    p = (
+    p = pin(
         trans.join(tot, src)
         .filter(F.col(src) != target)
         .select(
@@ -347,7 +345,6 @@ def hitting_time(
             F.col(dst).alias("dst"),
             F.round(F.col(weight) / F.col("tot"), CONTRIB_SCALE).alias("p"),
         )
-        .localCheckpoint(eager=True)
     )
     h = p.select("src").distinct().select(
         F.col("src").alias("state"), F.lit(0.0).alias("h")
@@ -379,7 +376,7 @@ def hitting_time(
             # per round costs one Spark job each (measured 14 s for
             # 40).  A 5-round stride keeps analysis depth constant at
             # ~1/5 the job count.
-            h = h.localCheckpoint(eager=True)
+            h = pin(h)
     return h
 
 

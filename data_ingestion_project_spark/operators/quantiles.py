@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from data_ingestion_project_spark.operators.materialize import pin
+
 
 def _range_id_expr(bounds: list, value_col: str):
     """0-based range id from explicit boundary literals (empty bounds —
@@ -234,11 +236,11 @@ def exact_median(
     produces them; the guard in theil_sen is value-determined).
     """
     v = F.col(value_col)
-    stats = df.agg(
+    stats = pin(df.agg(
         F.min(v).alias("__mn"),
         F.max(v).alias("__mx"),
         F.count(F.lit(1)).alias("n"),
-    ).localCheckpoint(eager=True)
+    ))
     if bucket_width is None:
         width = F.greatest(
             F.lit(1).cast("long"),
@@ -357,11 +359,10 @@ def rank2_map(
         if count_col is not None
         else F.count(F.lit(1)).alias("__c")
     )
-    vc = (
+    vc = pin(
         df.groupBy(F.col(value_col).alias("__v"))
         .agg(agg)
         .withColumn("__b", F.floor(F.col("__v") / F.lit(bucket_width)))
-        .localCheckpoint(eager=True)
     )
     bp = vc.groupBy("__b").agg(F.sum("__c").alias("__bc"))
     wb = Window.orderBy("__b").rowsBetween(Window.unboundedPreceding, -1)

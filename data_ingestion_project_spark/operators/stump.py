@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_ingestion_project_spark.operators.materialize import pin
+
 
 def histogram_cells(
     emb: DataFrame,
@@ -77,7 +79,7 @@ def stump_split_gains(cells: DataFrame, scale: int = 20) -> DataFrame:
     # materialize the histogram ONCE: cand/cum/tot all branch from it,
     # and without the checkpoint each branch re-runs the corpus-sized
     # posexplode pass (the plan census showed 5 fact scans)
-    cells = cells.localCheckpoint(eager=True)
+    cells = pin(cells)
     cand = cells.select("dim", "b").distinct()
     # per-label cumulative counts at each candidate via bounded range join
     cum = (

@@ -45,6 +45,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_ingestion_project_spark.operators.materialize import pin
+
 # cap must be a power of two: the doubling ladder ends exactly on it
 DEFAULT_CAP = 64
 
@@ -85,7 +87,7 @@ def order_rank(df: DataFrame, cols: list[str], out: str) -> DataFrame:
     d = df.repartitionByRange(_NUM_RANGE_PARTS, *[F.col(c) for c in cols])
     d = d.withColumn("__pid", F.spark_partition_id())
     w = Window.partitionBy("__pid").orderBy(*[F.col(c) for c in cols])
-    d = d.withColumn("__local", F.dense_rank().over(w)).localCheckpoint(eager=True)
+    d = pin(d.withColumn("__local", F.dense_rank().over(w)))
     counts = d.groupBy("__pid").agg(F.max("__local").alias("__cnt"))
     # partition-count-sized window (≤ _NUM_RANGE_PARTS rows) — bounded
     # by the shuffle layout, not the data
@@ -136,14 +138,12 @@ def suffix_rank_tables(
         (F.col("__len") - F.col("__i")).alias("n_remaining"),
         "token",
     )
-    meta = positions.select(
-        "pos", "doc_id", "doc_pos", "lang", "n_remaining"
-    ).localCheckpoint(eager=True)
+    meta = pin(positions.select("pos", "doc_id", "doc_pos", "lang", "n_remaining"))
 
     cur = order_rank(positions.select("pos", "token"), ["token"], "rank").select(
         "pos", "rank"
     )
-    cur = cur.localCheckpoint(eager=True)
+    cur = pin(cur)
     ranks: dict[int, DataFrame] = {1: cur}
     k = 1
     while k < cap:
@@ -159,7 +159,7 @@ def suffix_rank_tables(
         cur = order_rank(paired, ["rank", "__r2"], "__nr").select(
             "pos", F.col("__nr").alias("rank")
         )
-        cur = cur.localCheckpoint(eager=True)
+        cur = pin(cur)
         k *= 2
         ranks[k] = cur
     return ranks, meta
@@ -217,7 +217,7 @@ def best_lcp_per_position(
             .drop("__pa", "__ra", "__pb", "__rb")
         )
         p //= 2
-    pairs = pairs.select("rn", "pos_a", "pos_b", "lcp").localCheckpoint(eager=True)
+    pairs = pin(pairs.select("rn", "pos_a", "pos_b", "lcp"))
     # a position's best lcp = max(lcp with previous, with next neighbor)
     with_next = pairs.select(F.col("pos_a").alias("pos"), F.col("lcp").alias("__l1"))
     with_prev = pairs.select(F.col("pos_b").alias("pos"), F.col("lcp").alias("__l2"))

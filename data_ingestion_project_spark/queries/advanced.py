@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_ingestion_project_spark.operators.materialize import pin
 from data_ingestion_project_spark.queries._precision import DEC_BUF, dec_sum, floor_round, spark_dec_sum, sql_dec_sum, to_micro
 from data_ingestion_project_spark.queries.tpch import REV, _rev
 from data_ingestion_project_spark.sources.readers import register_views, table
@@ -659,11 +660,7 @@ def map_mrr_search_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("dl").cast("double").alias("sum_dl"),
     )
     qtoks = toks.filter(F.col("word").isin(*BM25_TERMS))
-    tf = (
-        qtoks.groupBy("doc_id", "word")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=True)
-    )
+    tf = pin(qtoks.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("tf")))
     df_ = tf.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
     scored = (
         tf.join(F.broadcast(df_), "word")
@@ -679,16 +676,15 @@ def map_mrr_search_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         + BM25_K1
         * (1 - BM25_B + BM25_B * F.col("dl") * F.col("n_docs") / F.col("sum_dl"))
     )
-    # candidate-set-sized (posting lists × 4 terms); materialized once
-    # (house localCheckpoint idiom) because BOTH the rank window and
-    # the relevant-count aggregate read it — otherwise the corpus
-    # explode upstream runs twice
-    per = scored.select(
+    # candidate-set-sized (posting lists × 4 terms); pinned because
+    # BOTH the rank window and the relevant-count aggregate read it —
+    # otherwise the corpus explode upstream runs twice
+    per = pin(scored.select(
         "word",
         "doc_id",
         F.round(idf * tf_norm * 1_000_000, 0).cast("long").alias("score_i"),
         (F.col("tf") >= 2).cast("int").alias("rel"),
-    ).localCheckpoint(eager=True)
+    ))
     wrank = Window.partitionBy("word").orderBy(
         F.col("score_i").desc(), F.col("doc_id").asc()
     )
@@ -917,11 +913,9 @@ def rbo_rank_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         0,
     ).cast("long")
     # the 10-row terms frame feeds BOTH the RBO fold and the output
-    # rows — materialize it once (house localCheckpoint idiom) so the
-    # two lex+dense ranking pipelines upstream run exactly once
-    terms = xd.select("depth", "x_d", term_q.alias("t_q")).localCheckpoint(
-        eager=True
-    )
+    # rows — pinned so the two lex+dense ranking pipelines upstream
+    # run exactly once
+    terms = pin(xd.select("depth", "x_d", term_q.alias("t_q")))
     rbo = terms.agg(F.sum("t_q").alias("rq"))
     return (
         terms.crossJoin(F.broadcast(rbo))
@@ -1397,11 +1391,10 @@ def abc_customer_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic — the classification involves no float at all.  Output
     shares are value-determined divisions of exact integers."""
     o = table(spark, sf_dir, "orders")
-    rev = (
+    rev = pin(
         o.groupBy("o_custkey")
         .agg(F.sum(to_micro(F.col("o_totalprice")).cast(DEC_BUF)).alias("rev_i"))
         .withColumn("bkt", F.floor(F.col("rev_i") / F.lit(_ABC_BUCKET_MICRO)))
-        .localCheckpoint(eager=True)
     )
     bp = rev.groupBy("bkt").agg(F.sum("rev_i").alias("b_rev"))
     wb = Window.orderBy(F.col("bkt").desc()).rowsBetween(
@@ -1463,11 +1456,10 @@ def revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     multiplies of exact integers folded exactly, so the statistic is
     value-determined to the last micro-digit."""
     o = table(spark, sf_dir, "orders")
-    rev = (
+    rev = pin(
         o.groupBy("o_custkey")
         .agg(F.sum(to_micro(F.col("o_totalprice")).cast(DEC_BUF)).alias("rev_i"))
         .withColumn("bkt", F.floor(F.col("rev_i") / F.lit(_ABC_BUCKET_MICRO)))
-        .localCheckpoint(eager=True)
     )
     bp = rev.groupBy("bkt").agg(F.count(F.lit(1)).alias("b_n"))
     wb = Window.orderBy(F.col("bkt").asc()).rowsBetween(
@@ -2984,7 +2976,7 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("mon_i"),
     )
     end = base.agg(F.max("last_d").alias("e"))
-    base = (
+    base = pin(
         base.crossJoin(F.broadcast(end))
         .select(
             "o_custkey",
@@ -2992,7 +2984,6 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             "freq",
             "mon_i",
         )
-        .localCheckpoint(eager=True)
     )
     # r13 (guide §2.3): all three quintile assignments in the FOLDED
     # multi-column form — one approxQuantile pass + one count pass for
@@ -3122,14 +3113,13 @@ def trimmed_robust_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     c = table(spark, sf_dir, "customer")
     _d38 = "decimal(38,0)"
-    vals = (
+    vals = pin(
         c.select(
             F.col("c_mktsegment").alias("seg"),
             F.round(F.col("c_acctbal") * 100, 0).cast("long").alias("v"),
         )
         .groupBy("seg", "v")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
     )
     per_seg = vals.groupBy("seg").agg(
         F.sum("c").alias("n"), F.sum(F.col("v").cast(_d38) * F.col("c").cast(_d38)).alias("sv")

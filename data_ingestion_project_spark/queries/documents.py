@@ -31,6 +31,7 @@ from data_ingestion_project_spark.operators.dedup import (
     substitution_block_pairs,
 )
 from data_ingestion_project_spark.operators.fanout import fanout_to_cores
+from data_ingestion_project_spark.operators.materialize import pin
 from data_ingestion_project_spark.queries._precision import floor_round
 from data_ingestion_project_spark.sources.readers import table
 
@@ -824,10 +825,9 @@ def jaccard_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         return jaccard_threshold_counts_smalldict(
             d, vocab, _JACCARD_SWEEP_THRESHOLDS
         )
-    pairs = (
+    pairs = pin(
         jaccard_pairs(d, min_jaccard=_JACCARD_SWEEP_THRESHOLDS[0])
         .select("id_a", "id_b", "jaccard")
-        .localCheckpoint(eager=True)
     )
     thr = spark.createDataFrame(
         [(t,) for t in _JACCARD_SWEEP_THRESHOLDS], "threshold double"
@@ -4109,7 +4109,7 @@ def dup_graph_bfs_depths(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = _winnow_pair_counts(spark, sf_dir).filter(
         F.col("n_shared") >= _PAGERANK_EDGE_MIN_SHARED
     )
-    sym = symmetrize(pairs).localCheckpoint(eager=True)
+    sym = pin(symmetrize(pairs))
     seed = sym.agg(F.min("src").alias("node"))
     dist = bfs_distances(sym, seed, max_depth=_BFS_MAX_DEPTH)
     hist = dist.groupBy("dist").agg(F.count(F.lit(1)).alias("n_nodes"))
@@ -4173,7 +4173,7 @@ def dup_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = _winnow_pair_counts(spark, sf_dir).filter(
         F.col("n_shared") >= _PAGERANK_EDGE_MIN_SHARED
     )
-    sym = symmetrize(pairs).localCheckpoint(eager=True)
+    sym = pin(symmetrize(pairs))
     deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     dx = deg.select(F.col("src"), F.col("deg").alias("dx"))
     dy = deg.select(F.col("src").alias("dst"), F.col("deg").alias("dy"))
@@ -4534,9 +4534,7 @@ FROM sharded GROUP BY shard ORDER BY shard
 # --------------------------- model-based filtering (Naive Bayes)
 
 
-def nb_token_counts(
-    spark: SparkSession, sf_dir: str, checkpoint: bool = False
-) -> DataFrame:
+def nb_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The NB pipeline's per-(doc, lang, word) term-frequency frame —
     the ONE tokenize pass feeding train+score.  Shared by the
     nb_scores asset build AND the broadcast-contract plan test
@@ -4549,10 +4547,7 @@ def nb_token_counts(
         "lang",
         F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("word"),
     )
-    counts = words.groupBy("doc_id", "lang", "word").agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    return counts.localCheckpoint(eager=True) if checkpoint else counts
+    return words.groupBy("doc_id", "lang", "word").agg(F.count(F.lit(1)).alias("c"))
 
 
 def _nb_scored_path(spark: SparkSession, sf_dir: str) -> str:
@@ -4578,8 +4573,8 @@ def _nb_scored_path(spark: SparkSession, sf_dir: str) -> str:
     abs_dir = os.path.abspath(os.path.normpath(sf_dir))
 
     def _build(tmp: str) -> None:
-        # checkpoint=True: _scored reads the counts frame 6×
-        counts = nb_token_counts(spark, sf_dir, checkpoint=True)
+        # pinned: _scored reads the counts frame 6×
+        counts = pin(nb_token_counts(spark, sf_dir))
         scored = _scored(counts, "doc_id", "lang", "word", "c", None)
         # test-docs × |labels| rows of 4 narrow columns; at real scale
         # this write would be bucketed BY doc_id so the per-doc argmax
@@ -4762,14 +4757,13 @@ def nb_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_ingestion_project_spark.queries._precision import DEC_BUF
 
     st = ovr_from_scored(_nb_scored(spark, sf_dir), "en", label_col="lang")
-    per = (
+    per = pin(
         st.groupBy("stat")
         .agg(
             F.sum("is_pos").alias("n_pos_s"),
             F.sum(F.lit(1) - F.col("is_pos")).alias("n_neg_s"),
         )
         .withColumn("bkt", F.floor(F.col("stat") / F.lit(10_000)))
-        .localCheckpoint(eager=True)
     )
     bp = per.groupBy("bkt").agg(F.sum("n_neg_s").alias("b_neg"))
     wb = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
@@ -4838,14 +4832,13 @@ def nb_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_ingestion_project_spark.operators.nb import ovr_from_scored
 
     st = ovr_from_scored(_nb_scored(spark, sf_dir), "en", label_col="lang")
-    per = (
+    per = pin(
         st.groupBy("stat")
         .agg(
             F.sum("is_pos").alias("n_pos_s"),
             F.sum(F.lit(1) - F.col("is_pos")).alias("n_neg_s"),
         )
         .withColumn("bkt", F.floor(F.col("stat") / F.lit(10_000)))
-        .localCheckpoint(eager=True)
     )
     bp = per.groupBy("bkt").agg(
         F.sum("n_pos_s").alias("b_pos"), F.sum("n_neg_s").alias("b_neg")
@@ -5406,7 +5399,7 @@ def source_stylometry_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("word"),
     ).filter(F.col("word") != "")
     counts = words.groupBy("source", "word").agg(F.count(F.lit(1)).alias("c"))
-    counts = counts.localCheckpoint(eager=True)
+    counts = pin(counts)
     tot = counts.groupBy("source").agg(F.sum("c").alias("t"))
     topk = (
         counts.groupBy("word")
@@ -5415,7 +5408,7 @@ def source_stylometry_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(_DELTA_TOPK)
         .select("word")
     )
-    dense = (
+    dense = pin(
         tot.crossJoin(F.broadcast(topk))
         .join(counts, ["source", "word"], "left")
         .select(
@@ -5429,7 +5422,6 @@ def source_stylometry_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("f_q"),
         )
-        .localCheckpoint(eager=True)
     )
     stats = dense.groupBy("word").agg(
         F.count(F.lit(1)).alias("ns"),
@@ -5564,14 +5556,14 @@ def pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     spelled as the identical cast-first double expression in both
     engines."""
     d = table(spark, sf_dir, "documents")
-    dw = d.select(
+    dw = pin(d.select(
         F.array_remove(
             F.array_sort(
                 F.array_distinct(F.split(F.lower(F.trim("text")), r"\s+"))
             ),
             "",
         ).alias("w")
-    ).localCheckpoint(eager=True)
+    ))
     pairs = (
         dw.filter(F.size("w") >= 2)  # sequence(0,-1) guard (bpe lesson)
         .select(
@@ -5923,7 +5915,7 @@ def ngram_novelty_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("p"),
     ).select("ft", F.col("p.tranche").alias("tranche"), F.col("p.c").alias("c"))
-    per = (
+    per = pin(
         tranche_rows.filter(F.col("c") > 0)
         .groupBy("tranche")
         .agg(
@@ -5936,7 +5928,6 @@ def ngram_novelty_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.when(F.col("ft") == F.col("tranche"), F.col("c")).otherwise(0)
             ).alias("new_tokens"),
         )
-        .localCheckpoint(eager=True)
     )
     prior = per.select(
         F.col("tranche").alias("t2"), F.col("n_new_types").alias("nn2")
@@ -6027,14 +6018,13 @@ def youden_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_ingestion_project_spark.queries._precision import DEC_BUF
 
     st = ovr_from_scored(_nb_scored(spark, sf_dir), "en", label_col="lang")
-    per = (
+    per = pin(
         st.groupBy("stat")
         .agg(
             F.sum("is_pos").alias("n_pos_s"),
             F.sum(F.lit(1) - F.col("is_pos")).alias("n_neg_s"),
         )
         .withColumn("bkt", F.floor(F.col("stat") / F.lit(10_000)))
-        .localCheckpoint(eager=True)
     )
     tot = per.agg(
         F.sum("n_pos_s").alias("p"), F.sum("n_neg_s").alias("nn")
@@ -6218,7 +6208,7 @@ def heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("p"),
     ).select("ft", F.col("p.tranche").alias("tranche"), F.col("p.c").alias("c"))
-    per = (
+    per = pin(
         tranche_rows.filter(F.col("c") > 0)
         .groupBy("tranche")
         .agg(
@@ -6227,7 +6217,6 @@ def heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "newv"
             ),
         )
-        .localCheckpoint(eager=True)
     )
     prior = per.select(
         F.col("tranche").alias("t2"),

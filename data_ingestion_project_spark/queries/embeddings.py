@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_ingestion_project_spark.functions.vectors import cosine_similarity, vec_dot, vec_norm
+from data_ingestion_project_spark.operators.materialize import pin
 from data_ingestion_project_spark.queries._precision import dec_avg, floor_round, sql_dec_avg
 from data_ingestion_project_spark.operators.similarity import (
     cosine_batch_topk,
@@ -1254,11 +1255,11 @@ def embedding_davies_bouldin(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dim",
         (F.col("x") * F.lit(float(_DB_Q))).cast("long").alias("q"),
     )
-    cells = qcell.groupBy("cent_id", "dim").agg(
+    cells = pin(qcell.groupBy("cent_id", "dim").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("q").alias("sq"),
         F.sum(F.col("q") * F.col("q")).alias("sq2"),
-    ).localCheckpoint(eager=True)
+    ))
     # per-cluster scatter via the trace identity with an EXACT integer
     # numerator: n²·var = Σ_d (n·Σq² − (Σq)²) — a 64-term double sum
     # here would be order-dependent across engines.  Each factor is
@@ -1540,7 +1541,7 @@ def simplified_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     wv = Window.partitionBy("vec_id").orderBy(
         F.col("cos").desc(), F.col("cent_id").asc()
     )
-    inv = (
+    inv = pin(
         assigned.withColumn("rn", F.row_number().over(wv))
         .filter(F.col("rn") == 1)
         .select(
@@ -1550,7 +1551,6 @@ def simplified_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "q"
             ),
         )
-        .localCheckpoint(eager=True)
     )
     cells = (
         inv.select("own", F.posexplode("q").alias("dim", "qd"))
@@ -1587,9 +1587,7 @@ def simplified_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.greatest("da", "db") > 0,
         (F.col("db") - F.col("da")) / F.greatest("da", "db"),
     ).otherwise(F.lit(0.0))
-    pts = per_point.select(
-        "own", (s * F.lit(1.0e9)).cast("long").alias("s_q")
-    ).localCheckpoint(eager=True)
+    pts = pin(per_point.select("own", (s * F.lit(1.0e9)).cast("long").alias("s_q")))
     tot = pts.agg(
         (
             F.sum(F.col("s_q").cast(_d38)).cast("double")
@@ -1717,10 +1715,9 @@ def embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("x") * F.lit(float(_DB_Q))).cast("long").alias("q"),
         )
     )
-    cells = (
+    cells = pin(
         qcell.groupBy("label", "half", "dim")
         .agg(F.count(F.lit(1)).alias("n"), F.sum("q").alias("sq"))
-        .localCheckpoint(eager=True)
     )
     a = cells.filter(F.col("half") == "A").select(
         "label", "dim", F.col("n").alias("na"), F.col("sq").alias("qa")
@@ -1832,13 +1829,13 @@ def hopkins_statistic(spark: SparkSession, sf_dir: str) -> DataFrame:
     correctly-rounded (no libm drift), truncated to 1e-6 integers
     before the fold; H is ONE double division."""
     e = table(spark, sf_dir, "embeddings").filter(F.col("vec_id") != QUERY_VEC_ID)
-    corpus = e.select(
+    corpus = pin(e.select(
         "vec_id",
         F.transform(
             "embedding",
             lambda x: F.round(x.cast("double") * F.lit(1.0e4), 0).cast("long"),
         ).alias("q"),
-    ).localCheckpoint(eager=True)
+    ))
     d2 = lambda a, b: F.aggregate(  # noqa: E731
         F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
         F.lit(0).cast("long"),

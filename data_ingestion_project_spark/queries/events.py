@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_ingestion_project_spark.operators.asof import asof_join
+from data_ingestion_project_spark.operators.materialize import pin
 from data_ingestion_project_spark.queries._precision import dec_sum, floor_round, sql_dec_sum, to_micro
 from data_ingestion_project_spark.operators.sessionize import sessionize
 from data_ingestion_project_spark.sources.readers import table
@@ -58,11 +59,10 @@ def event_dispersion_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     moments are exact BIGINTs, so mean/variance/index are
     value-determined divisions, micro-quantized for output."""
     e = table(spark, sf_dir, "events")
-    per = (
+    per = pin(
         e.groupBy(
             F.date_trunc("hour", "ts").alias("hour"), "event_type"
         ).agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
     )
 
     def stats(grouped: DataFrame, label_col) -> DataFrame:
@@ -611,12 +611,11 @@ def entropy_rate_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("user_id").orderBy(
         F.col("ts").asc(), F.col("event_id").asc()
     )
-    trans = (
+    trans = pin(
         e.withColumn("prev_type", F.lag("event_type").over(w))
         .filter(F.col("prev_type").isNotNull())
         .groupBy(F.col("prev_type").alias("src"), F.col("event_type").alias("dst"))
         .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
     )
     pi = stationary_distribution_exact(trans, iterations=_MARKOV_ITERS)
     tot = trans.groupBy("src").agg(F.sum("n").alias("tot"))
@@ -710,7 +709,7 @@ def event_trigram_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("user_id").orderBy(
         F.col("ts").asc(), F.col("event_id").asc()
     )
-    tri = (
+    tri = pin(
         e.select(
             F.lag("event_type", 2).over(w).alias("t1"),
             F.lag("event_type", 1).over(w).alias("t2"),
@@ -719,7 +718,6 @@ def event_trigram_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("t1").isNotNull() & F.col("t2").isNotNull())
         .groupBy("t1", "t2", "t3")
         .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
     )
     tot = tri.agg(F.sum("n").alias("t"))
     return (
@@ -1094,7 +1092,7 @@ def user_scd2_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     state = scd2_apply(None, updates, key="user_id", attrs=["event_type"], ts_col="ts")
     # both consumers below read `state`; materialize it once or Spark
     # re-executes the full dedup + sequencing lineage per branch
-    state = state.localCheckpoint(eager=True)
+    state = pin(state)
     current = state.filter(F.col("valid_to").isNull()).select(
         "user_id", F.col("event_type").alias("current_state")
     )
@@ -1456,11 +1454,7 @@ def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # user-cardinality frame with two consumers (sizes + the purchase
     # tag join): materialized once so events is scanned twice total
     # (first-seen pass + purchase pass), not once per consumer
-    first = (
-        e.groupBy("user_id")
-        .agg(F.date_trunc("week", F.min("ts")).alias("cohort_wk"))
-        .localCheckpoint(eager=True)
-    )
+    first = pin(e.groupBy("user_id").agg(F.date_trunc("week", F.min("ts")).alias("cohort_wk")))
     sizes = first.groupBy("cohort_wk").agg(F.count(F.lit(1)).alias("n_users"))
     buys = e.filter(F.col("event_type") == "purchase").select(
         "user_id", "ts", "value"
@@ -1567,11 +1561,7 @@ def dau_wau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     # horizons); materialize it once so the fact table is scanned
     # once, not per branch — at 100 TB this is the difference between
     # one distinct shuffle and three full scans
-    ud = (
-        e.select(F.to_date("ts").alias("day"), "user_id")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    ud = pin(e.select(F.to_date("ts").alias("day"), "user_id").distinct())
     dau = ud.groupBy("day").agg(F.count(F.lit(1)).alias("dau"))
 
     def rolling(n: int, out: str) -> DataFrame:
@@ -1746,13 +1736,12 @@ def peak_concurrent_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         "h", F.hour("ts")
     )
     # level 1: calendar·24-bounded per-(day, hour) frame
-    bkt_net = (
+    bkt_net = pin(
         bounds.groupBy("d", "h")
         .agg(
             F.sum("delta").alias("net"),
             F.sum(F.when(F.col("delta") == 1, 1).otherwise(0)).alias("n_started"),
         )
-        .localCheckpoint(eager=True)
     )
     prior = bkt_net.select(
         F.col("d").alias("d2"), F.col("h").alias("h2"), F.col("net").alias("net2")
@@ -1885,9 +1874,9 @@ def cuped_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.lit(0))
         ).alias("y"),
     )
-    per_user = per_user.withColumn(
+    per_user = pin(per_user.withColumn(
         "variant", F.when(F.col("user_id") % 2 == 0, "A").otherwise("B")
-    ).localCheckpoint(eager=True)
+    ))
     _d38 = "decimal(38,0)"
     pooled = per_user.agg(
         F.count(F.lit(1)).alias("n"),
@@ -2068,14 +2057,13 @@ def crosscorr_leadlag(spark: SparkSession, sf_dir: str) -> DataFrame:
     cal = span.select(
         F.explode(F.expr("sequence(d0, d1, interval 1 day)")).alias("d")
     )
-    filled = (
+    filled = pin(
         cal.join(daily, "d", "left")
         .select(
             "d",
             F.coalesce("p_raw", F.lit(0)).alias("p"),
             F.coalesce("c_raw", F.lit(0)).alias("c"),
         )
-        .localCheckpoint(eager=True)
     )
     lags = spark.range(-7, 8).select(F.col("id").cast("int").alias("lag"))
     a = filled.crossJoin(F.broadcast(lags)).withColumn(

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_ingestion_project_spark.operators.materialize import pin
 from data_ingestion_project_spark.queries._precision import floor_round as _floor_round
 from data_ingestion_project_spark.queries._precision import to_micro
 from data_ingestion_project_spark.sources.readers import table
@@ -72,17 +73,16 @@ def chisq_event_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-dependent double accumulation anywhere.
     """
     e = table(spark, sf_dir, "events")
-    # the ONE fact-table pass; materialized (house localCheckpoint
-    # idiom) so the five derived totals below read the ≤|types|×7-cell
-    # frame instead of each re-scanning events (column pruning makes
-    # the branches' agg subtrees differ, defeating exchange reuse)
-    cells = (
+    # the ONE fact-table pass, pinned so the five derived totals below
+    # read the ≤|types|×7-cell frame instead of each re-scanning events
+    # (column pruning makes the branches' agg subtrees differ,
+    # defeating exchange reuse)
+    cells = pin(
         e.groupBy(
             "event_type",
             (F.expr("weekday(ts)") + F.lit(1)).alias("dow"),  # ISO: 1=Mon
         )
         .agg(F.count(F.lit(1)).alias("observed"))
-        .localCheckpoint(eager=True)
     )
     row_tot = cells.groupBy("event_type").agg(F.sum("observed").alias("row_total"))
     col_tot = cells.groupBy("dow").agg(F.sum("observed").alias("col_total"))
@@ -181,14 +181,13 @@ def anova_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "events")
     # one fact pass → |types|-row moment frame, materialized so the
     # grand-total branch reads it instead of re-scanning events
-    g = (
+    g = pin(
         e.groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(to_micro(F.col("value")).cast(_DEC)).alias("sx_i"),
             F.sum(_micro(F.col("value") * F.col("value")).cast(_DEC)).alias("sxx_i"),
         )
-        .localCheckpoint(eager=True)
     )
     sx_d = F.col("sx_i").cast("double") / F.lit(float(_M))
     sxx_d = F.col("sxx_i").cast("double") / F.lit(float(_M))
@@ -331,17 +330,16 @@ def ks_length_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressions micro-quantized before the max/compare.
     """
     d = table(spark, sf_dir, "documents")
-    per = (
+    # distinct-length-sized frame, materialized once: the bucket
+    # partials, prefix, per-value cumsum, and totals all branch from it
+    # without re-scanning documents
+    per = pin(
         d.groupBy("n_chars")
         .agg(
             F.sum(F.when(F.col("lang") == "en", 1).otherwise(0)).alias("c_en"),
             F.sum(F.when(F.col("lang") != "en", 1).otherwise(0)).alias("c_ot"),
         )
         .withColumn("bkt", F.floor(F.col("n_chars") / F.lit(_KS_BUCKET)))
-        # distinct-length-sized frame, materialized once: the bucket
-        # partials, prefix, per-value cumsum, and totals all branch
-        # from it without re-scanning documents
-        .localCheckpoint(eager=True)
     )
     bp = per.groupBy("bkt").agg(
         F.sum("c_en").alias("b_en"), F.sum("c_ot").alias("b_ot")
@@ -572,11 +570,7 @@ def mi_label_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the ONE explode pass → dims×2×labels cell grid, materialized;
     # BOTH marginals and N derive from it (dim 0's cells partition the
     # corpus by label), so the 64× expansion runs exactly once
-    joint = (
-        ex.groupBy("dim", "b", "label")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
-    )
+    joint = pin(ex.groupBy("dim", "b", "label").agg(F.count(F.lit(1)).alias("c")))
     mb = joint.groupBy("dim", "b").agg(F.sum("c").alias("cb"))
     ml = joint.filter(F.col("dim") == 0).groupBy("label").agg(
         F.sum("c").alias("cl")
@@ -850,10 +844,9 @@ def _seasonal_frames(spark: SparkSession, sf_dir: str):
     per-dow seasonal-index frame.  Consumed by revenue_seasonality and
     seasonal_anomaly_days."""
     o = table(spark, sf_dir, "orders")
-    daily = (
+    daily = pin(
         o.groupBy(F.date_trunc("day", "o_orderdate").alias("day"))
         .agg(F.sum(to_micro(F.col("o_totalprice")).cast(_DEC)).alias("rev_i"))
-        .localCheckpoint(eager=True)
     )
     m = F.lit(float(_M))
     d2 = daily.select(
@@ -1137,13 +1130,12 @@ def psi_length_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     contribution re-quantized to 1e-6 before the EXACT integer global
     sum (the house ln idiom)."""
     d = table(spark, sf_dir, "documents")
-    per = (
+    per = pin(
         d.groupBy(F.floor(F.col("n_chars") / F.lit(_PSI_BUCKET)).alias("bkt"))
         .agg(
             F.sum(F.when(F.col("lang") == "en", 1).otherwise(0)).alias("c_en"),
             F.sum(F.when(F.col("lang") != "en", 1).otherwise(0)).alias("c_ot"),
         )
-        .localCheckpoint(eager=True)
     )
     tot = per.agg(
         F.sum("c_en").alias("n_en"),
@@ -1228,13 +1220,13 @@ def residual_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-determined double expressions over those integers."""
     j, sfrm = _seasonal_frames(spark, sf_dir)
     m = F.lit(float(_M))
-    res = j.join(F.broadcast(sfrm.select("dow", "seas_i")), "dow").select(
+    res = pin(j.join(F.broadcast(sfrm.select("dow", "seas_i")), "dow").select(
         "day",
         (
             (F.col("dev_i").cast("double") / m)
             - (F.col("seas_i").cast("double") / m)
         ).alias("e"),
-    ).localCheckpoint(eager=True)
+    ))
     a = res.select((F.col("day") + F.expr("INTERVAL 1 DAY")).alias("day"),
                    F.col("e").alias("e_prev"))
     pairs = res.join(a, "day").select("e_prev", F.col("e").alias("e_cur"))
@@ -1431,13 +1423,12 @@ def jsd_source_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("source") == "src0").cast("int").alias("is_a"),
         F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("word"),
     )
-    per = (
+    per = pin(
         w.groupBy("word")
         .agg(
             F.sum("is_a").alias("c_a"),
             F.sum(F.lit(1) - F.col("is_a")).alias("c_b"),
         )
-        .localCheckpoint(eager=True)
     )
     tot = per.agg(
         F.sum("c_a").alias("n_a"),
@@ -1662,7 +1653,7 @@ def theil_sen_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the sums themselves fold in DECIMAL).
     """
     o = table(spark, sf_dir, "orders")
-    daily = (
+    daily = pin(
         o.groupBy(F.to_date("o_orderdate").alias("d"))
         .agg(
             F.sum((F.col("o_totalprice") * 100).cast("long")).alias("cents")
@@ -1673,7 +1664,6 @@ def theil_sen_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("day"),
             "cents",
         )
-        .localCheckpoint(eager=True)
     )
     # explicit fan-out: AQE coalesces the ~2.4k-row frame to one
     # partition, serializing the days²/2 pair expansion into a single
@@ -1691,12 +1681,12 @@ def theil_sen_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-run the pair join otherwise; the frame is calendar²-bounded
     # (days²/2 longs ≈ 2.9 M at ANY corpus size), so the checkpoint is
     # observation-span-sized, never corpus-sized
-    slopes = a.join(b, F.col("a.day") < F.col("b.day")).select(
+    slopes = pin(a.join(b, F.col("a.day") < F.col("b.day")).select(
         F.when(
             dd > 0,
             _micro((F.col("b.cents") - F.col("a.cents")).cast("double") / dd),
         ).alias("slope_q")
-    ).localCheckpoint(eager=True)
+    ))
     # distributed exact median (operators/quantiles.exact_median): a
     # single F.median over the 2.9 M-row slope frame funnels every
     # value through one merged aggregation buffer (measured 8.4 s);
@@ -1920,19 +1910,18 @@ def revenue_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     is TakeOrdered top-1 and the peak date a broadcast join back —
     nothing after the first aggregation grows with the corpus."""
     o = table(spark, sf_dir, "orders")
-    daily = (
+    daily = pin(
         o.groupBy(F.to_date("o_orderdate").alias("d"))
         .agg(F.sum((F.col("o_totalprice") * 100).cast("long")).alias("cents"))
-        .localCheckpoint(eager=True)
     )
     w_peak = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, 0)
     w_lag = Window.orderBy("d")
-    cur = daily.select(
+    cur = pin(daily.select(
         "d",
         "cents",
         F.max("cents").over(w_peak).alias("peak"),
         F.lag("cents").over(w_lag).alias("prev"),
-    ).localCheckpoint(eager=True)
+    ))
     trough = (
         cur.select(
             "d",
@@ -2061,10 +2050,9 @@ def forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame; the week-back lookup is a self equi-join on day−7 and the
     drift anchor a broadcast 1-row aggregate."""
     o = table(spark, sf_dir, "orders")
-    daily = (
+    daily = pin(
         o.groupBy(F.to_date("o_orderdate").alias("dt"))
         .agg(F.sum((F.col("o_totalprice") * 100).cast("long")).alias("cents"))
-        .localCheckpoint(eager=True)
     )
     bounds = daily.agg(
         F.max("dt").alias("end"),
@@ -2255,15 +2243,13 @@ def spearman_price_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # maps derive from it via rank2_map's count_col mode (identical
     # per-value totals ⇒ identical ranks), where the old plan re-
     # scanned and re-shuffled lineitem once per rank map (3 scans).
-    jf = base.groupBy("q", "p").agg(
-        F.count(F.lit(1)).alias("c")
-    ).localCheckpoint(eager=True)
+    jf = pin(base.groupBy("q", "p").agg(F.count(F.lit(1)).alias("c")))
     rq = rank2_map(jf, "q", bucket_width=8, count_col="c").select(
         "q", F.col("r2").alias("r2q")
     )
     _d38 = "decimal(38,0)"
     c38, r2q38 = F.col("c").cast(_d38), F.col("r2q").cast(_d38)
-    tp = (
+    tp = pin(  # |p|-domain rows, two consumers
         jf.join(F.broadcast(rq), "q")
         .groupBy("p")
         .agg(
@@ -2272,7 +2258,6 @@ def spearman_price_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(c38 * r2q38 * r2q38).alias("cq2"),
         )
         .withColumn("__b", F.floor(F.col("p") / F.lit(100_000)))
-        .localCheckpoint(eager=True)  # |p|-domain rows, two consumers
     )
     bp = tp.groupBy("__b").agg(F.sum("c").alias("__bc"))
     wb = Window.orderBy("__b").rowsBetween(Window.unboundedPreceding, -1)
@@ -2482,13 +2467,12 @@ def kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB); tau-b's one division/sqrt runs on the exact counters,
     value-determined."""
     o = table(spark, sf_dir, "orders")
-    daily = (
+    daily = pin(
         o.groupBy(F.to_date("o_orderdate").alias("d"))
         .agg(
             F.sum((F.col("o_totalprice") * 100).cast("long")).alias("cents"),
             F.count(F.lit(1)).alias("n_orders"),
         )
-        .localCheckpoint(eager=True)
     )
     a, b = daily.repartition(32).alias("a"), daily.alias("b")
 
@@ -2578,7 +2562,7 @@ def simpson_paradox_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_quantity").cast("long").alias("x"),
         F.round(F.col("l_extendedprice") * 100, 0).cast("long").alias("y"),
     )
-    per = (
+    per = pin(
         base.groupBy("p_brand")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -2587,7 +2571,6 @@ def simpson_paradox_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("x").cast(_d38) * F.col("y").cast(_d38)).alias("sxy"),
             F.sum(F.col("x").cast(_d38) * F.col("x").cast(_d38)).alias("sxx"),
         )
-        .localCheckpoint(eager=True)
     )
     num = F.col("n").cast(_d38) * F.col("sxy") - F.col("sx") * F.col("sy")
     den = F.col("n").cast(_d38) * F.col("sxx") - F.col("sx") * F.col("sx")
@@ -3216,10 +3199,9 @@ def hurst_exponent_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-bounded per-day frame; the cumulative runs
     block-partitioned."""
     o = table(spark, sf_dir, "orders")
-    daily = (
+    daily = pin(
         o.groupBy(F.to_date("o_orderdate").alias("d"))
         .agg(F.sum((F.col("o_totalprice") * 100).cast("long")).alias("x"))
-        .localCheckpoint(eager=True)
     )
     w_idx = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, -1)
     idx = daily.select(
@@ -3386,11 +3368,7 @@ def hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     per = o.groupBy("o_custkey").agg(F.count(F.lit(1)).alias("x"))
     nstat = per.agg(F.count(F.lit(1)).alias("n_customers"))
     k = 100
-    top = (
-        per.orderBy(F.col("x").desc(), F.col("o_custkey").asc())
-        .limit(k + 1)
-        .localCheckpoint(eager=True)
-    )
+    top = pin(per.orderBy(F.col("x").desc(), F.col("o_custkey").asc()).limit(k + 1))
     xk1 = top.agg(F.min("x").alias("xk1"))
     terms = (
         top.crossJoin(F.broadcast(xk1))
@@ -3468,14 +3446,13 @@ def cramers_v_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-cell (O−E)²/E micro-quantized to int64, χ² the exact integer
     sum; V's sqrt is one value-determined double per pair."""
     e = table(spark, sf_dir, "events")
-    cube = (
+    cube = pin(
         e.groupBy(
             F.col("event_type").alias("t"),
             (F.expr("weekday(ts)") + F.lit(1)).alias("dw"),
             F.floor(F.hour("ts") / F.lit(6)).alias("hp"),
         )
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
     )
 
     def _pair(name: str, acol: str, bcol: str) -> DataFrame:
@@ -3599,14 +3576,13 @@ def bhattacharyya_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression per pair."""
     c = table(spark, sf_dir, "customer")
     _d38 = "decimal(38,0)"
-    cells = (
+    cells = pin(
         c.select(
             F.col("c_mktsegment").alias("seg"),
             F.floor(F.round(F.col("c_acctbal") * 100, 0) / F.lit(10_000)).alias("b"),
         )
         .groupBy("seg", "b")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
     )
     tot = cells.groupBy("seg").agg(F.sum("c").alias("n"))
     a = cells.select(F.col("seg").alias("seg_a"), "b", F.col("c").alias("ca"))
@@ -3697,10 +3673,9 @@ def revenue_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer aggregates — no doubles anywhere except the final
     dollars rendering."""
     o = table(spark, sf_dir, "orders")
-    daily = (
+    daily = pin(
         o.groupBy(F.to_date("o_orderdate").alias("d"))
         .agg(F.sum((F.col("o_totalprice") * 100).cast("long")).alias("cents"))
-        .localCheckpoint(eager=True)
     )
     w = Window.orderBy("d")
     dirs = daily.select(
@@ -3808,14 +3783,13 @@ def bollinger_breakout_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     half-away-rounded in the integer domain."""
     o = table(spark, sf_dir, "orders")
     _d38 = "decimal(38,0)"
-    daily = (
+    daily = pin(
         o.groupBy(F.to_date("o_orderdate").alias("d"))
         .agg(
             F.sum((F.col("o_totalprice") * 100).cast("long"))
             .cast(_d38)
             .alias("cents")
         )
-        .localCheckpoint(eager=True)
     )
     n = F.lit(28).cast(_d38)
     w = Window.orderBy("d").rowsBetween(-28, -1)
@@ -3915,7 +3889,7 @@ def kendalls_w_region_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     regions = rev.select("region").distinct()
     brands = rev.select("brand").distinct()
-    grid = (
+    grid = pin(
         regions.crossJoin(F.broadcast(brands))
         .join(rev, ["region", "brand"], "left")
         .select(
@@ -3925,7 +3899,6 @@ def kendalls_w_region_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "v"
             ),
         )
-        .localCheckpoint(eager=True)
     )
     wr = Window.partitionBy("region").orderBy("v")
     wt = Window.partitionBy("region", "v")
@@ -4046,10 +4019,9 @@ def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     the variance numerator are exact integers; z is ONE double
     expression mirrored operation-for-operation."""
     o = table(spark, sf_dir, "orders")
-    daily = (
+    daily = pin(
         o.groupBy(F.to_date("o_orderdate").alias("d"))
         .agg(F.sum((F.col("o_totalprice") * 100).cast("long")).alias("cents"))
-        .localCheckpoint(eager=True)
     )
     a, b = daily.repartition(32).alias("a"), daily.alias("b")
     s_row = (
@@ -4143,10 +4115,9 @@ def pettitt_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sanctioned, the revenue_streaks posture); the before/after means
     are two more passes over the same tiny frame."""
     o = table(spark, sf_dir, "orders")
-    daily = (
+    daily = pin(
         o.groupBy(F.to_date("o_orderdate").alias("d"))
         .agg(F.sum((F.col("o_totalprice") * 100).cast("long")).alias("cents"))
-        .localCheckpoint(eager=True)
     )
     nn = daily.agg(F.count(F.lit(1)).alias("n"))
     wv = Window.orderBy("cents")
@@ -4548,10 +4519,9 @@ def runs_test_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers; expected runs and z are single mirrored double
     expressions."""
     o = table(spark, sf_dir, "orders")
-    daily = (
+    daily = pin(
         o.groupBy(F.to_date("o_orderdate").alias("d"))
         .agg(F.sum((F.col("o_totalprice") * 100).cast("long")).alias("cents"))
-        .localCheckpoint(eager=True)
     )
     nn = daily.agg(F.count(F.lit(1)).alias("n"))
     ranked = daily.select(
@@ -4666,14 +4636,13 @@ def page_trend_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer arithmetic on that frame."""
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer")
-    grid = (
+    grid = pin(
         o.join(c, o.o_custkey == c.c_custkey)
         .groupBy(
             F.col("c_mktsegment").alias("seg"),
             F.year("o_orderdate").alias("yr"),
         )
         .agg(F.sum((F.col("o_totalprice") * 100).cast("long")).alias("cents"))
-        .localCheckpoint(eager=True)
     )
     wj = Window.orderBy("yr")
     wr = Window.partitionBy("seg").orderBy("cents")
@@ -4751,14 +4720,13 @@ def cvm_length_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     mirrored double expression (factors cast to double pre-product,
     the ks crit idiom)."""
     d = table(spark, sf_dir, "documents")
-    per = (
+    per = pin(
         d.groupBy("n_chars")
         .agg(
             F.sum(F.when(F.col("lang") == "en", 1).otherwise(0)).alias("c_en"),
             F.sum(F.when(F.col("lang") != "en", 1).otherwise(0)).alias("c_ot"),
         )
         .withColumn("bkt", F.floor(F.col("n_chars") / F.lit(_KS_BUCKET)))
-        .localCheckpoint(eager=True)
     )
     bp = per.groupBy("bkt").agg(
         F.sum("c_en").alias("b_en"), F.sum("c_ot").alias("b_ot")
@@ -4887,7 +4855,7 @@ def wilcoxon_first_last_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max_by(cents, key).alias("last_c"),
         F.count(F.lit(1)).alias("n_orders"),
     )
-    diffs = (
+    diffs = pin(
         pc.filter(F.col("n_orders") >= 2)
         .select((F.col("last_c") - F.col("first_c")).alias("dd"))
         .filter(F.col("dd") != 0)
@@ -4895,7 +4863,6 @@ def wilcoxon_first_last_order(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.abs(F.col("dd")).alias("ad"),
             (F.col("dd") > 0).cast("int").alias("pos"),
         )
-        .localCheckpoint(eager=True)
     )
     from data_ingestion_project_spark.operators.quantiles import rank2_map
 
@@ -4996,15 +4963,14 @@ def ljung_box_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     1e-6 BEFORE squaring and each Q term to 1e-12 before the 10-term
     fold, so the cross-engine sum order cannot matter."""
     o = table(spark, sf_dir, "orders")
-    daily = (
+    daily = pin(
         o.groupBy(F.to_date("o_orderdate").alias("d"))
         .agg(F.sum((F.col("o_totalprice") * 100).cast("long")).alias("cents"))
-        .localCheckpoint(eager=True)
     )
     tot = daily.agg(
         F.count(F.lit(1)).alias("n"), F.sum("cents").alias("s")
     )
-    res = daily.crossJoin(F.broadcast(tot)).select(
+    res = pin(daily.crossJoin(F.broadcast(tot)).select(
         "d",
         "n",
         (
@@ -5014,7 +4980,7 @@ def ljung_box_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             / F.lit(100.0)
         ).alias("e"),
-    ).localCheckpoint(eager=True)
+    ))
     unit = lambda c: c.cast("long").cast("decimal(38,0)")  # noqa: E731
     den_row = res.agg(F.sum(unit(F.col("e") * F.col("e"))).alias("dd"))
     shifts = res.select(
@@ -5130,14 +5096,13 @@ def grubbs_outlier_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     over exact integer moments."""
     o = table(spark, sf_dir, "orders")
     _d38 = "decimal(38,0)"
-    daily = (
+    daily = pin(
         o.groupBy(F.to_date("o_orderdate").alias("d"))
         .agg(
             F.sum((F.col("o_totalprice") * 100).cast("long"))
             .cast(_d38)
             .alias("cents")
         )
-        .localCheckpoint(eager=True)
     )
     tot = daily.agg(
         F.count(F.lit(1)).cast(_d38).alias("n"),
@@ -5208,7 +5173,7 @@ def bartlett_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact; the Bartlett correction C folds per-group 1/(nᵢ−1) as
     1e-12-quantized integers; B is one mirrored double division."""
     e = table(spark, sf_dir, "events")
-    cells = (
+    cells = pin(
         e.select("event_type", to_micro(F.col("value")).alias("v"))
         .groupBy("event_type")
         .agg(
@@ -5220,7 +5185,6 @@ def bartlett_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("q"),
         )
-        .localCheckpoint(eager=True)
     )
     # per-group sample variance in REAL units, quantized to 1e-6 ints:
     # n·Q − S² is exact decimal; ONE double conversion per group, then
@@ -5345,9 +5309,7 @@ def mood_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_ingestion_project_spark.operators.quantiles import rank2_map
 
     e = table(spark, sf_dir, "events")
-    vals = e.select(
-        "event_type", to_micro(F.col("value")).alias("v")
-    ).localCheckpoint(eager=True)
+    vals = pin(e.select("event_type", to_micro(F.col("value")).alias("v")))
     ranks = rank2_map(vals, "v", bucket_width=10_000_000)
     nn = vals.agg(F.count(F.lit(1)).alias("n"))
     # cumulative-count bounds per distinct value from the doubled rank:
@@ -5493,10 +5455,9 @@ def acf_panel_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     + self-equi-join on shifted dates (≤ 14 × days rows,
     calendar-bounded); scalar arithmetic on 14 rows after."""
     o = table(spark, sf_dir, "orders")
-    daily = (
+    daily = pin(
         o.groupBy(F.to_date("o_orderdate").alias("d"))
         .agg(F.sum((F.col("o_totalprice") * 100).cast("long")).alias("y"))
-        .localCheckpoint(eager=True)
     )
     tot = daily.agg(
         F.count(F.lit(1)).alias("n"), F.sum("y").alias("s")
@@ -5615,10 +5576,9 @@ def page_hinkley_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: the prefix/min windows run over the calendar-bounded daily
     frame (sanctioned); one orders shuffle feeds it."""
     o = table(spark, sf_dir, "orders")
-    daily = (
+    daily = pin(
         o.groupBy(F.to_date("o_orderdate").alias("d"))
         .agg(F.sum((F.col("o_totalprice") * 100).cast("long")).alias("cents"))
-        .localCheckpoint(eager=True)
     )
     wl = Window.orderBy("d")
     wc = wl.rowsBetween(Window.unboundedPreceding, 0)
@@ -5739,12 +5699,11 @@ def theils_u_event_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one partial-agg shuffle to ≤ |types|×7 cells; everything
     else is cell arithmetic."""
     e = table(spark, sf_dir, "events")
-    cells = (
+    cells = pin(
         e.groupBy(
             "event_type", (F.expr("weekday(ts)") + F.lit(1)).alias("dow")
         )
         .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
     )
     _d38 = "decimal(38,0)"
 
@@ -6020,10 +5979,9 @@ def quandt_chow_break(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the scan is over candidate DAYS (calendar-bounded), not
     rows; one orders shuffle feeds it."""
     o = table(spark, sf_dir, "orders")
-    daily = (
+    daily = pin(
         o.groupBy(F.to_date("o_orderdate").alias("d"))
         .agg(F.sum((F.col("o_totalprice") * 100).cast("long")).alias("cents"))
-        .localCheckpoint(eager=True)
     )
     _d38 = "decimal(38,0)"
     wl = Window.orderBy("d")
@@ -6527,19 +6485,18 @@ def revenue_randomness_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows and the half-offset self-join run on that calendar-bounded
     frame (sanctioned — the runs_test_revenue posture)."""
     o = table(spark, sf_dir, "orders")
-    daily = (
+    daily = pin(
         o.groupBy(F.to_date("o_orderdate").alias("d"))
         .agg(F.sum((F.col("o_totalprice") * 100).cast("long")).alias("cents"))
-        .localCheckpoint(eager=True)
     )
     wl = Window.orderBy("d")
-    lagged = daily.select(
+    lagged = pin(daily.select(
         "d",
         "cents",
         F.lag("cents").over(wl).alias("prev"),
         F.lead("cents").over(wl).alias("next"),
         F.row_number().over(wl).alias("rn"),
-    ).localCheckpoint(eager=True)
+    ))
     nn = lagged.agg(F.count(F.lit(1)).alias("n"))
 
     tp = lagged.agg(
@@ -6697,10 +6654,9 @@ def bartels_rank_vonneumann(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_ingestion_project_spark.operators.quantiles import rank2_map
 
     o = table(spark, sf_dir, "orders")
-    daily = (
+    daily = pin(
         o.groupBy(F.to_date("o_orderdate").alias("d"))
         .agg(F.sum((F.col("o_totalprice") * 100).cast("long")).alias("cents"))
-        .localCheckpoint(eager=True)
     )
     ranks = rank2_map(daily, "cents", bucket_width=10_000_000_000)
     ranked = daily.join(ranks.select(F.col("cents"), "r2"), "cents")
@@ -6794,10 +6750,9 @@ def durbin_watson_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one orders shuffle to the daily frame; a lag window over
     ≤ a few thousand rows (sanctioned); scalar arithmetic."""
     o = table(spark, sf_dir, "orders")
-    daily = (
+    daily = pin(
         o.groupBy(F.to_date("o_orderdate").alias("d"))
         .agg(F.sum((F.col("o_totalprice") * 100).cast("long")).alias("cents"))
-        .localCheckpoint(eager=True)
     )
     wl = Window.orderBy("d")
     lagged = daily.select(
@@ -7034,11 +6989,7 @@ def jonckheere_terpstra_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12: ONE orders pass — the (g, v) count frame feeds the dense
     # grid, the group sizes, and the tie groups (each previously
     # re-scanned the fact table; guide §2.3 project-early / §2.4)
-    cgv = (
-        base.groupBy("g", "v")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
-    )
+    cgv = pin(base.groupBy("g", "v").agg(F.count(F.lit(1)).alias("c")))
     dense = (
         cgv.select("v")
         .distinct()
@@ -7473,7 +7424,7 @@ def friedman_revenue_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     (≤ a few thousand rows at ANY corpus size); rank windows are
     7-row block-partitioned — sanctioned bounded frames."""
     o = table(spark, sf_dir, "orders")
-    daily = (
+    daily = pin(
         o.groupBy(F.to_date("o_orderdate").alias("d"))
         .agg(F.sum((F.col("o_totalprice") * 100).cast("long")).alias("cents"))
         .select(
@@ -7481,7 +7432,6 @@ def friedman_revenue_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.expr("weekday(d)") + F.lit(1)).alias("dow"),
             "cents",
         )
-        .localCheckpoint(eager=True)
     )
     full = daily.groupBy("wk").agg(F.count(F.lit(1)).alias("nd")).filter(
         F.col("nd") == 7
@@ -7868,13 +7818,12 @@ def g_test_event_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer micro-units immediately (the lnq idiom) and G is the EXACT
     integer sum of those cells."""
     e = table(spark, sf_dir, "events")
-    cells = (
+    cells = pin(
         e.groupBy(
             "event_type",
             (F.expr("weekday(ts)") + F.lit(1)).alias("dow"),
         )
         .agg(F.count(F.lit(1)).alias("observed"))
-        .localCheckpoint(eager=True)
     )
     row_tot = cells.groupBy("event_type").agg(F.sum("observed").alias("row_total"))
     col_tot = cells.groupBy("dow").agg(F.sum("observed").alias("col_total"))
@@ -7979,7 +7928,7 @@ def cochran_armitage_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .withColumn("is_ret", F.lit(1))
     )
-    grp = (
+    grp = pin(
         o.select(
             F.substring("o_orderpriority", 1, 1).cast("int").alias("t"),
             "o_orderkey",
@@ -7990,7 +7939,6 @@ def cochran_armitage_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_orders"),
             F.sum(F.coalesce(F.col("is_ret"), F.lit(0))).alias("n_returned"),
         )
-        .localCheckpoint(eager=True)
     )
     tots = grp.agg(
         F.sum("n_orders").alias("nn"),
@@ -8087,10 +8035,9 @@ def permutation_entropy_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalization divides by a PINNED ln(6) literal so no engine libm
     constant enters."""
     o = table(spark, sf_dir, "orders")
-    daily = (
+    daily = pin(
         o.groupBy(F.to_date("o_orderdate").alias("d"))
         .agg(F.sum((F.col("o_totalprice") * 100).cast("long")).alias("cents"))
-        .localCheckpoint(eager=True)
     )
     wl = Window.orderBy("d")
     tri = daily.select(
@@ -8481,14 +8428,13 @@ def dunns_posthoc_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = e.select(to_micro(F.col("value")).alias("v"), "event_type")
     ranks = rank2_map(base, "v", bucket_width=10_000_000)
     per = base.groupBy("v", "event_type").agg(F.count(F.lit(1)).alias("c"))
-    grp = (
+    grp = pin(
         per.join(ranks, "v")
         .groupBy("event_type")
         .agg(
             F.sum("c").alias("n_g"),
             F.sum(F.col("c").cast(_DEC38) * F.col("r2").cast(_DEC38)).alias("r2_g"),
         )
-        .localCheckpoint(eager=True)
     )
     ties = ranks.agg(
         F.sum(
@@ -8615,11 +8561,10 @@ def ewma_breach_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     against literal weights; a TakeOrdered top-10."""
     o = table(spark, sf_dir, "orders")
     wl = Window.orderBy("d")
-    daily = (
+    daily = pin(
         o.groupBy(F.to_date("o_orderdate").alias("d"))
         .agg(F.sum((F.col("o_totalprice") * 100).cast("long")).alias("cents"))
         .withColumn("t", F.row_number().over(wl))
-        .localCheckpoint(eager=True)
     )
     offsets = spark.createDataFrame(
         [(i + 1, w) for i, w in enumerate(_EWMA_WEIGHTS)], "i int, w double"
@@ -8639,11 +8584,11 @@ def ewma_breach_days(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     pred_c = F.col("num_q").cast("double") * F.lit(1000.0) / F.col("den_q").cast("double")
-    resid = pred.select(
+    resid = pin(pred.select(
         "d",
         "cents",
         F.round(F.col("cents").cast("double") - pred_c, 0).cast("long").alias("r_q"),
-    ).localCheckpoint(eager=True)
+    ))
     mom = resid.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("r_q").cast(_DEC38)).alias("s1"),
@@ -8777,7 +8722,7 @@ def dominant_cycle_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     sweep is daily × 29 periods (≤ 70k cells at ANY corpus size)
     broadcast-joined to the 464-row literal angle table."""
     o = table(spark, sf_dir, "orders")
-    daily = (
+    daily = pin(
         o.groupBy(F.to_date("o_orderdate").alias("d"))
         .agg(F.sum((F.col("o_totalprice") * 100).cast("long")).alias("cents"))
         .select(
@@ -8786,7 +8731,6 @@ def dominant_cycle_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             "cents",
         )
-        .localCheckpoint(eager=True)
     )
     piv = daily.agg(
         F.floor(
@@ -8829,9 +8773,7 @@ def dominant_cycle_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("a_q").cast(_DEC38) * F.col("a_q").cast(_DEC38)
         + F.col("b_q").cast(_DEC38) * F.col("b_q").cast(_DEC38)
     )
-    pw = folded.select(
-        "period", "n_days", power_q.alias("pq")
-    ).localCheckpoint(eager=True)
+    pw = pin(folded.select("period", "n_days", power_q.alias("pq")))
     tot = pw.agg(F.sum("pq").alias("tq"))
     ranked = pw.crossJoin(F.broadcast(tot)).select(
         "period",

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from data_ingestion_project_spark.operators.materialize import pin
 from data_ingestion_project_spark.queries._precision import (
     DEC,
     dec_sum,
@@ -732,11 +733,10 @@ def brand_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ),
     )
-    cells = (
+    cells = pin(  # ≤ 1+|brands|+|brands|² rows
         baskets.select(F.explode(combos).alias("c"))
         .groupBy(F.col("c.a").alias("a"), F.col("c.b").alias("b"))
         .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)  # ≤ 1+|brands|+|brands|² rows
     )
     tot = cells.filter(F.col("a").isNull()).select(F.col("n").alias("n_baskets"))
     singles = cells.filter(F.col("a").isNotNull() & F.col("b").isNull()).select(
@@ -862,7 +862,10 @@ def referential_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     as before).  NULL child keys count as orphans (a NULL FK breaks
     an inner join exactly like a dangling one) and never enter the
     referenced-pk set (NULL never matches) — both unchanged.
-    All-integer outputs; rates are single divisions, floor-rounded."""
+    All-integer outputs; rates are single divisions, floor-rounded.
+    The same passes count each parent's distinct pks; any duplicate
+    fails the collect with ``DUPLICATE_PARENT_PK`` and the key columns
+    (the rows that join a duplicate repeat, so a child may be named)."""
     li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey"
     )
@@ -873,10 +876,11 @@ def referential_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = table(spark, sf_dir, "region")
     p = table(spark, sf_dir, "part")
 
-    def child_pass(child: DataFrame, prefix: str, edges) -> DataFrame:
+    def child_pass(child: DataFrame, prefix: str, edges, own_pk=None) -> DataFrame:
         """edges: (fk_col, parent_df, pk_col, tag). One scan of
         ``child`` left-joined through every parent; returns one row:
-        n_<prefix>, orph_<prefix>_<tag>, refd_<prefix>_<tag>."""
+        n_<prefix>, orph_<prefix>_<tag>, refd_<prefix>_<tag>, and
+        pk_<prefix> = |distinct own_pk| when ``child`` is a parent."""
         j = child
         for fk, pdf, pk, tag in edges:
             j = j.join(
@@ -885,6 +889,8 @@ def referential_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "left",
             )
         aggs = [F.count(F.lit(1)).alias(f"n_{prefix}")]
+        if own_pk is not None:
+            aggs.append(F.count_distinct(own_pk).alias(f"pk_{prefix}"))
         for fk, pdf, pk, tag in edges:
             hit = F.col(f"__pk_{tag}")
             aggs.append(
@@ -904,12 +910,12 @@ def referential_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("l_suppkey", s, "s_suppkey", "sup"),
         ],
     )
-    O = child_pass(o, "ord", [("o_custkey", c, "c_custkey", "cus")])
-    C = child_pass(c, "cus", [("c_nationkey", n, "n_nationkey", "nat")])
-    S = child_pass(s, "sup", [("s_nationkey", n, "n_nationkey", "nat")])
-    N = child_pass(n, "nat", [("n_regionkey", r, "r_regionkey", "reg")])
-    dims = p.agg(F.count(F.lit(1)).alias("n_prt")).crossJoin(
-        F.broadcast(r.agg(F.count(F.lit(1)).alias("n_reg")))
+    O = child_pass(o, "ord", [("o_custkey", c, "c_custkey", "cus")], "o_orderkey")
+    C = child_pass(c, "cus", [("c_nationkey", n, "n_nationkey", "nat")], "c_custkey")
+    S = child_pass(s, "sup", [("s_nationkey", n, "n_nationkey", "nat")], "s_suppkey")
+    N = child_pass(n, "nat", [("n_regionkey", r, "r_regionkey", "reg")], "n_nationkey")
+    dims = child_pass(p, "prt", [], "p_partkey").crossJoin(
+        F.broadcast(child_pass(r, "reg", [], "r_regionkey"))
     )
     row = (
         L.crossJoin(F.broadcast(O))
@@ -918,6 +924,14 @@ def referential_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(N))
         .crossJoin(F.broadcast(dims))
     )
+    pks = {"ord": "orders.o_orderkey", "cus": "customer.c_custkey", "sup": "supplier.s_suppkey",
+           "nat": "nation.n_nationkey", "prt": "part.p_partkey", "reg": "region.r_regionkey"}
+    dup_keys = F.concat_ws(
+        ", ", *[F.when(F.col(f"n_{t}") != F.col(f"pk_{t}"), F.lit(k)) for t, k in pks.items()]
+    )
+    row = row.filter(F.when(dup_keys == "", True).otherwise(
+        F.raise_error(F.concat(F.lit("DUPLICATE_PARENT_PK: "), dup_keys))
+    ))
 
     def edge(name: str, n_child: str, orph: str, n_parent: str, refd: str):
         return F.struct(
@@ -1203,23 +1217,21 @@ def apriori_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = table(spark, sf_dir, "lineitem")
     p = table(spark, sf_dir, "part")
     _d38 = "decimal(38,0)"
-    baskets = (
+    baskets = pin(
         l.join(p, l["l_partkey"] == p["p_partkey"])
         .select("l_orderkey", "p_brand")
         .distinct()
-        .localCheckpoint(eager=True)
     )
     nb = baskets.agg(
         F.count_distinct("l_orderkey").alias("n_baskets"),
         F.ceil(F.count_distinct("l_orderkey") * F.lit(0.004)).alias("minsup"),
     )
-    l1 = (
+    l1 = pin(
         baskets.groupBy("p_brand")
         .agg(F.count(F.lit(1)).alias("c1"))
         .crossJoin(F.broadcast(nb))
         .filter(F.col("c1") >= F.col("minsup"))
         .select("p_brand", "c1")
-        .localCheckpoint(eager=True)
     )
     # NOTE (r12): deliberately NOT checkpointed — an eager fitems
     # materialization was tried and caused AGGREGATE_OUT_OF_MEMORY at
@@ -1230,7 +1242,7 @@ def apriori_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     fitems = baskets.join(F.broadcast(l1.select("p_brand")), "p_brand", "left_semi")
     a = fitems.select("l_orderkey", F.col("p_brand").alias("x"))
     b = fitems.select("l_orderkey", F.col("p_brand").alias("y"))
-    l2 = (
+    l2 = pin(
         a.join(b, "l_orderkey")
         .filter(F.col("x") < F.col("y"))
         .groupBy("x", "y")
@@ -1238,7 +1250,6 @@ def apriori_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(nb))
         .filter(F.col("c2") >= F.col("minsup"))
         .select("x", "y")
-        .localCheckpoint(eager=True)
     )
     # candidate generation: join L2 pairs sharing the head item, then
     # the Apriori prune — the THIRD face pair (y, z) must be frequent

@@ -7,6 +7,7 @@ import copy
 import pytest
 
 from data_ingestion_project_spark.functions.crypto import CryptoKeys
+from data_ingestion_project_spark.operators.materialize import pin_scope
 from data_ingestion_project_spark.session import build_session
 
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -17,6 +18,13 @@ SF_ORACLE = "/root/testdata/sf0.01"
 def spark():
     s = build_session("tests", shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture(autouse=True)
+def _pin_scope():
+    """Each test's pins die with the test, as a served query's do."""
+    with pin_scope():
+        yield
 
 
 @pytest.fixture(scope="session")

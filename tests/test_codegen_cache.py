@@ -20,15 +20,16 @@ WORKLOADS = Path(__file__).resolve().parents[1] / "perfbench" / "workloads.py"
 MAX_RECOMPILED = 8
 
 
-def query_mix_names() -> list[str]:
-    """The query names of the benchmark's ``QUERY_MIX``, read from its
-    source so the test follows the mix without importing the benchmark."""
-    groups = {}
+def query_mix_names(groups: tuple[str, ...] = ("BUILD_HEAVY", "LAZY")) -> list[str]:
+    """The query names of the benchmark's ``QUERY_MIX`` (or of some of
+    its groups), read from its source so the test follows the mix
+    without importing the benchmark."""
+    found = {}
     for node in ast.parse(WORKLOADS.read_text()).body:
         name = getattr(node.targets[0], "id", None) if isinstance(node, ast.Assign) else None
-        if name in ("BUILD_HEAVY", "LAZY"):
-            groups[name] = ast.literal_eval(node.value)
-    return [name for _, name in groups["BUILD_HEAVY"] + groups["LAZY"]]
+        if name in groups:
+            found[name] = ast.literal_eval(node.value)
+    return [name for g in groups for _, name in found[g]]
 
 
 def test_repeated_query_mix_stops_compiling(spark):

@@ -92,6 +92,8 @@ def _batch(spark, standing_max_id: int, rows: int):
     of every other — the documented degeneracy, not an ingest shape)."""
     from pyspark.sql import functions as F
 
+    from data_ingestion_project_spark.operators.materialize import pin
+
     d = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
     n_src = d.count()
     factor = max(1, (rows + n_src - 1) // n_src)
@@ -115,7 +117,7 @@ def _batch(spark, standing_max_id: int, rows: int):
         .withColumn("n_chars", F.length("text").cast("long"))
         .drop("__r")
     )
-    return out.orderBy("doc_id").limit(rows).localCheckpoint(eager=True)
+    return pin(out.orderBy("doc_id").limit(rows))
 
 
 def main() -> None:
@@ -136,6 +138,7 @@ def main() -> None:
     from data_ingestion_project_spark.operators.inverted_index import (
         update_inverted_index,
     )
+    from data_ingestion_project_spark.operators.materialize import pin
     from data_ingestion_project_spark.operators.moments import update_moments_asset
 
     spark = harness.session("asset-refresh-bench")
@@ -171,7 +174,7 @@ def main() -> None:
         fps = winnow_fingerprints(corpus, "text", "doc_id", k=8, w=4).select(
             F.col("doc_id").cast("long"), F.col("fp").cast("long")
         )
-        fps = fps.localCheckpoint(eager=True)
+        fps = pin(fps)
         _fenced_append(spark, paths["index"], fps, None)
         update_pair_index(spark, paths["index"], paths["pairs"], fps)
         _fenced_append(spark, paths["corpus"], corpus, None)

@@ -19,6 +19,7 @@ import pandas as pd
 
 sys.path.insert(0, ".")
 
+from data_ingestion_project_spark.operators.materialize import pin_scope
 from data_ingestion_project_spark.session import build_session
 from data_ingestion_project_spark.sources.readers import TABLES
 
@@ -66,7 +67,8 @@ def main() -> int:
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, SF_DIR).toPandas()
+            with pin_scope():
+                sdf = fn(spark, SF_DIR).toPandas()
         except Exception:
             print(f"FAIL {name}: spark error")
             traceback.print_exc()

@@ -15,6 +15,7 @@ from pathlib import Path
 REPO_ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO_ROOT))
 
+from data_ingestion_project_spark.operators.materialize import pin_scope  # noqa: E402
 from data_ingestion_project_spark.plans.explain import plan_census, scan_info  # noqa: E402
 from data_ingestion_project_spark.queries import EXCLUDE_FROM_BENCH, all_queries  # noqa: E402
 from data_ingestion_project_spark.session import build_session  # noqa: E402
@@ -27,9 +28,10 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     rows = []
     for name, fn in all_queries().items():
-        df = fn(spark, SF_DIR)
-        c = plan_census(df)
-        scans = scan_info(df)
+        with pin_scope():
+            df = fn(spark, SF_DIR)
+            c = plan_census(df)
+            scans = scan_info(df)
         pushed = sum(1 for s in scans if s["pushed_filters"].strip())
         rows.append(
             f"| {name} | {c['n_exchanges']} | {c['n_broadcast_joins']} "

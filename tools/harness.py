@@ -74,9 +74,13 @@ def warm(spark, sf_dir: str) -> tuple[float, float]:
 
 
 def time_query(spark, fn, sf_dir: str) -> tuple[float, int]:
-    """(seconds, rows) of one plan build + execute + collect of ``fn``."""
+    """(seconds, rows) of one plan build + execute + collect of ``fn``,
+    inside a pin scope so its pins die with it."""
+    from data_ingestion_project_spark.operators.materialize import pin_scope
+
     t0 = time.perf_counter()
-    n = len(fn(spark, sf_dir).collect())
+    with pin_scope():
+        n = len(fn(spark, sf_dir).collect())
     return round(time.perf_counter() - t0, 3), n
 
 

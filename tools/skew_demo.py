@@ -49,6 +49,7 @@ def main() -> None:
     import harness
     from pyspark.sql import functions as F
 
+    from data_ingestion_project_spark.operators.materialize import pin
     from data_ingestion_project_spark.plans.explain import executed_plan
     from data_ingestion_project_spark.sources.readers import table
 
@@ -61,14 +62,14 @@ def main() -> None:
     # the planted corpus: 20% of orders re-keyed onto ONE customer
     # (deterministic by orderkey so both runs see identical data),
     # materialized so plant cost is outside both timed runs
-    skewed = orders.select(
+    skewed = pin(orders.select(
         F.when(
             F.col("o_orderkey") % 5 == 0, F.lit(hot_key)
         ).otherwise(F.col("o_custkey")).alias("o_custkey"),
         "o_orderkey",
         "o_totalprice",
         "o_orderpriority",
-    ).localCheckpoint(eager=True)
+    ))
     n = skewed.count()
     n_hot = skewed.filter(F.col("o_custkey") == hot_key).count()
     print(f"# corpus: {n} orders, hot customer owns {n_hot} ({n_hot/n:.1%})",
